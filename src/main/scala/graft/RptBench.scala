@@ -142,67 +142,7 @@ object RptBench {
         }.mkString(",")
         f""""$regime":{"geomean":$geo%.3f,"queries":{$qJson}}"""
     }
-    // ---- probe-feedback payoff (opt-in: SPARK_GRAFT_RPT_FEEDBACK=1) ----
-    // Measures the SECOND-planning win of cross-query selectivity
-    // feedback: with probeFeedback on (shuffle regime), run1 plans and
-    // executes every probe and the listener records keep-rates; run2
-    // re-plans the same shape with measured-useless probes suppressed.
-    // Useful-probe shapes should hold ~1.0x (nothing suppressed); the
-    // useless-probe class (q05: ~0.9+ keep-rate builds) is where run2
-    // recovers the probe overhead. Per query: min over `runs` iterations
-    // of (run1, run2), cache cleared before each run1 so every iteration
-    // measures a cold->warm feedback transition.
-    val feedbackJson = if (!sys.env.get("SPARK_GRAFT_RPT_FEEDBACK").contains("1")) "" else {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.rpt.enabled", "true")
-      spark.conf.set(graft.rpt.RptConf.PROBE_FEEDBACK, "true")
-      val rows = entries.map { case (name, mk) =>
-        time(mk) // warmup
-        val (r1s, r2s) = (1 to runs).map { _ =>
-          graft.rpt.ProbeFeedback.clear()
-          val df1 = mk()
-          val t0 = System.nanoTime()
-          df1.count()
-          val r1 = (System.nanoTime() - t0) / 1e9
-          // an entry whose plan carries no bloom probe (rule gated off,
-          // nothing transferable) will never land feedback — polling for
-          // it would stall the full deadline per iteration; skip the wait
-          val probesPlanned =
-            df1.queryExecution.optimizedPlan.toString.contains("graft_rpt_bf")
-          if (probesPlanned) {
-            // keep-rate recording rides the async QueryExecutionListener
-            // bus: POLL until run1's executions have landed (a fixed sleep
-            // let run2 plan before feedback arrived on a loaded box,
-            // silently reporting ~1.0x), with a bounded wait so a dead
-            // listener degrades to the old behavior rather than hanging
-            val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-            var landed = graft.rpt.ProbeFeedback.size
-            while (landed == 0 && System.nanoTime() < deadline) {
-              Thread.sleep(100)
-              landed = graft.rpt.ProbeFeedback.size
-            }
-            // one settle tick: entries for the LAST probe of run1 can
-            // trail the first by a bus flush
-            Thread.sleep(200)
-          }
-          val r2 = time(mk)
-          (r1, r2)
-        }.unzip
-        (name, r1s.min, r2s.min, r1s.min / r2s.min)
-      }
-      spark.conf.set(graft.rpt.RptConf.PROBE_FEEDBACK, "false")
-      val geo = math.exp(rows.map(r => math.log(r._4)).sum / rows.size)
-      println(s"== probe-feedback payoff (shuffle regime, run2 vs run1)")
-      rows.foreach { case (name, r1, r2, s) =>
-        println(f"  $name%-18s run1=$r1%6.2fs run2=$r2%6.2fs speedup=$s%5.2fx ${cls(s)}")
-      }
-      println(f"  geomean run2/run1 speedup: $geo%.3fx")
-      val qJson = rows.map { case (n, r1, r2, s) =>
-        f""""$n":{"run1":$r1%.3f,"run2":$r2%.3f,"speedup":$s%.3f}"""
-      }.mkString(",")
-      f""","feedback":{"geomean":$geo%.3f,"queries":{$qJson}}"""
-    }
-    println(s"""RPTBENCH_JSON {"sf":"$sfDir","runs":$runs,${regimeJsons.mkString(",")}$feedbackJson}""")
+    println(s"""RPTBENCH_JSON {"sf":"$sfDir","runs":$runs,${regimeJsons.mkString(",")}}""")
     spark.stop()
   }
 }

@@ -161,43 +161,32 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     val withMinmax = filterType != "bfOnly"
     val maxItems = RptConf.maxBfItems(conf)
     val defaultItems = RptConf.defaultBfItems(conf)
-    val literalBnds = RptConf.literalBounds(conf)
 
-    val buildForm = RptConf.buildForm(conf)
-
-    // per-unit current (filtered-so-far) plan and accumulated conditions
-    val cur = mutable.HashMap[Int, LogicalPlan]() ++
-      graph.units.map(u => u.id -> u.plan)
+    // per-unit accumulated probe conditions
     val pendingConds = mutable.HashMap[Int, mutable.ArrayBuffer[Expression]]()
-    // Build-side snapshots at the end of the forward pass. Backward-pass
-    // builds read THESE rather than the fully-cascaded plans: a
-    // less-filtered build side yields a superset bloom filter — always
-    // correct, marginally less selective — and caps plan growth at
-    // polynomial (full fwd+bwd cascading is exponential in join-tree depth:
-    // each backward subquery would embed plans that embed forward
-    // subqueries embedding other plans, and so on).
-    lazy val fwdFinal = mutable.HashMap[Int, LogicalPlan]()
-    var inBackward = false
 
-    // semijoin build form: per-unit reduced VIEW = unit plan ⋉ the reduced
-    // views of its already-scheduled build sides. Self-contained (no
-    // nested subqueries), so builds parallelize; `members` guards against
+    // Build form: per-unit reduced VIEW = unit plan ⋉ the reduced views of
+    // its already-scheduled build sides — a self-contained LeftSemi tree
+    // over base table units. No view nests another's subquery, so ALL
+    // builds execute in parallel: the Spark analog of the reference's
+    // pipeline-dependency DAG executing CREATE_BFs as their inputs become
+    // ready (physical_create_bf.cpp:559-613). `members` guards against
     // embedding one unit twice in a tree (diamond-shaped DAG schedules),
     // which would duplicate ExprIds across two sides of a join.
     case class Reduced(
         unit: TableUnit,
         semis: Vector[(LogicalPlan, Expression)],
-        members: Set[Int],
-        basePlan: LogicalPlan) {
+        members: Set[Int]) {
       /** Self-contained plan outputting (at least) `needed`'s attributes,
        *  with each leaf scan pruned to the columns its joins require. */
       def materialize(needed: Seq[Expression]): LogicalPlan = {
         val leftNeeded = AttributeSet(needed.flatMap(_.references)) ++
           AttributeSet(semis.flatMap(_._2.references))
-        val kept = basePlan.output.filter(leftNeeded.contains)
+        val unitPlan = unit.plan
+        val kept = unitPlan.output.filter(leftNeeded.contains)
         val base: LogicalPlan =
-          if (kept.isEmpty || kept.size == basePlan.output.size) basePlan
-          else Project(kept, basePlan)
+          if (kept.isEmpty || kept.size == unitPlan.output.size) unitPlan
+          else Project(kept, unitPlan)
         semis.foldLeft(base) { case (acc, (rightPlan, cond)) =>
           // the reducer side is key-projected and gate-bounded: hint it
           // broadcast so the build subquery stays a single scan stage
@@ -209,37 +198,14 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       }
     }
     val reduced = mutable.HashMap[Int, Reduced]() ++
-      graph.units.map(u => u.id -> Reduced(u, Vector.empty, Set(u.id), u.plan))
+      graph.units.map(u => u.id -> Reduced(u, Vector.empty, Set(u.id)))
+    // Reduced views at the end of the forward pass. Backward-pass builds
+    // read THESE rather than the fully-reduced views: a less-filtered build
+    // side yields a superset bloom filter — always correct, marginally
+    // less selective — and caps plan growth at polynomial (full fwd+bwd
+    // embedding is exponential in join-tree depth).
     lazy val fwdReduced = mutable.HashMap[Int, Reduced]()
-
-    // materialize-once option (reference CREATE_BF materializes its child
-    // once and re-emits rows, physical_create_bf.cpp:201-275,441-557):
-    // register each build unit with the session cache and read BOTH its
-    // main-plan occurrence and its bloom-filter builds from the cached
-    // in-memory relation — one scan instead of two per build side.
-    val unitReplacement = new JIdentityHashMap[LogicalPlan, LogicalPlan]()
-    if (RptConf.cacheBuilds(conf)) {
-      // a barrier-shaped unit (Aggregate/Window/Union leaf of the transfer
-      // graph) can have OTHER units nested inside its subtree; substituting
-      // the cached relation for it would silently drop any transfer filters
-      // spliced onto those nested units. Cache only self-contained units.
-      val unitPlans = new JIdentityHashMap[LogicalPlan, java.lang.Boolean]()
-      graph.units.foreach(u => unitPlans.put(u.plan, java.lang.Boolean.TRUE))
-      ops.map(_.build).distinct.foreach { id =>
-        val u = graph.units(id)
-        val containsNestedUnit =
-          u.plan.exists(n => (n ne u.plan) && unitPlans.containsKey(n))
-        if (!containsNestedUnit) {
-          val cachedPlan =
-            PredicateTransferRule.nested(SqlBridge.cachedRelation(u.plan))
-          if (!(cachedPlan eq u.plan)) {
-            unitReplacement.put(u.plan, cachedPlan)
-            cur(id) = cachedPlan
-            reduced(id) = reduced(id).copy(basePlan = cachedPlan)
-          }
-        }
-      }
-    }
+    var inBackward = false
 
     // One plain single-alias Aggregate subquery per value (bloom filter /
     // min / max). This is exactly the shape Catalyst's MergeScalarSubqueries
@@ -247,10 +213,10 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // into one scan automatically — the Spark-native equivalent of the
     // reference's BuildStackedBFOperators (rpt_optimizer.cpp:1164-1265).
     def scalarAgg(expr: Expression, buildPlan: LogicalPlan,
-        keys: Seq[Expression], forward: Boolean, fbTag: String): ScalarSubquery = {
+        keys: Seq[Expression], forward: Boolean): ScalarSubquery = {
       val needed = AttributeSet(keys.flatMap(_.references))
       val projected = Project(buildPlan.output.filter(needed.contains), buildPlan)
-      val alias = SUBQ_ALIAS + (if (forward) "_fwd" else "_bwd") + fbTag
+      val alias = SUBQ_ALIAS + (if (forward) "_fwd" else "_bwd")
       // v2 file sources: build the scans now — later optimizer batches
       // don't traverse freshly-injected subquery expressions (SqlBridge
       // scaladoc); a v1 LogicalRelation passes through untouched
@@ -270,98 +236,13 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     val subqCache = mutable.HashMap[(Int, String, Boolean, String),
       ScalarSubquery]()
 
-    // planning-time min/max evaluation for literalBounds, deduped per
-    // (build, keys, pass) exactly like the subquery cache
-    val boundsCache =
-      mutable.HashMap[(Int, String, Boolean), org.apache.spark.sql.Row]()
-    def boundsFor(buildId: Int, keys: Seq[Expression], forward: Boolean,
-        buildPlan: => LogicalPlan): org.apache.spark.sql.Row = {
-      val key =
-        (buildId, keys.map(_.canonicalized.toString).mkString(";"), forward)
-      boundsCache.getOrElseUpdate(key, {
-        val aggs = keys.zipWithIndex.flatMap { case (k, i) =>
-          Seq(Alias(Min(k).toAggregateExpression(), s"graft_rpt_mn$i")(),
-            Alias(Max(k).toAggregateExpression(), s"graft_rpt_mx$i")())
-        }
-        PredicateTransferRule.nested(
-          SqlBridge.collectRows(Aggregate(Nil, aggs, buildPlan))).head
-      })
-    }
-    // planning-time key-range summary for builds OVER the in-scan cap:
-    // up to rangeSummaryBuckets [lo, hi] ranges (per-bucket actual min/max
-    // over a fixed-width binning of the key span), deduped per
-    // (build, key, pass) like boundsCache. Some(Nil) = empty build;
-    // None = summary unavailable (execution failure) — push nothing.
-    val rangesCache =
-      mutable.HashMap[(Int, String, Boolean), Option[Seq[(Any, Any)]]]()
-    def rangesFor(buildId: Int, key: Expression, forward: Boolean,
-        buildPlan: => LogicalPlan): Option[Seq[(Any, Any)]] = {
-      val ck = (buildId, key.canonicalized.toString, forward)
-      rangesCache.getOrElseUpdate(ck, try {
-        val bounds = boundsFor(buildId, Seq(key), forward, buildPlan)
-        if (bounds.isNullAt(0)) Some(Nil)
-        else {
-          val (gmin, gmax) = (bounds.get(0), bounds.get(1))
-          val k = RptConf.rangeSummaryBuckets(conf)
-          def d(v: Any): Option[Double] = v match {
-            case n: java.lang.Number => Some(n.doubleValue)
-            case _ => None
-          }
-          (d(gmin), d(gmax)) match {
-            case (Some(lo), Some(hi)) if hi > lo && k > 1 =>
-              // bin in double space: imprecision only mis-BINS a key; the
-              // emitted bounds are actual per-bucket min/max, so the union
-              // of ranges always covers every build key
-              val needed = AttributeSet(key.references)
-              val projected =
-                Project(buildPlan.output.filter(needed.contains), buildPlan)
-              val bin = Least(Seq(
-                Floor(Multiply(Divide(Subtract(Cast(key, org.apache.spark.sql.types.DoubleType),
-                  Literal(lo)), Literal(hi - lo)), Literal(k.toDouble))),
-                Literal((k - 1).toLong)))
-              val rows = PredicateTransferRule.nested(SqlBridge.collectRows(
-                Aggregate(Seq(bin), Seq(
-                  Alias(Min(key).toAggregateExpression(), "graft_rpt_rlo")(),
-                  Alias(Max(key).toAggregateExpression(), "graft_rpt_rhi")()),
-                  Filter(IsNotNull(key), projected))))
-              Some(rows.toSeq.map(r => (r.get(0), r.get(1)))
-                .sortBy(p => d(p._1).get))
-            case _ =>
-              // non-numeric or single-point key space: one [min, max]
-              Some(Seq((gmin, gmax)))
-          }
-        }
-      } catch { case _: Exception => None })
-    }
-
-    // --- cross-query selectivity feedback (reference analog:
-    // SelectivityOptionalFilter, rpt_optimizer.cpp:1482-1491) ---
-    // A stable probe identity rides in the build subquery's ALIAS: the
-    // profiling listener reads it back from the executed filter's
-    // might_contain and records the measured keep-rate; the next planning
-    // of the same query shape skips probes that measured useless. Tags are
-    // empty (plans byte-identical to before) unless the feature is on.
-    val feedbackOn = RptConf.probeFeedback(conf)
-    val feedbackKeep = RptConf.probeFeedbackKeep(conf)
-    lazy val planHashHex =
-      (plan.canonicalized.hashCode & 0x7fffffff).toHexString
-    val feedbackTagMemo = mutable.HashMap[Int, String]()
-    def feedbackTag(buildId: Int): String =
-      if (!feedbackOn) ""
-      else feedbackTagMemo.getOrElseUpdate(buildId, "_q" + planHashHex + "_b" +
-        (graph.units(buildId).plan.canonicalized.hashCode & 0x7fffffff)
-          .toHexString)
-    def feedbackKey(op: ScheduledOp): String = ProbeFeedback.key(
-      SUBQ_ALIAS + (if (op.forward) "_fwd" else "_bwd") + feedbackTag(op.build),
-      op.probeKeys.collect { case a: Attribute => a.name })
-
     def sharedScalarAgg(kind: String, mkExpr: => Expression,
         buildPlan: => LogicalPlan, keys: Seq[Expression], forward: Boolean,
         buildId: Int): ScalarSubquery = {
       val key = (buildId,
         keys.map(_.canonicalized.toString).mkString(";"), forward, kind)
       subqCache.getOrElseUpdate(key,
-        scalarAgg(mkExpr, buildPlan, keys, forward, feedbackTag(buildId)))
+        scalarAgg(mkExpr, buildPlan, keys, forward))
     }
 
     // cost gates (see RptConf scaladoc): build only over selectively
@@ -501,8 +382,6 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     //    stats): free at planning time — Filter.stats.rowCount is the
     //    estimated filtered output, the leaf's rowCount/footers the
     //    unfiltered total;
-    //  - a planning-time count when runtimeSizedBuilds opted in (the flag
-    //    already pays for counts; TTL-cached per unit shape);
     //  - the footer min/max uniform estimate (FooterStats) — the
     //    default-path source, defined only for all-range filters so it
     //    can never stand down a build whose selectivity hides in an
@@ -510,12 +389,11 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // Memoized per unit; only applied when the unit's OWN static filter is
     // what qualified it (a transitively-reduced unit's count would measure
     // the unfiltered table and wrongly gate).
-    val runtimeGate = RptConf.runtimeSizedBuilds(conf)
     val footerGate = RptConf.footerKeepGate(conf)
     val keepFrac = RptConf.maxBuildKeepFraction(conf)
-    // any stats source live? when all are disabled neither keep gate can
+    // any stats source live? when both are disabled neither keep gate can
     // ever fire — don't even pay the footer reads
-    val keepSources = runtimeGate || conf.cboEnabled || footerGate
+    val keepSources = conf.cboEnabled || footerGate
     // estimated (keptRows, totalRows) of the unit's OWN static filter, or
     // None when no source can estimate it; memoized per unit
     val keepEstMemo = mutable.HashMap[Int, Option[(Double, Double)]]()
@@ -550,10 +428,6 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
               if (cboUsable) u.plan.stats.rowCount.map(_.toDouble)
               else None
             estKeep.orElse {
-              if (runtimeGate && u.cardMeasured) {
-                RuntimeCounts.count(u.plan).map(_.toDouble)
-              } else None
-            }.orElse {
               if (footerGate) FooterStats.keepFraction(u.plan).map(_ * tot)
               else None
             }.map(k => (k, tot))
@@ -581,8 +455,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // size — the IN values are whatever survived). Estimate preference
     // mirrors the keep-fraction gate: CBO filtered rowCount (absent
     // column stats FilterEstimation returns "keeps all", which is
-    // conservative here), a planning-time count under the opt-in
-    // runtimeSizedBuilds flag (TTL-cached), else the unfiltered card.
+    // conservative here), else the unfiltered card.
     // Memoized per build unit off its first snapshot — pass-to-pass
     // snapshot differences only tighten the filter, never loosen it.
     // --- planning-time total-work floor (RptConf.WAVE_COST_BYTES) ---
@@ -803,33 +676,21 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         val u = graph.units(id)
         u.card <= v2ScanMaxBuildRows ||
         (conf.cboEnabled && buildPlan.stats.rowCount
-          .exists(_.toDouble <= v2ScanMaxBuildRows)) ||
-        (runtimeGate && u.cardMeasured && selectivelyFiltered(u.plan) &&
-          RuntimeCounts.count(u.plan)
-            .exists(_.toDouble <= v2ScanMaxBuildRows))
+          .exists(_.toDouble <= v2ScanMaxBuildRows))
       })
 
     ops.foreach { op =>
       if (!inBackward && !op.forward) {
         inBackward = true
-        graph.units.foreach { u =>
-          fwdFinal(u.id) = cur(u.id)
-          fwdReduced(u.id) = reduced(u.id)
-        }
+        graph.units.foreach(u => fwdReduced(u.id) = reduced(u.id))
       }
-      // the cascade view doubles as the "is this unit filtered yet" record
-      // for the cascade form's gate
-      val cascadePlan = if (inBackward) fwdFinal(op.build) else cur(op.build)
       val reducedBuild =
         if (inBackward) fwdReduced(op.build) else reduced(op.build)
       // a build side is worth transferring from once it carries a selective
       // predicate — statically, or through its own reducers (semis are
       // added only from filtered builds, so non-empty semis => filtered)
-      val buildFiltered =
-        if (buildForm == "semijoin") {
-          reducedBuild.semis.nonEmpty ||
-            selectivelyFiltered(reducedBuild.unit.plan)
-        } else selectivelyFiltered(cascadePlan)
+      val buildFiltered = reducedBuild.semis.nonEmpty ||
+        selectivelyFiltered(reducedBuild.unit.plan)
       val buildGated =
         graph.units(op.build).card > effMaxBuildRows(op.probe) ||
         (filteredOnly && !buildFiltered) || measuredUnselective(op.build)
@@ -892,7 +753,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         graph.units(op.build).card > effMaxBuildRows(op.probe) ||
         (filteredOnly && !buildFiltered) ||
         (reducedBuild.semis.isEmpty && measuredUnselective(op.build))
-      if (buildForm == "semijoin" && !embedGated &&
+      if (!embedGated &&
           (buildProbeRatio <= 0 ||
             graph.units(op.build).card * buildProbeRatio <=
               graph.units(op.probe).card) &&
@@ -906,17 +767,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
             ((reducedBuild.materialize(op.buildKeys), jcond)),
           members = rp.members ++ reducedBuild.members)
       }
-      // measured-useless probe: a prior run of this exact (query, build,
-      // pass, probe-columns) shape kept >= the feedback threshold, so the
-      // probe pays hashing + a build subquery for nothing — skip
-      // re-injection (perf-only; the schedule and ride-through reductions
-      // above are untouched)
-      val fbSuppressed =
-        feedbackOn && ProbeFeedback.suppress(feedbackKey(op), feedbackKeep)
-      if (!gated && !fbSuppressed) {
-        val buildPlan =
-          if (buildForm == "semijoin") reducedBuild.materialize(op.buildKeys)
-          else cascadePlan
+      if (!gated) {
+        val buildPlan = reducedBuild.materialize(op.buildKeys)
         val conds = mutable.ArrayBuffer[Expression]()
         // the probe-wave floor: only BF/min-max injection consumes the
         // wave budget; the scan-pruning paths further down are exempt.
@@ -956,44 +808,21 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           // wrap here measurably regressed deep plans
         }
         if (waveOk && withMinmax) {
-          val pairs = mmPairs
-          if (literalBnds && pairs.nonEmpty) {
-            // two-phase bounds: evaluate min/max NOW and splice literal
-            // range predicates — Spark pushes literals into the parquet
-            // scan, so row-group zone maps skip data before rows
-            // materialize (the reference's dynamic ConstantFilter pushdown
-            // into LOGICAL_GET, rpt_optimizer.cpp:1401-1501)
-            val row = boundsFor(op.build, pairs.map(_._1), op.forward,
-              buildPlan)
-            if (row.isNullAt(0)) {
-              // empty build (or all-null keys, which match nothing in an
-              // equi-join either): the reference's always-false filter on
-              // the probe scan (physical_create_bf.cpp:289-297)
-              conds += Literal.FalseLiteral
-            } else {
-              pairs.zipWithIndex.foreach { case ((bk, pk), i) =>
-                conds += GreaterThanOrEqual(pk,
-                  Literal.create(row.get(2 * i), bk.dataType))
-                conds += LessThanOrEqual(pk,
-                  Literal.create(row.get(2 * i + 1), bk.dataType))
-              }
-            }
-          } else {
-            pairs.foreach { case (bk, pk) =>
-              conds += GreaterThanOrEqual(pk,
-                sharedScalarAgg("min", Min(bk).toAggregateExpression(),
-                  buildPlan, Seq(bk), op.forward, op.build))
-              conds += LessThanOrEqual(pk,
-                sharedScalarAgg("max", Max(bk).toAggregateExpression(),
-                  buildPlan, Seq(bk), op.forward, op.build))
-            }
+          mmPairs.foreach { case (bk, pk) =>
+            conds += GreaterThanOrEqual(pk,
+              sharedScalarAgg("min", Min(bk).toAggregateExpression(),
+                buildPlan, Seq(bk), op.forward, op.build))
+            conds += LessThanOrEqual(pk,
+              sharedScalarAgg("max", Max(bk).toAggregateExpression(),
+                buildPlan, Seq(bk), op.forward, op.build))
           }
         }
         // quant DPS conds are SCAN-ONLY: their row-filter reading ("pk IN
         // anchors") is NOT their semantics (the marked scan interprets
-        // each anchor as a [v, v+w] range), so they ride to the final
-        // splice but never into cur — a build snapshot (cascade form)
-        // embedding one as a row filter would drop legitimate rows
+        // each anchor as a [v, v+w] range), so they must never be
+        // evaluated as a row filter: they ride to the final splice only,
+        // where DPP cleanup lands them in the scan or removes them (see
+        // quantOn)
         val scanOnlyConds = mutable.ArrayBuffer[Expression]()
         val quantHandled = mutable.Set[Int]()
         if (quantOn && !v2BuildSmallEnough(op.build, buildPlan)) {
@@ -1058,36 +887,10 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
                   scanOnlyConds += DynamicPruningSubquery(pk,
                     SqlBridge.planV2Scans(env), Seq(out), Seq(0),
                     onlyInBroadcast = false)
-                  quantHandled += i // scan-handled: skip the literal fallback
+                  quantHandled += i
                 }
               }
             case _ => ()
-          }
-        }
-        if (v2ScanFilter && !v2BuildSmallEnough(op.build, buildPlan) &&
-            RptConf.rangeSummaryFallback(conf)) {
-          // over-cap build not quant-handled (non-integral key, no usable
-          // footer stats, or a plain-parquet probe): approximate the
-          // reference's uncapped in-scan pushdown
-          // (rpt_optimizer.cpp:1401-1501) with a LITERAL OR-of-ranges
-          // summary of the build keys. Literals reach parquet row-group
-          // zone maps through stock pushdown on ANY parquet probe, and
-          // graft-parquet scans drop whole files from footer ranges.
-          op.buildKeys.zip(op.probeKeys).zipWithIndex
-              .filterNot { case (_, i) => quantHandled(i) }
-              .map(_._1).foreach { case (bk, pk) =>
-            rangesFor(op.build, bk, op.forward, buildPlan) match {
-              case Some(Seq()) =>
-                // empty build: always-false, same as the literal-bounds
-                // empty case (physical_create_bf.cpp:289-297)
-                conds += Literal.FalseLiteral
-              case Some(ranges) =>
-                conds += ranges.map { case (lo, hi) =>
-                  And(GreaterThanOrEqual(pk, Literal.create(lo, bk.dataType)),
-                    LessThanOrEqual(pk, Literal.create(hi, bk.dataType)))
-                }.reduce(Or)
-              case None => () // summary unavailable — push nothing
-            }
           }
         }
         if (v2ScanFilter && v2BuildSmallEnough(op.build, buildPlan)) {
@@ -1116,10 +919,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           }
         }
         if (conds.nonEmpty) {
-          val cond = conds.reduce(And)
-          cur(op.probe) = Filter(cond, cur(op.probe))
           pendingConds.getOrElseUpdate(op.probe,
-            mutable.ArrayBuffer[Expression]()) += cond
+            mutable.ArrayBuffer[Expression]()) += conds.reduce(And)
         }
         if (scanOnlyConds.nonEmpty) {
           pendingConds.getOrElseUpdate(op.probe,
@@ -1141,22 +942,20 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // push where provably safe: into every Union branch (key attributes
     // remapped per child) and below a Window whose partition keys cover
     // the probe keys — so the probe cuts rows before the union concat /
-    // window sort, and literal-bounds conds reach each branch's scan.
+    // window sort.
     // Pinned by BarrierPlacementSuite (incl. the negative case: a window
     // partitioned on other columns keeps the probe above it).
     def splice(p: LogicalPlan): LogicalPlan = {
       val conds = byIdentity.get(p) // look up BEFORE children are rebuilt
-      val replaced = unitReplacement.get(p) // cacheBuilds substitution
-      val rebuilt = if (replaced != null) replaced else p.mapChildren(splice)
+      val rebuilt = p.mapChildren(splice)
       rebuilt match {
         case _ if conds == null => rebuilt
         // merge into the unit's OWN filter rather than stacking a second
         // Filter node: the v2 scan-building batch (Early Filter and
         // Projection Push-Down, which runs once, right after this rule)
         // only consumes the single Filter directly above the relation —
-        // a stacked probe filter would keep its pushable conjuncts
-        // (literal bounds, range summaries) out of the scan's
-        // pushedFilters and thus out of parquet's row-group/file skipping
+        // a stacked probe filter would keep its pushable conjuncts out of
+        // the scan's pushedFilters
         case f: Filter =>
           Filter(And(conds.reduce(And), f.condition), f.child)
         case other =>
@@ -1192,8 +991,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
 
   /** A unit plan counts as selectively filtered when it contains a Filter
    *  with at least one conjunct beyond null-intolerance bookkeeping — a
-   *  user predicate, or a transfer filter an earlier op landed (which is
-   *  what propagates "filtered" transitively along the schedule). The
+   *  user predicate ("filtered" propagates transitively along the
+   *  schedule through the reduced views' semis, see applyOps). The
    *  reference's filtered/unfiltered table classification
    *  (src/transfer_graph_manager.hpp:103-114).
    *
@@ -1217,11 +1016,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
 
   /** Bloom-filter sizing from build-side stats (the reference sizes at
    *  finalize from true cardinality, physical_create_bf.cpp:382-406).
-   *  Preference order: rowCount of the filtered build plan (CBO), a
-   *  planning-time count of the statically-filtered unit (runtime sizing —
-   *  attempted only for large, filtered, measured builds where mis-sizing
-   *  costs real broadcast bytes), the unit's measured cardinality (parquet
-   *  footers) scaled by the footer min/max keep-fraction estimate where
+   *  Preference order: rowCount of the filtered build plan (CBO), then
+   *  the unit's measured cardinality (parquet footers) scaled by the footer min/max keep-fraction estimate where
    *  one exists (an all-range filter keeping 4% of a fact-sized build
    *  otherwise broadcasts a ~25×-oversized filter; under-estimates cost
    *  FPR only, and the 4096 floor bounds the degenerate end), then the
@@ -1236,34 +1032,22 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       val static =
         if (unit.cardMeasured) unit.card
         else math.min(unit.card, defaultItems.toDouble)
-      val counted =
-        if (RptConf.runtimeSizedBuilds(conf) &&
-            static > RptConf.runtimeSizingMinRows(conf) &&
-            selectivelyFiltered(unit.plan)) {
-          RuntimeCounts.count(unit.plan)
-        } else None
-      counted.map(_.toDouble).getOrElse {
-        val footerScale =
-          if (RptConf.footerKeepGate(conf)) {
-            FooterStats.keepFraction(unit.plan).getOrElse(1.0)
-          } else 1.0
-        static * footerScale
-      }
+      val footerScale =
+        if (RptConf.footerKeepGate(conf)) {
+          FooterStats.keepFraction(unit.plan).getOrElse(1.0)
+        } else 1.0
+      static * footerScale
     }
     math.max(4096L, math.min(est.toLong, maxItems))
   }
 }
 
 object PredicateTransferRule {
-  // Helper executions (runtime counts, literal bounds, cache registration)
-  // run the FULL optimizer on the calling thread; this flag keeps the rule
-  // from re-entering itself through them. Lazily-planned artifacts of those
-  // executions (cached-relation materialization) may also run on other
-  // threads later — they carry no joins worth transferring, so the
-  // minEdges guard covers them.
-  // depth counter, not a boolean: helpers may compose (a cached-relation
-  // registration planning a count, say) and an inner nested call must not
-  // clear the guard for the still-running outer one
+  // Helper executions (the keep gate's planning-time counts) run the FULL
+  // optimizer on the calling thread; this flag keeps the rule from
+  // re-entering itself through them.
+  // depth counter, not a boolean: an inner nested call must not clear the
+  // guard for a still-running outer one
   /** The most recent transfer schedule this JVM planned — consumed by
     * [[DagPrinter.renderPhysical]]/the profiling listener to join measured
     * probe selectivities onto the schedule's boxed tree (display-only:
@@ -1347,12 +1131,13 @@ object PredicateTransferRule {
   }
 }
 
-/** Planning-time row counts of filtered table units, cached per plan shape
- *  across queries (the same unit recurs query after query; the fixture/ETL
+/** Planning-time row counts of filtered table units — the keep-fraction
+ *  fallback of the banked-filter gate — cached per plan shape across
+ *  queries (the same unit recurs query after query; the fixture/ETL
  *  pattern is a stable set of filtered dims). Entries expire after a TTL so
- *  data changing under a live session cannot mis-size filters indefinitely
- *  (stale counts are FPR-only — results stay correct either way). Count
- *  failures degrade to None — sizing falls back to the static estimate. */
+ *  data changing under a live session cannot mis-gate probes indefinitely
+ *  (stale counts only move a gate — results stay correct either way).
+ *  Count failures degrade to None — the gate treats the keep as unknown. */
 private[rpt] object RuntimeCounts {
   private val TTL_NANOS = 10L * 60 * 1000 * 1000 * 1000 // 10 minutes
   private val cache =
@@ -1374,7 +1159,7 @@ private[rpt] object RuntimeCounts {
   }
 
   /** Over-cap eviction: expired entries first, then the oldest half —
-    * keeps the newest feedback instead of thrashing a clear-all when a
+    * keeps the newest counts instead of thrashing a clear-all when a
     * workload has >512 live unit shapes. */
   private def evict(now: Long): Unit = synchronized {
     if (cache.size <= 512) return

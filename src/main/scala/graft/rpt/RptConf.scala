@@ -48,16 +48,15 @@ object RptConf {
   /** Only inject a probe filter when the probe unit's estimated
    *  cardinality is at least this many rows — a small probe target saves
    *  less in shuffled bytes than its build subquery costs in scheduling.
-   *  Crucially this gates only the probe FILTER: in the `semijoin` build
-   *  form the reduction still rides through gated units via their reduced
-   *  views, so a selective filter crosses a tiny dim to the big tables
-   *  behind it without the dim paying a probe of its own (the round-2
+   *  Crucially this gates only the probe FILTER: the reduction still
+   *  rides through gated units via their reduced views, so a selective
+   *  filter crosses a tiny dim to the big tables behind it without the dim paying a probe of its own (the round-2
    *  regression was gating BOTH, which severed every cascade at its
    *  smallest hop). The reference schedules every edge
    *  (rpt_optimizer.cpp:876-995); 0 restores that. */
   val MIN_PROBE_ROWS = "spark.graft.rpt.minProbeRows"
   /** Only build bloom filters over units that carry a SELECTIVE predicate
-   *  — a static filter beyond IsNotNull, or a transfer filter landed by an
+   *  — a static filter beyond IsNotNull, or a reduction riding in from an
    *  earlier op. An unfiltered build side's filter contains every key it
    *  ever joins with, removes ~nothing on FK-shaped data, and still costs
    *  a build subquery + a per-row probe. The reference classifies tables
@@ -200,7 +199,8 @@ object RptConf {
    *  the surviving rows die at the first (often broadcast) join anyway,
    *  so a transfer probe there largely RE-CUTS banked rows while its
    *  build still costs a full wave. Measured on the 113 real JOB texts
-   *  at factor 0.5 (JOBREAL_r15 + ProbeSites planning sweep): queries
+   *  at factor 0.5 (JOBREAL_r15 + a per-query probe-site planning sweep,
+   *  PROBESITES_r18.json): queries
    *  whose every probe site is statically filtered geomean 0.73×
    *  broadcast / 0.70× shuffle (8a/8b, 9*, 18b, 19*, 5a, 15a — the
    *  residual loser class), while queries probing only unfiltered scans
@@ -327,18 +327,6 @@ object RptConf {
    *  the big root). 0 disables the gate (reference-faithful: it schedules
    *  every edge in both passes). */
   val MIN_BUILD_PROBE_RATIO = "spark.graft.rpt.minBuildProbeRatio"
-  /** How each op's bloom-filter build subquery is shaped:
-   *  `semijoin` (default) — a self-contained LeftSemi join tree over base
-   *  table units (build unit ⋉ its already-scheduled reducers). Every
-   *  subquery is independent, so ALL builds execute in parallel — the
-   *  Spark analog of the reference's pipeline-dependency DAG executing
-   *  CREATE_BFs as their inputs become ready
-   *  (physical_create_bf.cpp:559-613).
-   *  `cascade` — build over the probe-filtered-so-far plan, i.e. each
-   *  build's subquery NESTS the previous hop's subquery. Mirrors the
-   *  reference's stacked operators most literally, but nested subqueries
-   *  execute sequentially (a chain of k hops pays k job waves). */
-  val BUILD_FORM = "spark.graft.rpt.buildForm"
   /** `false` (default): a failure inside the rewrite logs a warning and
    *  leaves the plan unchanged — an optimization must never fail the
    *  user's query. `true` (tests): rethrow so defects surface. */
@@ -347,23 +335,6 @@ object RptConf {
   val MAX_BF_ITEMS = "spark.graft.rpt.maxBloomFilterItems"
   /** Default estimated items when the build side has no row-count stats. */
   val DEFAULT_BF_ITEMS = "spark.graft.rpt.defaultBloomFilterItems"
-  /** Size bloom filters from a planning-time `count(*)` of the FILTERED
-   *  build unit instead of the whole-table footer count — the Spark analog
-   *  of the reference's resize-at-finalize from true cardinality
-   *  (physical_create_bf.cpp:382-406; rebuild iff rows*8 > allocated_bits).
-   *  The count is pushdown-friendly (reads only the filter columns), cached
-   *  per plan shape across queries (10-minute TTL), and only attempted when
-   *  the static estimate exceeds [[RUNTIME_SIZING_MIN_ROWS]] — below that
-   *  the bytes an oversized filter wastes are smaller than a count job
-   *  costs. Off by default like the other two-phase flags: it runs a count
-   *  job inside optimization, and within the TTL a build whose data changed
-   *  can be sized from a stale count (FPR-only effect — results stay
-   *  correct). Enable for stable fixture/ETL sessions. */
-  val RUNTIME_SIZED_BUILDS = "spark.graft.rpt.runtimeSizedBuilds"
-  /** Only runtime-count builds whose static estimate exceeds this many
-   *  rows (default 1M ≈ 1.5 MB of bloom filter at 12 bits/key — the point
-   *  where mis-sizing starts to matter for broadcast bytes). */
-  val RUNTIME_SIZING_MIN_ROWS = "spark.graft.rpt.runtimeSizingMinRows"
   /** Selectivity payoff gate: skip ops whose build unit's STATIC filter
    *  keeps at least this fraction of the unit's rows — a weakly-selective
    *  build (a loose range, a negation that slipped through as part of a
@@ -372,15 +343,14 @@ object RptConf {
    *  syntactic filtered/unfiltered classification cannot see this (q05's
    *  `s_acctbal > 0` keeps ~90% of suppliers and measured 0.90×). Keep
    *  fractions come from CBO filter estimates (with ANALYZE'd column
-   *  stats), a planning-time count under [[RUNTIME_SIZED_BUILDS]], or the
-   *  default-path footer min/max estimate ([[FOOTER_KEEP_GATE]]). `1.0`
-   *  disables the gate entirely. */
+   *  stats) or the default-path footer min/max estimate
+   *  ([[FOOTER_KEEP_GATE]]). `1.0` disables the gate entirely. */
   val MAX_BUILD_KEEP_FRACTION = "spark.graft.rpt.maxBuildKeepFraction"
   /** Estimate build keep fractions for the [[MAX_BUILD_KEEP_FRACTION]]
    *  gate from parquet footer column min/max statistics under a uniform-
    *  distribution assumption (the System R estimator) — the only stats
    *  source live on the DEFAULT path, where path-based parquet reads have
-   *  no CBO column stats and planning-time counts are opt-in. One-sided
+   *  no CBO column stats. One-sided
    *  by construction: the estimate exists only when EVERY non-trivial
    *  filter conjunct is a bare `col <op> literal` range over a
    *  numeric/date/timestamp column (see [[FooterStats.keepFraction]]), so
@@ -389,35 +359,6 @@ object RptConf {
    *  build relation, cached by file set (footers are already read on this
    *  path for row counts and BF sizing). On by default. */
   val FOOTER_KEEP_GATE = "spark.graft.rpt.footerKeepGate"
-  /** Evaluate min/max transfer bounds at PLANNING time and splice them as
-   *  literal range predicates instead of scalar-subquery comparisons.
-   *  Literal predicates reach the Parquet scan as pushed data filters, so
-   *  row-group zone maps skip data before rows materialize — the Spark
-   *  analog of the reference's dynamic ConstantFilter pushdown into
-   *  LOGICAL_GET (rpt_optimizer.cpp:1401-1501). An empty build side
-   *  becomes a literal `false` filter — the reference's always-false
-   *  empty-build case (physical_create_bf.cpp:289-297). Costs one small
-   *  aggregate job per build at planning time; applies when filterType
-   *  includes min/max (`all` | `minmaxOnly`).
-   *
-   *  CAVEAT — build data must be static for the plan's lifetime: the
-   *  bounds (and the literal-false empty-build collapse) are frozen into
-   *  the optimized plan at planning time. A cached/reused plan evaluated
-   *  after build-side data changed can incorrectly drop probe rows, unlike
-   *  the subquery form, which re-reads the build on every execution. Plans
-   *  optimized fresh per query (the normal `df.collect()`/SQL path) are
-   *  unaffected. */
-  val LITERAL_BOUNDS = "spark.graft.rpt.literalBounds"
-  /** Register every transfer build unit with the session cache and read
-   *  both its main-plan occurrence and its bloom-filter builds from the
-   *  cached in-memory relation — the analog of the reference CREATE_BF's
-   *  materialize-once-and-re-emit (physical_create_bf.cpp:201-275,441-557),
-   *  which pays one scan where Spark's subquery build form pays two.
-   *  Off by default: caching spends executor memory and holds entries for
-   *  the session lifetime; turn on for fact-sized build sides that are
-   *  scanned repeatedly. */
-  val CACHE_BUILDS = "spark.graft.rpt.cacheBuilds"
-
   /** Push the transfer INTO the scan for runtime-filterable v2 sources
    *  (`graft-parquet`, Iceberg-class): alongside the bloom-filter probe,
    *  splice a [[org.apache.spark.sql.catalyst.expressions.DynamicPruningSubquery]]
@@ -475,52 +416,14 @@ object RptConf {
    *  keys. */
   val V2_QUANT_BUCKETS = "spark.graft.rpt.v2QuantBuckets"
 
-  /** Coarse fallback for builds OVER the in-scan cap: instead of shipping
-   *  the (too-large) key set, evaluate a compact key-range summary at
-   *  planning time — up to [[RANGE_SUMMARY_BUCKETS]] merged `[lo, hi]`
-   *  ranges of the build keys (per-bucket actual min/max over a
-   *  fixed-width binning of the key span; single `[min, max]` for
-   *  non-binnable key types) — and splice it as a LITERAL
-   *  OR-of-ranges predicate on the probe keys. Literal predicates reach
-   *  every parquet reader's row-group zone maps through stock filter
-   *  pushdown, and `graft-parquet` scans additionally drop whole files
-   *  whose footer range misses all ranges. This is the reference's
-   *  uncapped dynamic filter pushdown (rpt_optimizer.cpp:1401-1501)
-   *  approximated without the key set: exactly the build sizes where
-   *  file-skipping pays most at 100 TB. Opt-in (default false) because,
-   *  like [[LITERAL_BOUNDS]], it executes bounded auxiliary aggregates
-   *  on the driver during planning (two per build/key/pass, cached). */
-  val RANGE_SUMMARY_FALLBACK = "spark.graft.rpt.rangeSummaryFallback"
-  /** Maximum ranges per range-summary predicate (default 64). */
-  val RANGE_SUMMARY_BUCKETS = "spark.graft.rpt.rangeSummaryBuckets"
-
-  /** Cross-query selectivity feedback — the Spark analog of the
-   *  reference's `SelectivityOptionalFilter` scan-filter wrapper
-   *  (rpt_optimizer.cpp:1482-1491). When on, each executed probe's
-   *  measured keep-rate is recorded (session-wide, TTL-cached) under a
-   *  stable (query, build, pass, probe columns) identity, and the next
-   *  planning of the same shape SKIPS probes that measured ≥
-   *  [[PROBE_FEEDBACK_KEEP]] — a probe that removes ≤2% of rows costs its
-   *  bloom-filter build and per-row hashing for nothing. Opt-in (default
-   *  false): re-planning the same query then intentionally yields a
-   *  different (cheaper) plan, which is surprising under test pinning.
-   *  Recording rides [[RptProfiling.RptProfilingListener]] — registered
-   *  automatically by `GraftSession.build`; plain sessions must register
-   *  it once for feedback to observe executions. */
-  val PROBE_FEEDBACK = "spark.graft.rpt.probeFeedback"
-  /** Keep-rate at or above which a measured probe is suppressed on
-   *  re-planning (default 0.98). */
-  val PROBE_FEEDBACK_KEEP = "spark.graft.rpt.probeFeedbackKeepThreshold"
-
   /** WITHIN-query probe drop — the direct analog of the reference wrapping
    *  its pushed BF filters in `SelectivityOptionalFilter(1, 1000000)`
    *  (physical_create_bf.cpp:326-328): each partition samples its own
    *  spliced bloom probe and, once [[ADAPTIVE_PROBE_SAMPLE]] rows measured
    *  a keep-rate ≥ [[ADAPTIVE_PROBE_KEEP]], stops evaluating it
    *  (pass-through; superset-safe, so results are unchanged — see
-   *  [[AdaptiveProbe]]). Complements [[PROBE_FEEDBACK]], which can only
-   *  help the NEXT planning of the same shape; this recovers most of an
-   *  unselective probe's cost on the first run. Partitions smaller than
+   *  [[AdaptiveProbe]]). This recovers most of an unselective probe's
+   *  cost on the first run. Partitions smaller than
    *  the sample never disable, so small-SF runs are byte-identical.
    *
    *  DEFAULT ON (round 14), matching the reference's unconditional wrap.
@@ -549,7 +452,7 @@ object RptConf {
    *  table at every realistic partition size (default 65536). */
   val ADAPTIVE_PROBE_SAMPLE = "spark.graft.rpt.adaptiveProbeSampleRows"
   /** Keep-rate at or above which the sampled probe latches off
-   *  (default 0.98, matching [[PROBE_FEEDBACK_KEEP]]). */
+   *  (default 0.98: the probe removed ≤2% of rows). */
   val ADAPTIVE_PROBE_KEEP = "spark.graft.rpt.adaptiveProbeKeepThreshold"
 
   /** Accept both camelCase and the reference's snake_case spellings
@@ -594,8 +497,6 @@ object RptConf {
     conf.getConfString(DEEP_PLAN_PROBE_ROWS, "16777216").toLong
   def deepPlanBypassKeep(conf: SQLConf): Double =
     conf.getConfString(DEEP_PLAN_BYPASS_KEEP, "0.5").toDouble
-  def buildForm(conf: SQLConf): String =
-    normalized(conf, BUILD_FORM, "semijoin", Set("semijoin", "cascade"))
   def failFast(conf: SQLConf): Boolean =
     conf.getConfString(FAIL_FAST, "false").toBoolean
   def waveCostBytes(conf: SQLConf): Long =
@@ -628,18 +529,10 @@ object RptConf {
     conf.getConfString(MAX_BF_ITEMS, "4000000").toLong
   def defaultBfItems(conf: SQLConf): Long =
     conf.getConfString(DEFAULT_BF_ITEMS, "1000000").toLong
-  def runtimeSizedBuilds(conf: SQLConf): Boolean =
-    conf.getConfString(RUNTIME_SIZED_BUILDS, "false").toBoolean
-  def runtimeSizingMinRows(conf: SQLConf): Long =
-    conf.getConfString(RUNTIME_SIZING_MIN_ROWS, "1048576").toLong
   def maxBuildKeepFraction(conf: SQLConf): Double =
     conf.getConfString(MAX_BUILD_KEEP_FRACTION, "0.8").toDouble
   def footerKeepGate(conf: SQLConf): Boolean =
     conf.getConfString(FOOTER_KEEP_GATE, "true").toBoolean
-  def literalBounds(conf: SQLConf): Boolean =
-    conf.getConfString(LITERAL_BOUNDS, "false").toBoolean
-  def cacheBuilds(conf: SQLConf): Boolean =
-    conf.getConfString(CACHE_BUILDS, "false").toBoolean
   def v2ScanFilter(conf: SQLConf): Boolean =
     conf.getConfString(V2_SCAN_FILTER, "true").toBoolean
   def v2ScanFilterMaxBuildRows(conf: SQLConf): Long =
@@ -648,14 +541,6 @@ object RptConf {
     conf.getConfString(V2_QUANTIZED_OVER_CAP, "true").toBoolean
   def v2QuantBuckets(conf: SQLConf): Int =
     conf.getConfString(V2_QUANT_BUCKETS, "4096").toInt
-  def rangeSummaryFallback(conf: SQLConf): Boolean =
-    conf.getConfString(RANGE_SUMMARY_FALLBACK, "false").toBoolean
-  def rangeSummaryBuckets(conf: SQLConf): Int =
-    conf.getConfString(RANGE_SUMMARY_BUCKETS, "64").toInt
-  def probeFeedback(conf: SQLConf): Boolean =
-    conf.getConfString(PROBE_FEEDBACK, "false").toBoolean
-  def probeFeedbackKeep(conf: SQLConf): Double =
-    conf.getConfString(PROBE_FEEDBACK_KEEP, "0.98").toDouble
   def adaptiveProbeDrop(conf: SQLConf): Boolean =
     conf.getConfString(ADAPTIVE_PROBE, "true").toBoolean
   def adaptiveProbeSample(conf: SQLConf): Long =

@@ -26,8 +26,7 @@ object RptProfiling {
 
   final case class ProbeStat(
       node: String, pass: String, rowsIn: Long, rowsOut: Long,
-      stageMs: Long, probeCols: Seq[String] = Nil,
-      feedbackKeys: Seq[String] = Nil) {
+      stageMs: Long, probeCols: Seq[String] = Nil) {
     def selectivity: Double =
       if (rowsIn <= 0) 1.0 else rowsOut.toDouble / rowsIn.toDouble
   }
@@ -72,30 +71,7 @@ object RptProfiling {
                   a.name
               }
           }.flatten.distinct
-          // per-might_contain feedback identity: the (pass+query+build)-
-          // tagged subquery alias — read from the scalar subquery's output
-          // or the struct-field extraction after subquery merging — plus
-          // the probe column names; must mirror the rule's feedbackKey.
-          // The filter-level keep-rate is a conservative joint measure:
-          // joint keep >= t implies each conjunct kept >= t.
-          val fbKeys = f.condition.collect {
-            case BloomFilterMightContain(bfExpr, h) =>
-              val alias = bfExpr.collectFirst {
-                case g: org.apache.spark.sql.catalyst.expressions.GetStructField
-                    if g.name.exists(_.startsWith("graft_rpt_bf")) =>
-                  g.name.get
-                case s: ExecScalarSubquery
-                    if s.plan.output.headOption
-                      .exists(_.name.startsWith("graft_rpt_bf")) =>
-                  s.plan.output.head.name
-              }
-              val mcCols = h.collect {
-                case a: org.apache.spark.sql.catalyst.expressions.Attribute =>
-                  a.name
-              }
-              alias.map(a => ProbeFeedback.key(a, mcCols))
-          }.flatten
-          Seq(ProbeStat(f.child.nodeName, pass, in, out, stageMs, cols, fbKeys))
+          Seq(ProbeStat(f.child.nodeName, pass, in, out, stageMs, cols))
         case _ => Nil
       }
       here ++ p.children.flatMap(walk(_, stageMs)) ++
@@ -190,16 +166,6 @@ object RptProfiling {
 
     override def onSuccess(
         funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      // selectivity feedback rides the same listener: record every
-      // executed probe's keep-rate under its alias-tagged identity so the
-      // next planning of the same shape can skip measured-useless probes
-      if (sparkSession.conf.getOption(RptConf.PROBE_FEEDBACK)
-          .exists(_.toBoolean)) {
-        probeStats(qe).foreach { s =>
-          s.feedbackKeys.foreach(k =>
-            ProbeFeedback.record(k, s.selectivity, s.rowsIn))
-        }
-      }
       if (enabled) {
         val stats = probeStats(qe)
         if (stats.nonEmpty) {

@@ -15,7 +15,7 @@ import graft.GraftSession
  *    keys live in a narrow key range, so the runtime IN/range values
  *    dropped into the scan's `filter()` skip most FILES outright — the
  *    win stock Spark cannot get here (DPP needs partition columns +
- *    broadcast reuse; literalBounds needs minmax filterType).
+ *    broadcast reuse).
  *  - SCATTERED (`o_totalprice` filter): surviving keys spread over the
  *    whole keyspace — file skipping cannot help, and the probe verifies
  *    the in-scan transfer does NOT regress (the BF probe still does the
@@ -110,32 +110,15 @@ object V2Probe {
       val bytes = GraftParquetScan.lastBytePruneGlobal
         .map { case (b, a) => s""","bytes_before":$b,"bytes_after":$a""" }
         .getOrElse("")
-      // v2 source + OVER-CAP build (cap forced below the filtered key
-      // count) + range-summary fallback: the key set is "too large to
-      // ship", so the rule pushes the literal OR-of-ranges summary
-      // instead — the reference's uncapped in-scan pushdown approximated
-      // without collecting the keys (rpt_optimizer.cpp:1401-1501)
       // save whatever the probe is currently running with so the restore
       // below can't silently diverge from the setup values
       val savedCap = spark.conf.get("spark.graft.rpt.v2ScanFilterMaxBuildRows")
-      val savedRs = spark.conf.getOption("spark.graft.rpt.rangeSummaryFallback")
       spark.conf.set("spark.graft.rpt.v2ScanFilterMaxBuildRows", "1000")
-      spark.conf.set("spark.graft.rpt.rangeSummaryFallback", "true")
-      GraftParquetScan.lastFilePruneGlobal = None
-      GraftParquetScan.lastBytePruneGlobal = None
-      results("v2_range_summary") = timedMin(
-        chain("graft-parquet", dimFilter).collect().map(_.getLong(1)).sum)
-      val pruneRs = GraftParquetScan.lastFilePruneGlobal
-        .map { case (b, a) => s""""rs_files_before":$b,"rs_files_after":$a""" }
-        .getOrElse(""""rs_files_before":null,"rs_files_after":null""")
-      val bytesRs = GraftParquetScan.lastBytePruneGlobal
-        .map { case (b, a) => s""","rs_bytes_before":$b,"rs_bytes_after":$a""" }
-        .getOrElse("")
-      // v2 source + OVER-CAP build with the DEFAULT-ON quantized path
-      // (literal fallback off): runtime grid anchors through the DPS
-      // channel — the byte-prune parity vs the exact key set is the
-      // measurement that justified flipping the over-cap default on
-      spark.conf.set("spark.graft.rpt.rangeSummaryFallback", "false")
+      // v2 source + OVER-CAP build (cap forced below the filtered key
+      // count) with the DEFAULT-ON quantized path: runtime grid anchors
+      // through the DPS channel — the byte-prune parity vs the exact key
+      // set is the measurement that justified flipping the over-cap
+      // default on
       GraftParquetScan.lastFilePruneGlobal = None
       GraftParquetScan.lastBytePruneGlobal = None
       results("v2_quantized") = timedMin(
@@ -147,15 +130,11 @@ object V2Probe {
         .map { case (b, a) => s""","q_bytes_before":$b,"q_bytes_after":$a""" }
         .getOrElse("")
       spark.conf.set("spark.graft.rpt.v2ScanFilterMaxBuildRows", savedCap)
-      savedRs match {
-        case Some(v) => spark.conf.set("spark.graft.rpt.rangeSummaryFallback", v)
-        case None => spark.conf.unset("spark.graft.rpt.rangeSummaryFallback")
-      }
 
       val rows = results.values.map(_._1).toSet
       require(rows.size == 1, s"$regime: configs disagree: $results")
       if (ri > 0) out.append(",")
-      out.append(s""""$regime":{"rows":${rows.head},$prune$bytes,$pruneRs$bytesRs,$pruneQ$bytesQ,""")
+      out.append(s""""$regime":{"rows":${rows.head},$prune$bytes,$pruneQ$bytesQ,""")
       out.append(results.map { case (k, (_, s)) =>
         s""""$k":${math.round(s * 1000) / 1000.0}""" }.mkString(","))
       out.append(s""","speedup_vs_stock":${
@@ -166,8 +145,7 @@ object V2Probe {
     // zero-padded VARCHAR in BOTH relations (string sort order == key
     // order), the fact range-clustered by it — the layout a
     // string-PK'd append-only fact has at scale. The build is forced
-    // over-cap, the literal fallback stays off: the only in-scan
-    // transfer available is the runtime MIN/MAX envelope delivered
+    // over-cap: the only in-scan transfer available is the runtime MIN/MAX envelope delivered
     // through the DPS channel (physical_create_bf.cpp:131-176 tracks
     // exactly these bounds for VARCHAR sinks).
     locally {
@@ -202,11 +180,8 @@ object V2Probe {
       }
       val savedCap =
         spark.conf.get("spark.graft.rpt.v2ScanFilterMaxBuildRows")
-      val savedFallback =
-        spark.conf.getOption("spark.graft.rpt.rangeSummaryFallback")
       // force over-cap so the envelope is the only in-scan channel
       spark.conf.set("spark.graft.rpt.v2ScanFilterMaxBuildRows", "1000")
-      spark.conf.set("spark.graft.rpt.rangeSummaryFallback", "false")
       val results = scala.collection.mutable.LinkedHashMap[String, (Long, Double)]()
       spark.conf.set("spark.graft.rpt.v2ScanFilter", "false")
       results("stock") = timedMin(
@@ -225,10 +200,6 @@ object V2Probe {
         .map { case (b, a) => s""","bytes_before":$b,"bytes_after":$a""" }
         .getOrElse("")
       spark.conf.set("spark.graft.rpt.v2ScanFilterMaxBuildRows", savedCap)
-      savedFallback match {
-        case Some(v) => spark.conf.set("spark.graft.rpt.rangeSummaryFallback", v)
-        case None => spark.conf.unset("spark.graft.rpt.rangeSummaryFallback")
-      }
       val rows = results.values.map(_._1).toSet
       require(rows.size == 1, s"strkey: configs disagree: $results")
       out.append(s""","strkey":{"rows":${rows.head},$pruneE$bytesE,""")

@@ -1,30 +1,26 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /**
- * Minimal bridge into `private[sql]` surface for the graft RPT rule's
- * two-phase features. The reference engine executes its CREATE_BF builds
- * mid-pipeline and feeds measured facts (cardinalities, min/max bounds)
- * back into the plan (reference: src/operators/physical_create_bf.cpp:
- * 352-419); the Spark analog is executing a small auxiliary plan during
- * optimization. Spark has no public "run this LogicalPlan" API, hence this
- * one-file package bridge — everything else in graft uses public APIs.
+ * Minimal bridge into `private[sql]` surface for the graft RPT rule. The
+ * rule needs two things Spark offers no public API for: a planning-time
+ * row count of a filtered unit (the keep measurement behind the
+ * banked-filter gate — the reference instead feeds measured cardinalities
+ * back from its mid-pipeline CREATE_BF builds,
+ * src/operators/physical_create_bf.cpp:352-419), and building DSv2 scans
+ * inside the subqueries it injects. Hence this one-file package bridge —
+ * everything else in graft uses public APIs.
  */
 object SqlBridge {
 
   private def active: SparkSession = SparkSession.active
 
-  /** Execute `plan` on the active session and collect its rows. The caller
-   *  is responsible for re-entrancy guarding (the nested execution runs the
-   *  full optimizer, including the calling rule). */
-  def collectRows(plan: LogicalPlan): Array[Row] =
-    Dataset.ofRows(active, plan).collect()
-
-  /** Count rows of `plan` (aggregate pushdown / column pruning apply). */
+  /** Count rows of `plan` on the active session (aggregate pushdown /
+   *  column pruning apply). The caller is responsible for re-entrancy
+   *  guarding (the nested execution runs the full optimizer, including the
+   *  calling rule). */
   def countRows(plan: LogicalPlan): Long =
     Dataset.ofRows(active, plan).count()
 
@@ -44,19 +40,5 @@ object SqlBridge {
     if (plan.exists(_.isInstanceOf[DataSourceV2Relation])) {
       V2ScanRelationPushDown(plan)
     } else plan
-  }
-
-  /** Register `plan` with the session cache (idempotent) and return the
-   *  cached in-memory relation wearing `plan`'s own output attributes —
-   *  substitutable for any occurrence of the plan subtree. */
-  def cachedRelation(plan: LogicalPlan): LogicalPlan = {
-    val spark = active
-    val cm = spark.sharedState.cacheManager
-    if (cm.lookupCachedData(spark, plan).isEmpty) {
-      cm.cacheQuery(spark, plan, None, StorageLevel.MEMORY_AND_DISK)
-    }
-    cm.lookupCachedData(spark, plan)
-      .map(_.cachedRepresentation.withOutput(plan.output.toSeq))
-      .getOrElse(plan)
   }
 }

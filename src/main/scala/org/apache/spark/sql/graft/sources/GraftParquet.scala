@@ -342,10 +342,7 @@ class GraftParquetScan(base: ParquetScan,
     * footer range falsifies a STATIC pushed filter (the stock reader only
     * uses pushed filters for row-group skipping inside already-scheduled
     * tasks; at 100 TB, deciding at the driver that a file cannot match
-    * skips scheduling the task at all). The static path is what makes the
-    * rule's range-summary fallback (over-cap builds pushing literal
-    * OR-of-ranges instead of the key set) prune files like the key set
-    * would have. */
+    * skips scheduling the task at all). */
   override protected def partitions: Seq[FilePartition] = {
     val base = super.partitions
     val keys = runtimeKeys

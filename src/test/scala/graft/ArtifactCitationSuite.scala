@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `PROBESITES_r17.json`). Every versioned-artifact filename mentioned in
   * the permanent records (SURVEY.md and the round records) must exist on
   * disk, or the build fails. Brace citations (`X_r14.{json,md}`) expand to
-  * every member. */
+  * every member. The same records may not carry placeholder sections
+  * (`(pending)`, `(filled ...)`): a record lands with its numbers, or
+  * says what superseded them. */
 class ArtifactCitationSuite extends AnyFunSuite {
 
   // artifacts SURVEY discusses precisely BECAUSE they never existed (the
@@ -31,24 +33,41 @@ class ArtifactCitationSuite extends AnyFunSuite {
       } else Seq(s"$stem.$ext")
     }.toSeq.distinct
 
-  test("every versioned artifact cited in the permanent records exists") {
-    val repo = Paths.get(sys.props.getOrElse("user.dir", "."))
-    val records = Option(repo.toFile.listFiles()).getOrElse(Array.empty)
+  private val repo = Paths.get(sys.props.getOrElse("user.dir", "."))
+
+  /** (file name, text) of every permanent record at the repo root. */
+  private def records: Seq[(String, String)] = {
+    val files = Option(repo.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName == "SURVEY.md" ||
         f.getName.matches("(TESTRUNS|OPTIMIZATION|DECIDE)[A-Za-z0-9_]*\\.md"))
-    assert(records.exists(_.getName == "SURVEY.md"),
+    assert(files.exists(_.getName == "SURVEY.md"),
       "SURVEY.md missing from the repo root — suite must run from the repo")
-    val dangling = records.toSeq.flatMap { f =>
-      val text = new String(Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
+    files.toSeq.map(f => f.getName -> new String(Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  test("every versioned artifact cited in the permanent records exists") {
+    val dangling = records.flatMap { case (name, text) =>
       citedArtifacts(text)
         .filterNot(retractedPhantoms)
         .filterNot(a => Files.exists(repo.resolve(a)))
-        .map(a => s"${f.getName} cites $a")
+        .map(a => s"$name cites $a")
     }
     assert(dangling.isEmpty,
       s"dangling artifact citations (commit the file or fix the record):\n  " +
         dangling.mkString("\n  "))
+  }
+
+  test("permanent records carry no placeholder sections") {
+    val placeholders = records.flatMap { case (name, text) =>
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains("(pending") || line.contains("(filled") =>
+          s"$name:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(placeholders.isEmpty,
+      s"placeholder sections in permanent records (fill them or mark them " +
+        s"superseded):\n  " + placeholders.mkString("\n  "))
   }
 
   test("brace citations expand to every member") {

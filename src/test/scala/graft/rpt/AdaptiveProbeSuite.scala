@@ -138,33 +138,6 @@ class AdaptiveProbeSuite extends SparkTestBase {
     }
   }
 
-  test("a latched probe still feeds cross-query suppression (both layers compose)") {
-    ProbeFeedback.clear()
-    withConf(adaptiveOn :+ (RptConf.PROBE_FEEDBACK -> "true"): _*) {
-      val r1 = query("dimall")
-      val probes1 = "might_contain".r
-        .findAllIn(r1.queryExecution.optimizedPlan.toString).length
-      assert(probes1 > 0, "first planning must inject probes")
-      val before = AdaptiveProbe.disables
-      r1.collect()
-      assert(AdaptiveProbe.disables > before,
-        "the keep-all probe must latch off during the run")
-      // the latch inflates the filter's measured keep toward 1.0 — the
-      // listener's record must still carry the probe identity and land
-      // above the suppression threshold
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (ProbeFeedback.size < 1 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-      }
-      assert(ProbeFeedback.size >= 1, "listener never recorded the latched probe")
-      val probes2 = "might_contain".r
-        .findAllIn(query("dimall").queryExecution.optimizedPlan.toString).length
-      assert(probes2 < probes1,
-        s"latched probe must be suppressed on re-planning ($probes1 -> $probes2)")
-    }
-    ProbeFeedback.clear()
-  }
-
   test("nested might_contain under NOT/OR stays bare; only conjunct-rooted " +
       "probes wrap") {
     import org.apache.spark.sql.catalyst.expressions.{And, BloomFilterMightContain, Literal, Not, Or}

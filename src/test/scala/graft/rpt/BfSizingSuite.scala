@@ -72,38 +72,6 @@ class BfSizingSuite extends SparkTestBase {
     }
   }
 
-  test("runtime sizing: filtered builds are sized from the FILTERED count") {
-    // the reference resizes at finalize from true (filtered) cardinality;
-    // with runtime sizing on, a statically-filtered measured build must be
-    // sized by its planning-time count, not the whole-table footer count
-    val sql =
-      """SELECT count(*) AS n
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_quantity > 5""".stripMargin
-    val filtered = spark.sql(
-      "SELECT count(*) AS n FROM lineitem WHERE l_quantity > 5").head.getLong(0)
-    val total = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    assert(filtered > 4096 && filtered < total,
-      s"fixture assumption broken: filtered=$filtered total=$total")
-    withConf(RptConf.ENABLED -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.RUNTIME_SIZED_BUILDS -> "true",
-      RptConf.RUNTIME_SIZING_MIN_ROWS -> "0",
-      // isolate SIZING: l_quantity > 5 keeps ~90% of lineitem, which the
-      // measured-keep gate (tested separately below) would stand down
-      RptConf.MAX_BUILD_KEEP_FRACTION -> "1.0") {
-      val aggs = bfAggs(sql)
-      assert(aggs.nonEmpty, "no bloom filter aggregates injected")
-      val ests = aggs.map(estItems)
-      assert(ests.contains(filtered),
-        s"no BF sized at the filtered build count $filtered (got $ests)")
-      assert(!ests.contains(total),
-        s"a BF still sized at the unfiltered footer count $total ($ests)")
-    }
-  }
-
   test("footer keep-fraction scales BF sizing on the default path") {
     // sf0.01 so the scaled size clears the 4096 floor: l_quantity > 25
     // keeps ~50% of 60k lineitem rows — the default-path BF must size at
@@ -163,10 +131,10 @@ class BfSizingSuite extends SparkTestBase {
   }
 
   test("measured-keep gate: weakly-selective builds stand down, " +
-      "selective ones transfer (runtimeSizedBuilds on)") {
-    RuntimeCounts.clear()
+      "selective ones transfer (footer estimate)") {
     // s_acctbal > -999999 keeps EVERY supplier: statically a qualifying
-    // range predicate, measurably useless — the q05 class
+    // range predicate, measurably useless by its footer range — the q05
+    // class
     val weak =
       """SELECT count(*) AS n FROM lineitem
         |JOIN supplier ON l_suppkey = s_suppkey
@@ -178,12 +146,9 @@ class BfSizingSuite extends SparkTestBase {
         |JOIN part ON l_partkey = p_partkey
         |JOIN supplier ON l_suppkey = s_suppkey
         |WHERE p_size < 10""".stripMargin
-    // footer gate off: this test isolates the measured-count path (the
-    // weak range here is exactly what the footer estimate also catches)
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.FOOTER_KEEP_GATE -> "false",
-      RptConf.RUNTIME_SIZED_BUILDS -> "true",
+      RptConf.FOOTER_KEEP_GATE -> "true",
       RptConf.MAX_BUILD_KEEP_FRACTION -> "0.8") {
       def buildTables(sql: String): Set[String] =
         RptTestHelpers.buildTables(spark, sql)

@@ -6,7 +6,7 @@ import graft.SparkTestBase
  * CBO-stats path of the keep-fraction build gate: with
  * `spark.sql.cbo.enabled` and ANALYZE'd column statistics, a weakly-
  * selective build stands down from the filter ESTIMATE alone — no
- * planning-time count jobs (the runtimeSizedBuilds path) needed.
+ * planning-time count jobs needed.
  * Also pins the trust guard: CBO without column stats must change
  * nothing, because FilterEstimation assumes unestimatable predicates
  * keep 100% of rows.
@@ -63,13 +63,15 @@ class CboGateSuite extends SparkTestBase {
   }
 
   test("measured-weak own filter does not block the semi ride-through embed") {
-    // nation (selective) reduces supplier (measured-weak own filter)
-    // reduces lineitem: the keep-fraction gate stands supplier's own BF
-    // BUILD down, but supplier's reduced view — carrying the selective
-    // nation semi — must still embed into lineitem's view, so lineitem's
-    // downstream build over orders keeps nation's reduction (subquery
-    // leaves include nation). Gating the embed on the own-filter
-    // measurement alone loses transitive selectivity.
+    // nation (selective) reduces supplier (measured-weak own filter: the
+    // all-range s_acctbal > -999999 keeps every supplier by the default
+    // footer estimate) reduces lineitem: the keep-fraction gate stands
+    // supplier's own BF BUILD down, but supplier's reduced view —
+    // carrying the selective nation semi — must still embed into
+    // lineitem's view, so lineitem's downstream build over orders keeps
+    // nation's reduction (subquery leaves include nation). Gating the
+    // embed on the own-filter measurement alone loses transitive
+    // selectivity.
     val chain =
       """SELECT count(*) AS n FROM orders
         |JOIN lineitem ON o_orderkey = l_orderkey
@@ -79,7 +81,7 @@ class CboGateSuite extends SparkTestBase {
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       RptConf.MIN_PROBE_ROWS -> "0",
-      RptConf.RUNTIME_SIZED_BUILDS -> "true",
+      RptConf.FOOTER_KEEP_GATE -> "true",
       RptConf.MAX_BUILD_KEEP_FRACTION -> "0.8") {
       assert(!buildTables(chain).contains("supplier"),
         "weak supplier build must stand down under the keep-fraction gate")

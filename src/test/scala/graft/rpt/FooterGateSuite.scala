@@ -4,7 +4,7 @@ import graft.SparkTestBase
 
 /**
  * Footer-stats path of the keep-fraction build gate: on the DEFAULT path
- * (no CBO stats, no runtimeSizedBuilds) a weakly-selective range build
+ * (no CBO stats) a weakly-selective range build
  * stands down from the parquet footer min/max uniform estimate alone —
  * zero planning-time execution. Also pins the one-sidedness contract: any
  * conjunct the footers cannot estimate (equality, LIKE) blocks the

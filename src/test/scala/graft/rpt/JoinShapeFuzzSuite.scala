@@ -371,12 +371,12 @@ class JoinShapeFuzzSuite extends SparkTestBase {
     // banked-filter ladder must reach both outcomes, never change results
     val misEstKept = new java.util.concurrent.atomic.AtomicInteger(0)
     val misEstStood = new java.util.concurrent.atomic.AtomicInteger(0)
-    // probe-feedback x banked-filter composition slice (seed%11 == 1): both
-    // paths suppress probes on overlapping signals — plans with zero
-    // surviving probes are legal, but the composition must not suppress
-    // everything across the slice, and results must stay identical
-    val fbBankKept = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fbBankStood = new java.util.concurrent.atomic.AtomicInteger(0)
+    // banked-filter ladder slice (seed%11 == 1): banking stands filtered
+    // probe sites down — plans with zero surviving probes are legal, but
+    // the ladder must not suppress everything across the slice, and
+    // results must stay identical
+    val bankKept = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bankStood = new java.util.concurrent.atomic.AtomicInteger(0)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val chunks = (1 to nPlans).grouped(math.max(1, nPlans / nThreads + 1)).toSeq
     val pool = java.util.concurrent.Executors.newFixedThreadPool(chunks.size)
@@ -393,23 +393,21 @@ class JoinShapeFuzzSuite extends SparkTestBase {
           val tblsV2 = names.map(n => n ->
             s.read.format("graft-parquet").load(s"$sfDir/$n.parquet")).toMap
           seeds.foreach { seed =>
-            // gate matrix: most seeds run the default gates; a slice runs
-            // the OVER-CAP range-summary path (cap -1 puts every build
-            // over it) and another the probe-feedback suppression path —
-            // both must stay result-identical to rule-off
+            // gate matrix: most seeds run the default gates; each slice
+            // below forces one path — all must stay result-identical to
+            // rule-off
             val gates: Seq[(String, String)] = seed % 11 match {
-              case 0 => Seq(
+              case 0 => Seq( // over-cap with the quantized path off: cap -1
+                // puts every build over it, so no in-scan channel fires
+                // and the bloom probe carries the transfer alone
                 RptConf.V2_SCAN_FILTER_MAX_BUILD_ROWS -> "-1",
-                RptConf.RANGE_SUMMARY_FALLBACK -> "true")
-              case 1 => Seq( // probe-feedback x banked-filter COMPOSITION:
-                // both paths suppress probes (feedback drops measured
-                // no-op filters, banking stands down filtered probe
-                // sites); the ladder spans default through
+                RptConf.V2_QUANTIZED_OVER_CAP -> "false")
+              case 1 => Seq( // banked-filter LADDER: banking stands down
+                // filtered probe sites; the ladder spans default through
                 // bank-everything (huge multiple + keep threshold 1.0,
                 // so any measured keep banks). Zero-probe plans are
-                // legal; the slice counters assert the composition
-                // doesn't deadlock into suppressing every plan
-                RptConf.PROBE_FEEDBACK -> "true",
+                // legal; the slice counters assert the ladder doesn't
+                // suppress every plan
                 RptConf.FILTERED_PROBE_WAVE_MULTIPLE ->
                   Seq("64", "1048576")(seed % 2),
                 RptConf.FILTERED_PROBE_MAX_KEEP ->
@@ -524,8 +522,8 @@ class JoinShapeFuzzSuite extends SparkTestBase {
                   }
                   if (seed % 11 == 1) {
                     if (planStr.contains("might_contain")) {
-                      fbBankKept.incrementAndGet()
-                    } else fbBankStood.incrementAndGet()
+                      bankKept.incrementAndGet()
+                    } else bankStood.incrementAndGet()
                   }
                 }
                 val on = fp(gen.df)
@@ -572,7 +570,7 @@ class JoinShapeFuzzSuite extends SparkTestBase {
       s"${bigBuildPlans.get} relative-admitted big-build plans, " +
       s"floor slice ${floorKeptPlans.get} kept / ${floorStoodDown.get} stood down, " +
       s"mis-est slice ${misEstKept.get} kept / ${misEstStood.get} stood down, " +
-      s"feedback+bank slice ${fbBankKept.get} kept / ${fbBankStood.get} suppressed")
+      s"bank slice ${bankKept.get} kept / ${bankStood.get} suppressed")
     // the generator must actually produce cyclic join graphs (multi-parent
     // attaches) at sweep scale, not only trees
     if (nPlans >= 100) assert(cyclesTotal.get > 0,
@@ -600,10 +598,9 @@ class JoinShapeFuzzSuite extends SparkTestBase {
         "mis-est slice never kept a transfer — skew ladder too aggressive")
       assert(misEstStood.get > 0,
         "mis-est slice never stood down — skew ladder never bound")
-      // the feedback x banked composition must not suppress every plan —
-      // a double-suppression deadlock would show as zero kept transfers
-      assert(fbBankKept.get > 0,
-        "feedback+bank slice suppressed every probe — composition deadlock")
+      // the banked-filter ladder must not suppress every plan
+      assert(bankKept.get > 0,
+        "bank slice suppressed every probe — ladder too aggressive")
     }
     // the generator must reach real JOB widths, and the sweep must actually
     // exercise the rewrite

@@ -13,17 +13,20 @@ class RptConfSuite extends SparkTestBase {
     withConf(
       RptConf.HEURISTIC -> "largest_root",
       RptConf.PASS_MODE -> "forward_only",
-      RptConf.FILTER_TYPE -> "bf_only",
-      RptConf.BUILD_FORM -> "semijoin") {
+      RptConf.FILTER_TYPE -> "bf_only") {
       assert(RptConf.heuristic(sqlConf) == "largestRoot")
       assert(RptConf.passMode(sqlConf) == "forwardOnly")
       assert(RptConf.filterType(sqlConf) == "bfOnly")
-      assert(RptConf.buildForm(sqlConf) == "semijoin")
     }
     withConf(RptConf.FILTER_TYPE -> "minmax_only",
-      RptConf.BUILD_FORM -> "CASCADE") {
+      RptConf.HEURISTIC -> "JOIN_ORDER",
+      RptConf.PASS_MODE -> "BOTH") {
       assert(RptConf.filterType(sqlConf) == "minmaxOnly")
-      assert(RptConf.buildForm(sqlConf) == "cascade")
+      assert(RptConf.heuristic(sqlConf) == "joinOrder")
+      assert(RptConf.passMode(sqlConf) == "both")
+    }
+    withConf(RptConf.FILTER_TYPE -> "ALL") {
+      assert(RptConf.filterType(sqlConf) == "all")
     }
   }
 
@@ -31,14 +34,13 @@ class RptConfSuite extends SparkTestBase {
     for ((key, bad) <- Seq(
         RptConf.HEURISTIC -> "mst",
         RptConf.PASS_MODE -> "backwardOnly",
-        RptConf.FILTER_TYPE -> "none",
-        RptConf.BUILD_FORM -> "nested")) {
+        RptConf.PASS_MODE -> "forward",
+        RptConf.FILTER_TYPE -> "none")) {
       withConf(key -> bad) {
         val e = intercept[IllegalArgumentException] {
           RptConf.heuristic(sqlConf)
           RptConf.passMode(sqlConf)
           RptConf.filterType(sqlConf)
-          RptConf.buildForm(sqlConf)
         }
         assert(e.getMessage.contains(key), e.getMessage)
       }
@@ -76,40 +78,5 @@ class RptConfSuite extends SparkTestBase {
       assert(RptConf.waveBuildFraction(sqlConf) == 0.5)
     }
     assert(RptConf.waveCostBytes(sqlConf) == 0L) // test-session override
-  }
-
-  test("two-phase feature switches: defaults and overrides") {
-    // defaults: ALL planning-time job features (runtime sizing, literal
-    // bounds, cached builds, range summaries) are opt-in — each runs extra
-    // work inside optimization and assumes build data static for the
-    // session/plan
-    assert(!RptConf.runtimeSizedBuilds(sqlConf))
-    assert(RptConf.runtimeSizingMinRows(sqlConf) == 1048576L)
-    assert(!RptConf.literalBounds(sqlConf))
-    assert(!RptConf.cacheBuilds(sqlConf))
-    assert(!RptConf.rangeSummaryFallback(sqlConf))
-    assert(RptConf.rangeSummaryBuckets(sqlConf) == 64)
-    withConf(RptConf.RANGE_SUMMARY_FALLBACK -> "true",
-      RptConf.RANGE_SUMMARY_BUCKETS -> "16") {
-      assert(RptConf.rangeSummaryFallback(sqlConf))
-      assert(RptConf.rangeSummaryBuckets(sqlConf) == 16)
-    }
-    assert(!RptConf.probeFeedback(sqlConf))
-    assert(RptConf.probeFeedbackKeep(sqlConf) == 0.98)
-    withConf(RptConf.PROBE_FEEDBACK -> "true",
-      RptConf.PROBE_FEEDBACK_KEEP -> "0.9") {
-      assert(RptConf.probeFeedback(sqlConf))
-      assert(RptConf.probeFeedbackKeep(sqlConf) == 0.9)
-    }
-    withConf(
-      RptConf.RUNTIME_SIZED_BUILDS -> "true",
-      RptConf.RUNTIME_SIZING_MIN_ROWS -> "0",
-      RptConf.LITERAL_BOUNDS -> "true",
-      RptConf.CACHE_BUILDS -> "true") {
-      assert(RptConf.runtimeSizedBuilds(sqlConf))
-      assert(RptConf.runtimeSizingMinRows(sqlConf) == 0L)
-      assert(RptConf.literalBounds(sqlConf))
-      assert(RptConf.cacheBuilds(sqlConf))
-    }
   }
 }

@@ -23,15 +23,11 @@ import graft.SparkTestBase
  * DSv2 sources (Iceberg-class) do implement it, and against such a
  * source the rule's probe subquery values could reach the scan.
  *
- * Ceiling on stock file sources, both halves already shipped:
- *  - `literalBounds`: planning-time min/max evaluated and spliced as
- *    literal range predicates, which DO reach parquet row-group zone
- *    maps (pinned by LiteralBoundsSuite's row-group-skip assertions);
- *  - the BF probe itself stays a post-scan `FilterExec` FUSED into the
- *    scan's whole-stage-codegen pipeline (pinned below) — rows die in
- *    the same generated loop that materializes them, which is the
- *    closest Spark gets to the reference's in-scan probe without
- *    forking the file source.
+ * Ceiling on stock file sources: the BF probe stays a post-scan
+ * `FilterExec` FUSED into the scan's whole-stage-codegen pipeline
+ * (pinned below) — rows die in the same generated loop that
+ * materializes them, which is the closest Spark gets to the reference's
+ * in-scan probe without forking the file source.
  *
  * If a Spark upgrade makes this suite fail, the gap can be closed for
  * real: wire the probe as a DynamicPruning predicate on the scan's

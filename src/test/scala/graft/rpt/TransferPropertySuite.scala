@@ -118,9 +118,8 @@ class TransferPropertySuite extends SparkTestBase {
   test("rewrite preserves results on barrier shapes under two-phase variants") {
     // barrier units (union / global aggregate / window) with a JOIN nested
     // INSIDE them — the shape where splice() must reach units inside a
-    // barrier subtree and where cacheBuilds must decline to cache the
-    // barrier (nested-unit exclusion). Swept against every two-phase
-    // feature: cached builds, literal bounds, runtime-sized builds.
+    // barrier subtree. Swept with the default bloom probes and with the
+    // min/max subquery bounds (filterType=all) riding along.
     val params = Gen.Parameters.default
     val instances = (200 to 209).flatMap(i => genInstance(params, Seed(i.toLong)))
       .filter(_.dimRows.size >= 3)
@@ -128,11 +127,7 @@ class TransferPropertySuite extends SparkTestBase {
     val barriers = Seq("union", "agg", "window")
     val variants: Seq[(String, Seq[(String, String)])] = Seq(
       "plain" -> Seq.empty,
-      "cacheBuilds" -> Seq(RptConf.CACHE_BUILDS -> "true"),
-      "literalBounds" -> Seq(RptConf.LITERAL_BOUNDS -> "true",
-        RptConf.FILTER_TYPE -> "all"),
-      "runtimeSized" -> Seq(RptConf.RUNTIME_SIZED_BUILDS -> "true",
-        RptConf.RUNTIME_SIZING_MIN_ROWS -> "0"))
+      "minmax" -> Seq(RptConf.FILTER_TYPE -> "all"))
     instances.zipWithIndex.foreach { case (inst, idx) =>
       buildViews(inst)
       val r = inst.keyRange
@@ -158,14 +153,10 @@ class TransferPropertySuite extends SparkTestBase {
            |WHERE p_fact.v < ${inst.filterBelow}""".stripMargin
       val off = withConf(RptConf.ENABLED -> "false")(fingerprint(spark.sql(sql)))
       variants.foreach { case (vname, confs) =>
-        try {
-          val on = withConf(openGates ++ confs :+
-            (RptConf.ENABLED -> "true"): _*)(fingerprint(spark.sql(sql)))
-          assert(on == off,
-            s"variant $vname changed results for: $inst barrier=${barriers(idx % barriers.size)}\n$sql")
-        } finally {
-          spark.catalog.clearCache()
-        }
+        val on = withConf(openGates ++ confs :+
+          (RptConf.ENABLED -> "true"): _*)(fingerprint(spark.sql(sql)))
+        assert(on == off,
+          s"variant $vname changed results for: $inst barrier=${barriers(idx % barriers.size)}\n$sql")
       }
     }
   }
@@ -181,11 +172,8 @@ class TransferPropertySuite extends SparkTestBase {
         (RptConf.FILTER_TYPE -> "all"): _*)(fingerprint(spark.sql(sql)))
       val fwd = withConf(openGates :+ (RptConf.ENABLED -> "true") :+
         (RptConf.PASS_MODE -> "forwardOnly"): _*)(fingerprint(spark.sql(sql)))
-      val cascade = withConf(openGates :+ (RptConf.ENABLED -> "true") :+
-        (RptConf.BUILD_FORM -> "cascade"): _*)(fingerprint(spark.sql(sql)))
       assert(mm == off, s"filterType=all changed results for: $inst")
       assert(fwd == off, s"forwardOnly changed results for: $inst")
-      assert(cascade == off, s"buildForm=cascade changed results for: $inst")
     }
   }
 }

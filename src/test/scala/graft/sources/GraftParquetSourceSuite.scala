@@ -215,8 +215,10 @@ class GraftParquetSourceSuite extends SparkTestBase {
 
   test("v2 gate keys on the FILTERED build size when an estimate exists") {
     // warehouse shape: the dim's UNFILTERED card exceeds the cap but its
-    // static predicate keeps almost nothing — the gate must use the
-    // filtered estimate (here the opt-in runtime count) and still splice
+    // static predicate keeps almost nothing. The gate uses a filtered
+    // estimate only where one exists (CBO's filtered rowCount); this
+    // path-based read has none, so the raw card gates the exact splice
+    // and the over-cap path must cover the build instead. Built on
     // the 3-table shape of the shuffle-regime test above — the shape
     // where STOCK v2 runtime filtering stands down (its noV2 check pins
     // that), so every runtime filter observed here is the RPT splice
@@ -269,13 +271,8 @@ class GraftParquetSourceSuite extends SparkTestBase {
       // reaches the scan — as grid anchors through the same channel
       assert(dppCount(run()) > 0,
         "the default-on quantized path must cover the over-cap build")
-      // runtimeSizedBuilds provides the measured filtered count (2 <= 2)
-      withConf("spark.graft.rpt.runtimeSizedBuilds" -> "true") {
-        assert(dppCount(run()) > 0,
-          "measured filtered count 2 <= cap 2 must re-enable the splice")
-        assert(fingerprint(run()) ===
-          withConf("spark.graft.rpt.enabled" -> "false")(fingerprint(run())))
-      }
+      assert(fingerprint(run()) ===
+        withConf("spark.graft.rpt.enabled" -> "false")(fingerprint(run())))
     }
   }
 
@@ -299,88 +296,6 @@ class GraftParquetSourceSuite extends SparkTestBase {
       GraftParquetScan.lastFilePruneGlobal.foreach { case (b, a) =>
         assert(a === b, "an irrefutable filter must not drop files")
       }
-    }
-  }
-
-  test("over-cap build: range-summary fallback still prunes files") {
-    // the reference pushes its scan filter UNCAPPED
-    // (rpt_optimizer.cpp:1401-1501); past v2ScanFilterMaxBuildRows the
-    // graft rule cannot ship the key set, so the opt-in fallback ships a
-    // literal OR-of-ranges summary instead — pushed like any static
-    // filter, pruned file-level by the test above's machinery
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, GreaterThanOrEqual => CGte, LessThanOrEqual => CLte, Or => COr}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val dimDir = Files.createTempDirectory("graft_v2dim4_").toFile
-    dimDir.deleteOnExit()
-    Seq((100L, "keep"), (200L, "keep"), (30000L, "drop"))
-      .toDF("dk", "tag").write.mode("overwrite")
-      .parquet(s"${dimDir.getAbsolutePath}/dim.parquet")
-    // grp keys chosen so the 3-table join keeps the dim-selected rows
-    // (k=100 -> grp 3, k=200 -> grp 6 under grp = k % 97)
-    Seq((3L, "g3"), (6L, "g6"), (7L, "g7"))
-      .toDF("gk", "gname").write.mode("overwrite")
-      .parquet(s"${dimDir.getAbsolutePath}/grp.parquet")
-
-    def run(): org.apache.spark.sql.DataFrame = {
-      val fact = spark.read.format("graft-parquet").load(factDir)
-      val dim = spark.read.parquet(s"${dimDir.getAbsolutePath}/dim.parquet")
-        .where("tag = 'keep'")
-      val grp = spark.read.parquet(s"${dimDir.getAbsolutePath}/grp.parquet")
-      fact.join(dim, $"k" === $"dk").join(grp, $"grp" === $"gk")
-        .groupBy($"tag").count()
-    }
-    def hasRangeOr(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.exists {
-        case f: LFilter => f.condition.exists {
-          case COr(CAnd(_: CGte, _: CLte), _) => true
-          case _ => false
-        }
-        case _ => false
-      }
-    withConf(
-      "spark.graft.rpt.enabled" -> "true",
-      "spark.graft.rpt.minProbeRows" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // -1: EVERY build is over the cap (0 is unusable here — a tiny dim's
-      // estimated card can round to 0 and "0 <= 0" reads as small enough)
-      "spark.graft.rpt.v2ScanFilterMaxBuildRows" -> "-1",
-      "spark.graft.rpt.rangeSummaryFallback" -> "true") {
-      GraftParquetScan.lastFilePruneGlobal = None
-      val on = run()
-      val onRows = fingerprint(on)
-      assert(onRows.nonEmpty, "fixture should produce a non-empty result")
-      // the spliced literal OR-of-ranges is there... (a key-set DPS count
-      // differential would be noise here: stock Spark's own v2 runtime
-      // filtering plans DPS of the same shape, and how many it plans
-      // shifts with the rule's other spliced filters)
-      assert(hasRangeOr(on), "expected the literal range-summary predicate")
-      // ...and the summary drops key-disjoint files at the driver
-      val (before, after) = GraftParquetScan.lastFilePruneGlobal.get
-      assert(after < before,
-        s"range summary {[100,100],[200,200]} lives in one clustered " +
-          s"file ($before -> $after)")
-      val off = withConf("spark.graft.rpt.enabled" -> "false")(
-        fingerprint(run()))
-      assert(onRows === off)
-
-      // fallback off: no range predicate spliced
-      withConf("spark.graft.rpt.rangeSummaryFallback" -> "false") {
-        val noFb = run()
-        assert(fingerprint(noFb) === off)
-        assert(!hasRangeOr(noFb),
-          "no fallback => no range-summary predicate expected")
-      }
-
-      // empty build: the summary degenerates to always-false
-      val none = {
-        val fact = spark.read.format("graft-parquet").load(factDir)
-        val dim = spark.read.parquet(s"${dimDir.getAbsolutePath}/dim.parquet")
-          .where("tag = 'nothing_matches'")
-        val grp = spark.read.parquet(s"${dimDir.getAbsolutePath}/grp.parquet")
-        fact.join(dim, $"k" === $"dk").join(grp, $"grp" === $"gk").count()
-      }
-      assert(none === 0L)
     }
   }
 
