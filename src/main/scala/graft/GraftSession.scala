@@ -26,12 +26,12 @@ object GraftSession {
       // BloomFilterAggregate hard-`require`s items/bits under these caps;
       // the stock 4M items / 64Mbit would saturate (or fail) the filters
       // the rule's probe-relative big-build path sizes for fact-scale
-      // probes (RptConf.BIG_BUILD_MAX_BF_ITEMS = 32M items → 256Mbit at
-      // Spark's 8 bits/item)
+      // probes, so both are raised to RptConf.BigBuildMaxBfItems (32M
+      // items, 256Mbit at Spark's 8 bits/item)
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-        "33554432")
+        rpt.RptConf.BigBuildMaxBfItems.toString)
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-        "268435456")
+        (rpt.RptConf.BigBuildMaxBfItems * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS); read as long, converted in
       // loadTables (Spark has no nanosecond timestamp type)

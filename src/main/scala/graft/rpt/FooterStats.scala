@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
  * Planning-time selectivity estimates for simple range predicates from
  * parquet footer column min/max statistics — the zero-execution stats
  * source of the keep-fraction build gate (see
- * [[RptConf.MAX_BUILD_KEEP_FRACTION]]). The reference's host computes
+ * [[RptConf.MaxBuildKeepFraction]]). The reference's host computes
  * filter selectivities from table statistics for the same payoff decision
  * (its `estimated_cardinality` flows out of the catalog for free,
  * table_manager.cpp:64-69); footer min/max plus a uniform-distribution

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.internal.SQLConf
 
@@ -45,6 +46,7 @@ import org.apache.spark.sql.internal.SQLConf
  */
 case class PredicateTransferRule() extends Rule[LogicalPlan]
     with PredicateHelper {
+  import PredicateTransferRule.GraftRelation
 
   // alias prefix marks our subqueries (idempotence guard); the _fwd/_bwd
   // suffix lets profiling roll up selectivity per pass, like the
@@ -52,7 +54,9 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
   private val SUBQ_ALIAS = "graft_rpt_bf"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!RptConf.enabled(conf) || !plan.resolved || plan.isStreaming ||
+    if (!RptConf.enabled(conf)) return plan
+    RptConf.requireDeclared(conf)
+    if (!plan.resolved || plan.isStreaming ||
         PredicateTransferRule.inNestedExecution || alreadyApplied(plan)) {
       return plan
     }
@@ -73,6 +77,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
   private def rewrite(plan: LogicalPlan): LogicalPlan = {
     val graph = JoinGraph.extract(plan)
     if (graph.edges.size < RptConf.minEdges(conf)) return plan
+    val deepPlanEdges = RptConf.deepPlanEdges(conf)
     // planning-time total-work floor (RptConf.MIN_PLAN_WORK_BYTES): a
     // query whose estimated total scan volume sits under the floor plans
     // no transfers at all — exit before paying for schedule construction,
@@ -84,8 +89,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       val planScanBytes: BigInt =
         plan.collectLeaves().map(_.stats.sizeInBytes).sum
       val hasV2 = plan.exists {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-          r.table.isInstanceOf[org.apache.spark.sql.graft.sources.GraftParquetTable]
+        case GraftRelation(_) => true
         case _ => false
       }
       if (planScanBytes < RptConf.minPlanWorkBytes(conf) && !hasV2 &&
@@ -93,7 +97,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           // every downstream join, and multi-alias self-join topologies
           // explode far past their file bytes (the budget's deep-plan
           // minimum handles them — see applyOps)
-          graph.edges.size < RptConf.deepPlanEdges(conf)) {
+          graph.edges.size < deepPlanEdges) {
         return plan
       }
     }
@@ -104,21 +108,18 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // on 3–4-join broadcast-regime queries dropped from ~100–500 ms to
     // the graph-extraction cost, the 5–10% "rule tax" those sub-second
     // queries showed with zero injected probes)
-    if (RptConf.skipBroadcastableBuilds(conf) &&
-        conf.autoBroadcastJoinThreshold > 0 &&
-        graph.edges.size < RptConf.deepPlanEdges(conf) &&
-        // a unit big enough for the probe-volume bypass means some op may
-        // transfer regardless of join strategy — don't bail wholesale
-        // (the bypass also needs the half-depth floor, see the op gate)
-        (graph.edges.size < RptConf.deepPlanEdges(conf) / 2 ||
-          graph.units.forall(_.card < RptConf.deepPlanProbeRows(conf)))) {
-      val ceiling = (BigDecimal(conf.autoBroadcastJoinThreshold) *
-        RptConf.broadcastConversionMargin(conf)).toBigInt
-      val allConvert = graph.edges.forall { e =>
-        graph.units(e.a).plan.stats.sizeInBytes
-          .min(graph.units(e.b).plan.stats.sizeInBytes) <= ceiling
-      }
-      if (allConvert) return plan
+    val bcCeiling = broadcastCeiling(graph, deepPlanEdges)
+    if (bcCeiling.exists { ceiling =>
+          // a unit big enough for the probe-volume bypass means some op
+          // may transfer regardless of join strategy — don't bail
+          // wholesale (the bypass also needs the half-depth floor, see
+          // the op gate)
+          (graph.edges.size < deepPlanEdges / 2 ||
+            graph.units.forall(_.card < RptConf.DeepPlanProbeRows)) &&
+          graph.edges.forall(e =>
+            convertsToBroadcast(graph, e.a, e.b, ceiling))
+        }) {
+      return plan
     }
     val ops = RptConf.heuristic(conf) match {
       case "joinOrder" => TransferSchedule.joinOrder(graph,
@@ -130,7 +131,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       logInfo(s"[graft-rpt] transfer schedule:\n${DagPrinter.render(graph, ops)}")
     }
     PredicateTransferRule.lastSchedule = Some((graph, ops))
-    val rewritten = applyOps(plan, graph, ops)
+    val rewritten = applyOps(plan, graph, ops, deepPlanEdges, bcCeiling)
     if (RptConf.displayPhysicalDag(conf)) {
       logInfo(s"[graft-rpt] rewritten plan:\n${rewritten.treeString}")
     }
@@ -152,10 +153,35 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     }
   }
 
+  /** The size at or under which a join's smaller input is taken to run
+   *  as a broadcast join — autoBroadcastJoinThreshold widened by
+   *  [[RptConf.BroadcastConversionMargin]] — or None when the broadcast
+   *  skip does not apply: gate off, broadcast joins off, or a deep graph
+   *  (see the op gate in applyOps). Computed once per query; shared by
+   *  the whole-plan bail and the per-op gate. */
+  private def broadcastCeiling(graph: JoinGraph,
+      deepPlanEdges: Int): Option[BigInt] =
+    if (RptConf.skipBroadcastableBuilds(conf) &&
+        conf.autoBroadcastJoinThreshold > 0 &&
+        graph.edges.size < deepPlanEdges) {
+      Some((BigDecimal(conf.autoBroadcastJoinThreshold) *
+        RptConf.BroadcastConversionMargin).toBigInt)
+    } else None
+
+  /** Whether the join between units `a` and `b` runs as a broadcast join:
+   *  whichever input is smaller gets broadcast, so its planning-time size
+   *  decides. */
+  private def convertsToBroadcast(graph: JoinGraph, a: Int, b: Int,
+      ceiling: BigInt): Boolean =
+    graph.units(a).plan.stats.sizeInBytes
+      .min(graph.units(b).plan.stats.sizeInBytes) <= ceiling
+
   private def applyOps(
       plan: LogicalPlan,
       graph: JoinGraph,
-      ops: Seq[ScheduledOp]): LogicalPlan = {
+      ops: Seq[ScheduledOp],
+      deepPlanEdges: Int,
+      bcCeiling: Option[BigInt]): LogicalPlan = {
     val filterType = RptConf.filterType(conf)
     val withBf = filterType != "minmaxOnly"
     val withMinmax = filterType != "bfOnly"
@@ -267,12 +293,9 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     val bigBuildFraction =
       if (conf.autoBroadcastJoinThreshold > 0) 0.0
       else RptConf.bigBuildProbeFraction(conf)
-    val bigBuildEffCard = RptConf.bigBuildEffectiveCard(conf)
     // effMaxBuildRows is defined after the banked-gate keep machinery it
     // consults (effective-card admission) — see below waveAdmitted
     val filteredOnly = RptConf.filteredBuildsOnly(conf)
-    val skipBroadcastable = RptConf.skipBroadcastableBuilds(conf)
-    val bcThreshold = conf.autoBroadcastJoinThreshold
     // The conversion margin models "this join will broadcast at runtime,
     // so the transfer's shuffle saving is zero" — a SINGLE-join argument.
     // On deep graphs it does not hold: a transferred reduction is consumed
@@ -286,11 +309,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // sf1 and 3–10× at sf10 (default regime sat at the rule-off time),
     // while the 3–5-table shapes lose 15–30% with probes — the margin
     // protects those. Deep plans therefore skip the broadcast gate
-    // altogether; shallow plans keep the margin-widened compare.
-    val deepPlan = graph.edges.size >= RptConf.deepPlanEdges(conf)
-    val deepProbeRows = RptConf.deepPlanProbeRows(conf).toDouble
-    val bypassKeep = RptConf.deepPlanBypassKeep(conf)
-    val bcMargin = RptConf.broadcastConversionMargin(conf)
+    // altogether (bcCeiling is None for them); shallow plans keep the
+    // margin-widened compare.
     val v2ScanFilter = RptConf.v2ScanFilter(conf)
     val v2ScanMaxBuildRows = RptConf.v2ScanFilterMaxBuildRows(conf).toDouble
     // Over-cap quantized in-scan transfer (see RptConf.V2_QUANTIZED_OVER_CAP
@@ -361,21 +381,17 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       PredicateTransferRule.quantExpr(bk, w)
     def graftRelationFor(plan: LogicalPlan, id: ExprId): Option[LogicalPlan] =
       plan.collectFirst {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-            if r.table.isInstanceOf[org.apache.spark.sql.graft.sources.GraftParquetTable] &&
-              r.output.exists(_.exprId == id) => r
+        case GraftRelation(r) if r.output.exists(_.exprId == id) => r
       }
     // output ExprIds of runtime-filterable v2 relations in a unit plan —
     // only attrs passing through filters untouched qualify (an aliasing
     // Project breaks the direct column mapping the v2 engine needs)
     def v2FilterableAttrs(plan: LogicalPlan): Set[ExprId] = plan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-          if r.table.isInstanceOf[org.apache.spark.sql.graft.sources.GraftParquetTable] =>
-        r.output.map(_.exprId)
+      case GraftRelation(r) => r.output.map(_.exprId)
     }.flatten.toSet
 
     // keep-fraction gate: a build whose STATIC filter keeps >=
-    // maxBuildKeepFraction of the unit's rows is skipped — its bloom
+    // RptConf.MaxBuildKeepFraction of the unit's rows is skipped — its bloom
     // filter would contain most keys while the build still costs a scan.
     // The keep fraction comes from (in preference order):
     //  - CBO filter estimation (`spark.sql.cbo.enabled` + ANALYZE'd column
@@ -390,7 +406,6 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // what qualified it (a transitively-reduced unit's count would measure
     // the unfiltered table and wrongly gate).
     val footerGate = RptConf.footerKeepGate(conf)
-    val keepFrac = RptConf.maxBuildKeepFraction(conf)
     // any stats source live? when both are disabled neither keep gate can
     // ever fire — don't even pay the footer reads
     val keepSources = conf.cboEnabled || footerGate
@@ -436,15 +451,18 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       })
     val keepGateMemo = mutable.HashMap[Int, Boolean]()
     def measuredUnselective(id: Int): Boolean =
-      keepSources && keepFrac < 1.0 && keepGateMemo.getOrElseUpdate(id,
-        keepEstimate(id).exists { case (k, tot) => k >= keepFrac * tot })
+      keepSources && keepGateMemo.getOrElseUpdate(id,
+        keepEstimate(id).exists { case (k, tot) =>
+          k >= RptConf.MaxBuildKeepFraction * tot
+        })
     // stricter keep ceiling for the probe-volume BYPASS (see
-    // RptConf.DEEP_PLAN_BYPASS_KEEP): an estimable-and-weak build must not
-    // ride the aggressive exception path; unestimable builds (equality/IN/
-    // LIKE filters footers can't price) keep the benefit of the doubt
+    // RptConf.DeepPlanBypassKeepFraction): an estimable-and-weak build must
+    // not ride the aggressive exception path; unestimable builds (equality/
+    // IN/LIKE filters footers can't price) keep the benefit of the doubt
     def bypassWeakBuild(id: Int): Boolean =
-      keepSources && bypassKeep < 1.0 &&
-        keepEstimate(id).exists { case (k, tot) => k >= bypassKeep * tot }
+      keepSources && keepEstimate(id).exists { case (k, tot) =>
+        k >= RptConf.DeepPlanBypassKeepFraction * tot
+      }
 
     // The v2 in-scan gate guards the DRIVER-side IN-set the engine
     // collects (InSubqueryExec values), so it should key on the FILTERED
@@ -479,14 +497,14 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // budget under one flat wave stands every probe down. The v2
     // in-scan paths below are exempt (see the rewrite() stand-down).
     val waveCost = RptConf.waveCostBytes(conf)
+    val waveWorkFraction = RptConf.waveWorkFraction(conf)
+    val waveBuildFraction = RptConf.waveBuildFraction(conf)
     val unitBytesMemo = mutable.HashMap[Int, BigInt]()
     def unitLeafBytes(id: Int): BigInt = unitBytesMemo.getOrElseUpdate(id,
       graph.units(id).plan.collectLeaves().map(_.stats.sizeInBytes).sum)
     // --- banked-filter gate constants and shared keep measurement (used
     // by BOTH the budget below and the stand-down gate further down) ---
     val filteredProbeMult = RptConf.filteredProbeWaveMultiple(conf)
-    val bankedKeep = RptConf.filteredProbeMaxKeep(conf)
-    val fpExtendF = RptConf.filteredProbeExtendFactor(conf)
     val fpKeptMult = RptConf.filteredProbeKeptWaveMultiple(conf)
     def fpBase: BigInt = BigInt(waveCost) * BigInt(filteredProbeMult)
     // banking (and keep measurement generally) is about a PUSHED scan
@@ -534,12 +552,11 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // FILTERED_PROBE_KEPT_WAVE_MULTIPLE=0 fully disables the extension
     // as its doc states — banking, the effective-bytes budget discount,
     // and the effective-card admission are all extended-band-scoped, and
-    // keptMult=0 must make every one of them base-band-identical (before
-    // this, only extendFactor=0 was a full off-switch: keptMult=0 stopped
-    // banking but kept discounting budgets)
+    // keptMult=0 must make every one of them base-band-identical
     def inExtendedBand(bytes: BigInt): Boolean =
-      waveCost > 0 && filteredProbeMult > 0 && fpExtendF > 0 &&
-        fpKeptMult > 0 && bytes >= fpBase && bytes < fpBase * BigInt(fpExtendF)
+      waveCost > 0 && filteredProbeMult > 0 && fpKeptMult > 0 &&
+        bytes >= fpBase &&
+        bytes < fpBase * BigInt(RptConf.FilteredProbeExtendFactor)
     // EFFECTIVE probe bytes: the budget prices downstream payoff by the
     // data the probes cut, and for a statically-filtered probe site that
     // is the POST-FILTER stream, not the raw scan. Pricing 18b's 1.48 GB
@@ -565,10 +582,10 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       if (waveCost <= 0) BigInt(-1)
       else {
         val probedBytes: BigInt = ops.map(_.probe).distinct
-          .filter(graph.units(_).card >= RptConf.minProbeRows(conf))
+          .filter(graph.units(_).card >= minProbeRows)
           .map(effectiveUnitBytes).sum
         val fromBytes =
-          (BigDecimal(probedBytes) * RptConf.waveWorkFraction(conf)).toBigInt
+          (BigDecimal(probedBytes) * waveWorkFraction).toBigInt
         // DEEP-plan minimum: a join graph at or past deepPlanEdges gets at
         // least edges/2 flat waves regardless of its byte size. Reductions
         // compound through every downstream join (the DEEP_PLAN_EDGES
@@ -578,7 +595,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         // WITH transfers and collapsed to 1.0x when a bytes-only budget
         // stood it down. Shallow plans keep the pure byte budget: their
         // sub-second tail is what the floor exists to protect.
-        if (graph.edges.size >= RptConf.deepPlanEdges(conf)) {
+        if (graph.edges.size >= deepPlanEdges) {
           fromBytes.max(BigInt(waveCost) * (graph.edges.size / 2))
         } else fromBytes
       }
@@ -615,8 +632,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           (inBase || inExtendedBand(bytes)) &&
           selectivelyFiltered(u.plan) && simpleScan(u.plan) && {
             val keep = measuredKeep(probeId)
-            if (inBase) keep.forall(_ < bankedKeep)
-            else keep.exists(k => k < bankedKeep &&
+            if (inBase) keep.forall(_ < RptConf.FilteredProbeMaxKeep)
+            else keep.exists(k => k < RptConf.FilteredProbeMaxKeep &&
               BigDecimal(k) * BigDecimal(bytes) <
                 BigDecimal(waveCost) * BigDecimal(fpKeptMult))
           }
@@ -631,7 +648,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         if (admittedWaves.contains(key)) true
         else {
           val charge = (BigDecimal(unitLeafBytes(op.build)) *
-            RptConf.waveBuildFraction(conf)).toBigInt.max(BigInt(waveCost))
+            waveBuildFraction).toBigInt.max(BigInt(waveCost))
           if (waveBudget >= charge) {
             waveBudget -= charge
             admittedWaves += key
@@ -663,7 +680,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         val u = graph.units(probeId)
         val bytes = unitLeafBytes(probeId)
         val keep =
-          if (bigBuildEffCard && inExtendedBand(bytes) &&
+          if (inExtendedBand(bytes) &&
               selectivelyFiltered(u.plan) && simpleScan(u.plan)) {
             measuredKeep(probeId).filter(k => k >= 0 && k <= 1).getOrElse(1.0)
           } else 1.0
@@ -699,7 +716,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         (buildProbeRatio > 0 &&
           graph.units(op.build).card * buildProbeRatio >
             graph.units(op.probe).card) ||
-        (skipBroadcastable && !deepPlan && bcThreshold > 0 &&
+        bcCeiling.exists(ceiling =>
           // probe-volume bypass (RPTBENCH_r12 ladder): a large probe
           // amortizes the subquery overhead even under broadcast joins —
           // the reduction is consumed by every downstream operator the
@@ -714,21 +731,16 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           // statically visible in footer ranges — weak builds take the
           // normal gate, unestimable ones (equality cascades) still
           // bypass.
-          !(graph.units(op.probe).card >= deepProbeRows &&
-            graph.edges.size >= RptConf.deepPlanEdges(conf) / 2 &&
-            !bypassWeakBuild(op.build)) && {
+          !(graph.units(op.probe).card >= RptConf.DeepPlanProbeRows &&
+            graph.edges.size >= deepPlanEdges / 2 &&
+            !bypassWeakBuild(op.build)) &&
           // skip when the build–probe JOIN will run as a broadcast join —
-          // whichever input is smaller gets broadcast, and AQE converts
-          // using runtime (filtered, shuffle-compressed) sizes that the
-          // planning-time estimate overstates by the margin (see
-          // RptConf.BROADCAST_CONVERSION_MARGIN). A broadcast join never
-          // shuffles the probe rows, so the transfer has nothing to save
-          // and its build subquery is pure overhead.
-          val joinMinSide =
-            graph.units(op.build).plan.stats.sizeInBytes
-              .min(graph.units(op.probe).plan.stats.sizeInBytes)
-          joinMinSide <= (BigDecimal(bcThreshold) * bcMargin).toBigInt
-        })
+          // AQE converts using runtime (filtered, shuffle-compressed)
+          // sizes that the planning-time estimate overstates by the
+          // margin (see RptConf.BroadcastConversionMargin). A broadcast
+          // join never shuffles the probe rows, so the transfer has
+          // nothing to save and its build subquery is pure overhead.
+          convertsToBroadcast(graph, op.build, op.probe, ceiling))
       // extend the probe's reduced view whenever the BUILD side qualifies,
       // even when the probe-side filter is gated (e.g. a tiny probe unit):
       // the reduction must ride through small units to the big tables
@@ -791,7 +803,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
               val opMaxItems =
                 if (graph.units(op.build).card > maxBuildRows) {
                   math.max(maxItems, math.min(
-                    RptConf.bigBuildMaxBfItems(conf),
+                    RptConf.BigBuildMaxBfItems,
                     math.min(
                       conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS),
                       conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS) / 8)))
@@ -970,7 +982,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // Identity-keyed: only the exact probe instances the loop registered.
     if (quantInjections.isEmpty && rangeInjections.isEmpty) spliced
     else spliced.transform {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+      case r: DataSourceV2Relation
           if quantInjections.containsKey(r) || rangeInjections.containsKey(r) =>
         val merged = new java.util.HashMap[String, String](
           r.options.asCaseSensitiveMap())
@@ -1043,11 +1055,6 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
 }
 
 object PredicateTransferRule {
-  // Helper executions (the keep gate's planning-time counts) run the FULL
-  // optimizer on the calling thread; this flag keeps the rule from
-  // re-entering itself through them.
-  // depth counter, not a boolean: an inner nested call must not clear the
-  // guard for a still-running outer one
   /** The most recent transfer schedule this JVM planned — consumed by
     * [[DagPrinter.renderPhysical]]/the profiling listener to join measured
     * probe selectivities onto the schedule's boxed tree (display-only:
@@ -1121,6 +1128,22 @@ object PredicateTransferRule {
     }
   }
 
+  /** A bundled `graft-parquet` DSv2 relation — the runtime-filterable
+    * source the in-scan transfer paths push into. */
+  private[rpt] object GraftRelation {
+    def unapply(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
+      case r: DataSourceV2Relation
+          if r.table.isInstanceOf[org.apache.spark.sql.graft.sources.GraftParquetTable] =>
+        Some(r)
+      case _ => None
+    }
+  }
+
+  // Helper executions (the keep gate's planning-time counts) run the FULL
+  // optimizer on the calling thread; this flag keeps the rule from
+  // re-entering itself through them.
+  // depth counter, not a boolean: an inner nested call must not clear the
+  // guard for a still-running outer one
   private val nestedDepth = new ThreadLocal[Integer] {
     override def initialValue(): Integer = 0
   }

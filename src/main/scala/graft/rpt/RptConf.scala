@@ -10,7 +10,9 @@ import org.apache.spark.sql.internal.SQLConf
  * `rpt_flip_roots`).
  *
  * All read through [[SQLConf]] so `spark.conf.set(...)` takes effect
- * per-query without session restart.
+ * per-query without session restart. Cost-model terms with one value in
+ * use are named constants (`UpperCamel`), not keys; setting a key this
+ * object does not declare raises ([[requireDeclared]]).
  */
 object RptConf {
   val ENABLED = "spark.graft.rpt.enabled"
@@ -84,9 +86,10 @@ object RptConf {
    *  filtered runtime side broadcast anyway — the whole query plan ran
    *  as broadcast hash joins with the BF build as pure overhead
    *  (semi_reduce 0.68–0.86×, q06 0.76–0.87× in the broadcast regime
-   *  across r08/r09 runs). 1.0 = the pre-margin behavior; the shuffle
-   *  regime (threshold -1) is unaffected at any value. */
-  val BROADCAST_CONVERSION_MARGIN = "spark.graft.rpt.broadcastConversionMargin"
+   *  across r08/r09 runs). The shuffle regime (threshold -1) is
+   *  unaffected. A fixed cost-model term, not a setting: the threshold
+   *  it multiplies is the knob. */
+  val BroadcastConversionMargin: Double = 4.0
   /** Join-graph edge count at and above which the broadcast-skip gate is
    *  bypassed entirely: on deep graphs a transferred reduction compounds
    *  through every downstream join, and a broadcast hash join still
@@ -118,12 +121,12 @@ object RptConf {
    *  the measured scales (6M neutral-to-losing, 60M winning). At 100 TB
    *  every fact probe clears it (matching the reference, whose transfers
    *  don't consult join strategy at all). */
-  val DEEP_PLAN_PROBE_ROWS = "spark.graft.rpt.deepPlanProbeRows"
+  val DeepPlanProbeRows: Long = 16777216L
   /** Keep-fraction ceiling for the probe-volume bypass, refining
-   *  [[DEEP_PLAN_PROBE_ROWS]]: an op only BYPASSES the broadcast-skip
+   *  [[DeepPlanProbeRows]]: an op only BYPASSES the broadcast-skip
    *  gate when its build's estimated static keep fraction is NOT
    *  measured at or above this (stricter than the general
-   *  [[MAX_BUILD_KEEP_FRACTION]] 0.8). The bypass is the aggressive
+   *  [[MaxBuildKeepFraction]] 0.8). The bypass is the aggressive
    *  exception path — it transfers where the join-strategy argument says
    *  not to, betting that per-row downstream savings amortize the
    *  subquery overhead — and that bet only pays when the probe actually
@@ -138,8 +141,8 @@ object RptConf {
    *  unestimable ones get the benefit of the doubt, preserving the
    *  equality-cascade wins. Sf10 is unaffected: at that scale build
    *  sides exceed the broadcast ceiling and ops transfer without
-   *  consulting the bypass at all. 1.0 disables this refinement. */
-  val DEEP_PLAN_BYPASS_KEEP = "spark.graft.rpt.deepPlanBypassKeepFraction"
+   *  consulting the bypass at all. */
+  val DeepPlanBypassKeepFraction: Double = 0.5
   /** Planning-time total-work floor — the payoff gate Spark needs and the
    *  reference does not: every transfer wave here costs a fixed overhead
    *  (a build-subquery stage launch + its result broadcast, plus a SECOND
@@ -241,11 +244,11 @@ object RptConf {
    *  small filtered probes is the loser class). Default 0.35: above
    *  every measured loser filter (≤0.3) and below the weak bridge/hub
    *  predicates that must keep probing (≥0.45). */
-  val FILTERED_PROBE_MAX_KEEP = "spark.graft.rpt.filteredProbeMaxKeep"
+  val FilteredProbeMaxKeep: Double = 0.35
   /** Mid-scale EXTENSION of the banked-filter stand-down: a filtered
    *  probe site whose scan volume is past the base ceiling
    *  ([[FILTERED_PROBE_WAVE_MULTIPLE]] waves) but under base ×
-   *  [[FILTERED_PROBE_EXTEND_FACTOR]] still banks when its MEASURED
+   *  [[FilteredProbeExtendFactor]] still banks when its MEASURED
    *  post-filter volume (keep fraction × scan bytes) stays under
    *  [[FILTERED_PROBE_KEPT_WAVE_MULTIPLE]] waves' worth of bytes. The
    *  base ceiling's own justification ("at factor 2 the off-walls are 4×
@@ -266,13 +269,14 @@ object RptConf {
    *  unlike the base band's bank-on-prior; the exact count stays bounded
    *  by the band top. Past the band top nothing ever banks (the sf100
    *  14 GB facts are unreachable, and their filtered probes are measured
-   *  winners). 0 disables the extension (base-band behavior only). */
+   *  winners). 0 disables the extension (base-band behavior only) — the
+   *  one off switch: the band top below is fixed. */
   val FILTERED_PROBE_KEPT_WAVE_MULTIPLE =
     "spark.graft.rpt.filteredProbeKeptWaveMultiple"
   /** See [[FILTERED_PROBE_KEPT_WAVE_MULTIPLE]]: the extended band's top,
-   *  as a multiple of the base ceiling. */
-  val FILTERED_PROBE_EXTEND_FACTOR =
-    "spark.graft.rpt.filteredProbeExtendFactor"
+   *  as a multiple of the base ceiling (2 GB at the default wave and
+   *  base multiple). */
+  val FilteredProbeExtendFactor: Long = 4L
   /** Skip ops whose BUILD side exceeds this estimated cardinality —
    *  building a bloom filter over a huge side costs more than the probe
    *  saves (mirrors runtime.bloomFilter.creationSideThreshold). */
@@ -291,32 +295,26 @@ object RptConf {
    *  cap exists here only because Spark's subquery build is a SECOND
    *  scan. Making it probe-relative restores the reference's behavior
    *  exactly where it pays. Admitted-over-absolute builds size their
-   *  bloom filter by BIG_BUILD_MAX_BF_ITEMS, not MAX_BF_ITEMS (a 10M-key
+   *  bloom filter by [[BigBuildMaxBfItems]], not MAX_BF_ITEMS (a 10M-key
    *  build in a 4M-item filter saturates to a pass-through). The probe
    *  card is the EFFECTIVE one when the probe is a statically-filtered
    *  simple scan in the banked gate's extended band with a MEASURED keep
    *  (card x keep — JOBREAL_F2_r17 part 3: an 8.3M-item name build rode
    *  in on cast_info's raw 72.5M rows while its own filter keeps ~10%);
-   *  out-of-band probes (sf100's 14 GB facts) keep raw pricing. 0
+   *  out-of-band probes (sf100's 14 GB facts) keep raw pricing, and
+   *  keptMult=0 ([[FILTERED_PROBE_KEPT_WAVE_MULTIPLE]]) turns the
+   *  effective pricing off with the rest of the extended band. 0
    *  disables (absolute cap only). */
   val BIG_BUILD_PROBE_FRACTION = "spark.graft.rpt.bigBuildProbeFraction"
   /** Bloom-filter item cap for builds admitted through the probe-relative
    *  path (see BIG_BUILD_PROBE_FRACTION). 32M items = 32MB at the 8
    *  bits/key Spark sizes to — the torrent-broadcast class, paid only
    *  when the probe is >= 8× bigger. GraftSession raises Spark's own
-   *  runtime.bloomFilter.maxNumItems/maxNumBits to match (the stock 4M /
-   *  64Mbit caps are hard `require`s in BloomFilterAggregate); the rule
-   *  still clamps to the live session values so a user lowering them
-   *  cannot trip the require. */
-  val BIG_BUILD_MAX_BF_ITEMS = "spark.graft.rpt.bigBuildMaxBfItems"
-  /** Whether the probe-relative admission prices a statically-filtered
-   *  simple-scan probe in the banked gate's extended band at its MEASURED
-   *  post-filter cardinality (see BIG_BUILD_PROBE_FRACTION). true
-   *  (default) = effective-card pricing; false = raw-card pricing (the
-   *  r17 behavior). Exists so the admission can be measured in isolation
-   *  — every other extension switch (keptMult=0, extendFactor=0) turns
-   *  off banking and the budget discount with it. */
-  val BIG_BUILD_EFFECTIVE_CARD = "spark.graft.rpt.bigBuildEffectiveCard"
+   *  runtime.bloomFilter.maxNumItems/maxNumBits from this value (the
+   *  stock 4M / 64Mbit caps are hard `require`s in BloomFilterAggregate);
+   *  the rule still clamps to the live session values so a user lowering
+   *  them cannot trip the require. */
+  val BigBuildMaxBfItems: Long = 33554432L
   /** Skip ops where build.card * ratio > probe.card. The reference's
    *  materializing CREATE_BF piggybacks the build on a scan the query
    *  performs anyway (physical_create_bf.cpp:201-242); Spark's subquery
@@ -344,9 +342,9 @@ object RptConf {
    *  `s_acctbal > 0` keeps ~90% of suppliers and measured 0.90×). Keep
    *  fractions come from CBO filter estimates (with ANALYZE'd column
    *  stats) or the default-path footer min/max estimate
-   *  ([[FOOTER_KEEP_GATE]]). `1.0` disables the gate entirely. */
-  val MAX_BUILD_KEEP_FRACTION = "spark.graft.rpt.maxBuildKeepFraction"
-  /** Estimate build keep fractions for the [[MAX_BUILD_KEEP_FRACTION]]
+   *  ([[FOOTER_KEEP_GATE]]), which is also the gate's off switch. */
+  val MaxBuildKeepFraction: Double = 0.8
+  /** Estimate build keep fractions for the [[MaxBuildKeepFraction]]
    *  gate from parquet footer column min/max statistics under a uniform-
    *  distribution assumption (the System R estimator) — the only stats
    *  source live on the DEFAULT path, where path-based parquet reads have
@@ -420,7 +418,7 @@ object RptConf {
    *  its pushed BF filters in `SelectivityOptionalFilter(1, 1000000)`
    *  (physical_create_bf.cpp:326-328): each partition samples its own
    *  spliced bloom probe and, once [[ADAPTIVE_PROBE_SAMPLE]] rows measured
-   *  a keep-rate ≥ [[ADAPTIVE_PROBE_KEEP]], stops evaluating it
+   *  a keep-rate ≥ [[AdaptiveProbeKeepThreshold]], stops evaluating it
    *  (pass-through; superset-safe, so results are unchanged — see
    *  [[AdaptiveProbe]]). This recovers most of an unselective probe's
    *  cost on the first run. Partitions smaller than
@@ -451,9 +449,35 @@ object RptConf {
    *  within ±0.3% and leaves the rest of the partition's savings on the
    *  table at every realistic partition size (default 65536). */
   val ADAPTIVE_PROBE_SAMPLE = "spark.graft.rpt.adaptiveProbeSampleRows"
-  /** Keep-rate at or above which the sampled probe latches off
-   *  (default 0.98: the probe removed ≤2% of rows). */
-  val ADAPTIVE_PROBE_KEEP = "spark.graft.rpt.adaptiveProbeKeepThreshold"
+  /** Keep-rate at or above which the sampled probe latches off (the
+   *  probe removed ≤2% of rows). */
+  val AdaptiveProbeKeepThreshold: Double = 0.98
+
+  /** Every `spark.graft.rpt.*` key declared above (defined after them:
+   *  object vals initialize in order). */
+  val Keys: Set[String] = Set(ENABLED, HEURISTIC, PASS_MODE, FILTER_TYPE,
+    MIN_EDGES, DISPLAY_DAG, PROFILING, DISPLAY_PHYSICAL_DAG, FLIP_ROOTS,
+    MIN_PROBE_ROWS, FILTERED_BUILDS_ONLY, SKIP_BROADCASTABLE_BUILDS,
+    DEEP_PLAN_EDGES, WAVE_COST_BYTES, MIN_PLAN_WORK_BYTES,
+    WAVE_WORK_FRACTION, WAVE_BUILD_FRACTION, FILTERED_PROBE_WAVE_MULTIPLE,
+    FILTERED_PROBE_KEPT_WAVE_MULTIPLE, MAX_BUILD_ROWS,
+    BIG_BUILD_PROBE_FRACTION, MIN_BUILD_PROBE_RATIO, FAIL_FAST, MAX_BF_ITEMS,
+    DEFAULT_BF_ITEMS, FOOTER_KEEP_GATE, V2_SCAN_FILTER,
+    V2_SCAN_FILTER_MAX_BUILD_ROWS, V2_QUANTIZED_OVER_CAP, V2_QUANT_BUCKETS,
+    ADAPTIVE_PROBE, ADAPTIVE_PROBE_SAMPLE)
+  private val Prefix = "spark.graft.rpt."
+
+  /** Raise on a set `spark.graft.rpt.*` key that is not in [[Keys]]: a
+   *  misspelled or removed setting would otherwise change nothing,
+   *  silently — the same contract as an unknown value (see `normalized`),
+   *  and DuckDB's answer to an unknown setting. */
+  def requireDeclared(conf: SQLConf): Unit =
+    conf.getAllConfs.keysIterator
+      .find(k => k.startsWith(Prefix) && !Keys(k))
+      .foreach { k =>
+        throw new IllegalArgumentException(
+          s"$k is not a $Prefix* setting (removed or misspelled)")
+      }
 
   /** Accept both camelCase and the reference's snake_case spellings
    *  (`bf_only` == `bfOnly`); unknown values raise rather than silently
@@ -489,14 +513,8 @@ object RptConf {
     conf.getConfString(FILTERED_BUILDS_ONLY, "true").toBoolean
   def skipBroadcastableBuilds(conf: SQLConf): Boolean =
     conf.getConfString(SKIP_BROADCASTABLE_BUILDS, "true").toBoolean
-  def broadcastConversionMargin(conf: SQLConf): Double =
-    conf.getConfString(BROADCAST_CONVERSION_MARGIN, "4.0").toDouble
   def deepPlanEdges(conf: SQLConf): Int =
     conf.getConfString(DEEP_PLAN_EDGES, "6").toInt
-  def deepPlanProbeRows(conf: SQLConf): Long =
-    conf.getConfString(DEEP_PLAN_PROBE_ROWS, "16777216").toLong
-  def deepPlanBypassKeep(conf: SQLConf): Double =
-    conf.getConfString(DEEP_PLAN_BYPASS_KEEP, "0.5").toDouble
   def failFast(conf: SQLConf): Boolean =
     conf.getConfString(FAIL_FAST, "false").toBoolean
   def waveCostBytes(conf: SQLConf): Long =
@@ -509,28 +527,18 @@ object RptConf {
     conf.getConfString(WAVE_BUILD_FRACTION, "0.5").toDouble
   def filteredProbeWaveMultiple(conf: SQLConf): Long =
     conf.getConfString(FILTERED_PROBE_WAVE_MULTIPLE, "64").toLong
-  def filteredProbeMaxKeep(conf: SQLConf): Double =
-    conf.getConfString(FILTERED_PROBE_MAX_KEEP, "0.35").toDouble
   def filteredProbeKeptWaveMultiple(conf: SQLConf): Long =
     conf.getConfString(FILTERED_PROBE_KEPT_WAVE_MULTIPLE, "8").toLong
-  def filteredProbeExtendFactor(conf: SQLConf): Long =
-    conf.getConfString(FILTERED_PROBE_EXTEND_FACTOR, "4").toLong
   def maxBuildRows(conf: SQLConf): Long =
     conf.getConfString(MAX_BUILD_ROWS, "8000000").toLong
   def bigBuildProbeFraction(conf: SQLConf): Double =
     conf.getConfString(BIG_BUILD_PROBE_FRACTION, "0.125").toDouble
-  def bigBuildMaxBfItems(conf: SQLConf): Long =
-    conf.getConfString(BIG_BUILD_MAX_BF_ITEMS, "33554432").toLong
-  def bigBuildEffectiveCard(conf: SQLConf): Boolean =
-    conf.getConfString(BIG_BUILD_EFFECTIVE_CARD, "true").toBoolean
   def minBuildProbeRatio(conf: SQLConf): Double =
     conf.getConfString(MIN_BUILD_PROBE_RATIO, "1.0").toDouble
   def maxBfItems(conf: SQLConf): Long =
     conf.getConfString(MAX_BF_ITEMS, "4000000").toLong
   def defaultBfItems(conf: SQLConf): Long =
     conf.getConfString(DEFAULT_BF_ITEMS, "1000000").toLong
-  def maxBuildKeepFraction(conf: SQLConf): Double =
-    conf.getConfString(MAX_BUILD_KEEP_FRACTION, "0.8").toDouble
   def footerKeepGate(conf: SQLConf): Boolean =
     conf.getConfString(FOOTER_KEEP_GATE, "true").toBoolean
   def v2ScanFilter(conf: SQLConf): Boolean =
@@ -545,6 +553,4 @@ object RptConf {
     conf.getConfString(ADAPTIVE_PROBE, "true").toBoolean
   def adaptiveProbeSample(conf: SQLConf): Long =
     conf.getConfString(ADAPTIVE_PROBE_SAMPLE, "65536").toLong
-  def adaptiveProbeKeep(conf: SQLConf): Double =
-    conf.getConfString(ADAPTIVE_PROBE_KEEP, "0.98").toDouble
 }

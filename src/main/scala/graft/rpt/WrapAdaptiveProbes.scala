@@ -42,7 +42,7 @@ case class WrapAdaptiveProbes() extends Rule[SparkPlan] with PredicateHelper {
   override def apply(plan: SparkPlan): SparkPlan = {
     if (!RptConf.adaptiveProbeDrop(conf)) return plan
     val sample = RptConf.adaptiveProbeSample(conf)
-    val keep = RptConf.adaptiveProbeKeep(conf)
+    val keep = RptConf.AdaptiveProbeKeepThreshold
     def wrapConjunct(e: Expression): Expression = e match {
       case a: AdaptiveProbe => a
       case b: BloomFilterMightContain => AdaptiveProbe(b, sample, keep)

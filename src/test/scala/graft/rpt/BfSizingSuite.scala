@@ -148,8 +148,7 @@ class BfSizingSuite extends SparkTestBase {
         |WHERE p_size < 10""".stripMargin
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.FOOTER_KEEP_GATE -> "true",
-      RptConf.MAX_BUILD_KEEP_FRACTION -> "0.8") {
+      RptConf.FOOTER_KEEP_GATE -> "true") {
       def buildTables(sql: String): Set[String] =
         RptTestHelpers.buildTables(spark, sql)
       // supplier's keep-everything range is measured out; orders'
@@ -249,8 +248,7 @@ class BfSizingSuite extends SparkTestBase {
       RptConf.MIN_PLAN_WORK_BYTES -> "0",
       RptConf.WAVE_COST_BYTES -> "1",
       RptConf.WAVE_BUILD_FRACTION -> "0.0",
-      RptConf.FILTERED_PROBE_WAVE_MULTIPLE -> (liBytes / 2).toString,
-      RptConf.FILTERED_PROBE_EXTEND_FACTOR -> "4")
+      RptConf.FILTERED_PROBE_WAVE_MULTIPLE -> (liBytes / 2).toString)
     // keptMult=1: band active, but the kept volume (~4% x scan) is over
     // the 1-byte kept ceiling so the site is NOT banked — what this test
     // sees is purely the admission pricing
@@ -265,15 +263,6 @@ class BfSizingSuite extends SparkTestBase {
     withConf(base :+ (RptConf.FILTERED_PROBE_KEPT_WAVE_MULTIPLE -> "0"): _*) {
       assert(bfAggs(sql).nonEmpty,
         "keptMult=0 must restore raw-card probe-relative admission")
-    }
-    // the admission's own isolation flag: raw-card pricing WITHOUT
-    // touching banking or the budget discount (for A/B measurement)
-    withConf(base ++ Seq(
-      RptConf.FILTERED_PROBE_KEPT_WAVE_MULTIPLE -> "1",
-      RptConf.BIG_BUILD_EFFECTIVE_CARD -> "false"): _*) {
-      assert(bfAggs(sql).nonEmpty,
-        "bigBuildEffectiveCard=false must restore raw-card admission " +
-          "with the extension otherwise active")
     }
     for (t <- Seq("lineitem", "orders"))
       spark.catalog.dropTempView(s"eff_$t")

@@ -81,8 +81,7 @@ class CboGateSuite extends SparkTestBase {
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       RptConf.MIN_PROBE_ROWS -> "0",
-      RptConf.FOOTER_KEEP_GATE -> "true",
-      RptConf.MAX_BUILD_KEEP_FRACTION -> "0.8") {
+      RptConf.FOOTER_KEEP_GATE -> "true") {
       assert(!buildTables(chain).contains("supplier"),
         "weak supplier build must stand down under the keep-fraction gate")
       // find the lineitem-build subquery and check nation rides inside it

@@ -92,15 +92,6 @@ class FilteredProbeSuite extends SparkTestBase {
     val weak = withConf(gateOn: _*) { plannedBuilds(weakFilterSql) }
     assert(weak > 0, "a weak probe filter (keeps over maxKeep) banks " +
       "nothing and must keep its transfers")
-    // lifting the keep ceiling past any possible estimate (a filter the
-    // footers price at keep=1.0 still reads "< 2.0") banks every
-    // filtered site
-    val forced = withConf(
-      (gateOn :+ (RptConf.FILTERED_PROBE_MAX_KEEP -> "2.0")): _*) {
-      plannedBuilds(weakFilterSql)
-    }
-    assert(forced == 0,
-      "maxKeep past 1.0 must bank every small filtered probe site")
   }
 
   test("scale escape: a probed unit past the byte threshold keeps probes") {
@@ -127,15 +118,15 @@ class FilteredProbeSuite extends SparkTestBase {
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .queryExecution.optimizedPlan.stats.sizeInBytes.toLong
 
-  private def extBandConf(keptMult: Long, extendF: Long = 4) = Seq(
+  private def extBandConf(keptMult: Long) = Seq(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     RptConf.MIN_PLAN_WORK_BYTES -> "0",
     RptConf.WAVE_COST_BYTES -> "1",
     RptConf.WAVE_BUILD_FRACTION -> "0.0",
-    // base = bytes/2 < bytes < 2x bytes = band top (extendFactor 4)
+    // base = bytes/2 < bytes < 2x bytes = band top
+    // (RptConf.FilteredProbeExtendFactor 4)
     RptConf.FILTERED_PROBE_WAVE_MULTIPLE -> (lineitemBytes / 2).toString,
-    RptConf.FILTERED_PROBE_KEPT_WAVE_MULTIPLE -> keptMult.toString,
-    RptConf.FILTERED_PROBE_EXTEND_FACTOR -> extendF.toString)
+    RptConf.FILTERED_PROBE_KEPT_WAVE_MULTIPLE -> keptMult.toString)
 
   test("extended band: strong measured keep with tiny kept volume banks") {
     // l_quantity < 3 keeps ~4% -> kept bytes ~0.04 x scan, far under a
@@ -158,30 +149,24 @@ class FilteredProbeSuite extends SparkTestBase {
       "the kept ceiling must keep its transfers")
   }
 
-  test("extended band: extension disabled (factor 0) never banks there") {
-    val kept = withConf(extBandConf(keptMult = lineitemBytes, extendF = 0): _*) {
-      plannedBuilds(filteredProbeSql)
-    }
-    assert(kept > 0,
-      "extendFactor=0 must restore base-band-only behavior")
-  }
-
   test("extended band: keptMult=0 is a full off-switch (banks nothing)") {
-    // FILTERED_PROBE_KEPT_WAVE_MULTIPLE=0 must restore base-band-only
-    // behavior exactly like extendFactor=0 — before r18, keptMult=0
-    // stopped banking but the effective-bytes budget discount (and now
-    // the effective-card admission) still keyed off the band
+    // FILTERED_PROBE_KEPT_WAVE_MULTIPLE=0 must plan exactly like a probe
+    // past the band top, where no extended-band rule reaches — before
+    // r18, keptMult=0 stopped banking but the effective-bytes budget
+    // discount (and now the effective-card admission) still keyed off
+    // the band
     val kept = withConf(extBandConf(keptMult = 0): _*) {
       plannedBuilds(filteredProbeSql)
     }
     assert(kept > 0,
       "keptMult=0 must restore base-band-only behavior")
-    val asExtOff = withConf(
-      extBandConf(keptMult = lineitemBytes, extendF = 0): _*) {
+    // base = bytes/8 -> band top = 4 x base = bytes/2 < bytes
+    val pastTop = withConf(extBandConf(keptMult = lineitemBytes) :+
+        (RptConf.FILTERED_PROBE_WAVE_MULTIPLE -> (lineitemBytes / 8).toString): _*) {
       plannedBuilds(filteredProbeSql)
     }
-    assert(kept == asExtOff,
-      s"keptMult=0 ($kept builds) must match extendFactor=0 ($asExtOff)")
+    assert(kept == pastTop,
+      s"keptMult=0 ($kept builds) must match a probe past the band top ($pastTop)")
   }
 
   test("extended band: unknown keep does NOT bank (base-band prior only)") {

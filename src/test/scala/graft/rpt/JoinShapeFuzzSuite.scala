@@ -403,15 +403,12 @@ class JoinShapeFuzzSuite extends SparkTestBase {
                 RptConf.V2_SCAN_FILTER_MAX_BUILD_ROWS -> "-1",
                 RptConf.V2_QUANTIZED_OVER_CAP -> "false")
               case 1 => Seq( // banked-filter LADDER: banking stands down
-                // filtered probe sites; the ladder spans default through
-                // bank-everything (huge multiple + keep threshold 1.0,
-                // so any measured keep banks). Zero-probe plans are
-                // legal; the slice counters assert the ladder doesn't
-                // suppress every plan
+                // filtered probe sites; the ladder spans the default
+                // multiple through a huge one that banks every strongly
+                // filtered site. Zero-probe plans are legal; the slice
+                // counters assert the ladder doesn't suppress every plan
                 RptConf.FILTERED_PROBE_WAVE_MULTIPLE ->
-                  Seq("64", "1048576")(seed % 2),
-                RptConf.FILTERED_PROBE_MAX_KEEP ->
-                  Seq("0.35", "1.0")(seed / 2 % 2))
+                  Seq("64", "1048576")(seed % 2))
               case 2 => Seq( // quantized over-cap alone (default-on path):
                 // every build over the cap, anchors through the DPS channel
                 RptConf.V2_SCAN_FILTER_MAX_BUILD_ROWS -> "-1")

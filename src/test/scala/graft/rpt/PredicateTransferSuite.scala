@@ -380,24 +380,23 @@ class PredicateTransferSuite extends SparkTestBase {
   }
 
   test("broadcastConversionMargin widens the skip to joins AQE will convert") {
-    // threshold set to half the orders unit's static size: under the bare
-    // threshold compare (margin 1) orders is "too big to broadcast" and
-    // transfers toward lineitem; with the default conversion margin the
-    // gate recognizes the join's smaller input sits within AQE's runtime
-    // broadcast-conversion range and stands the whole schedule down
+    // threshold at half the orders unit's static size: orders exceeds the
+    // bare threshold, but with the conversion margin (4x) the gate
+    // recognizes the join's smaller input sits within AQE's runtime
+    // broadcast-conversion range and stands the whole schedule down. At
+    // an eighth, orders lies outside 4x the threshold and must transfer
+    // toward lineitem.
     val so = spark.table("orders").queryExecution.optimizedPlan.stats.sizeInBytes
-    val thresh = (so / 2).max(1).toString
-    def probes(): Int = "might_contain".r.findAllIn(
-      spark.sql(queries("chain5")).queryExecution.optimizedPlan.toString).length
-    withConf(RptConf.ENABLED -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> thresh) {
-      assert(probes() == 0,
-        "default margin: joins within the conversion range must not transfer")
-      withConf(RptConf.BROADCAST_CONVERSION_MARGIN -> "1.0") {
-        assert(probes() > 0,
-          "margin 1: orders exceeds the bare threshold and must transfer")
+    def probes(thresh: BigInt): Int =
+      withConf(RptConf.ENABLED -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> thresh.max(1).toString) {
+        "might_contain".r.findAllIn(spark.sql(queries("chain5"))
+          .queryExecution.optimizedPlan.toString).length
       }
-    }
+    assert(probes(so / 2) == 0,
+      "joins within the conversion range must not transfer")
+    assert(probes(so / 8) > 0,
+      "orders outside the conversion range must transfer")
   }
 
   test("deep plans keep transferring where the conversion margin stands shallow ones down") {

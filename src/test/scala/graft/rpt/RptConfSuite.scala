@@ -58,14 +58,9 @@ class RptConfSuite extends SparkTestBase {
       assert(!RptConf.filteredBuildsOnly(sqlConf))
       assert(!RptConf.skipBroadcastableBuilds(sqlConf))
     }
-    // broadcast-conversion margin: default 4x with the deep-plan fallback
-    // at 6 edges; margin 1.0 restores the bare threshold compare
-    assert(RptConf.broadcastConversionMargin(sqlConf) == 4.0)
+    // the broadcast skip's deep-plan fallback at 6 edges
     assert(RptConf.deepPlanEdges(sqlConf) == 6)
-    withConf(
-      RptConf.BROADCAST_CONVERSION_MARGIN -> "1.0",
-      RptConf.DEEP_PLAN_EDGES -> "99") {
-      assert(RptConf.broadcastConversionMargin(sqlConf) == 1.0)
+    withConf(RptConf.DEEP_PLAN_EDGES -> "99") {
       assert(RptConf.deepPlanEdges(sqlConf) == 99)
     }
     // total-work floor: waveCostBytes=0 is the reference-faithful master
@@ -78,5 +73,51 @@ class RptConfSuite extends SparkTestBase {
       assert(RptConf.waveBuildFraction(sqlConf) == 0.5)
     }
     assert(RptConf.waveCostBytes(sqlConf) == 0L) // test-session override
+  }
+
+  test("undeclared spark.graft.rpt keys raise; every declared key is accepted") {
+    // settings that are now fixed cost-model terms in RptConf: a script
+    // still setting one would otherwise change nothing, silently
+    val removed = Seq("broadcastConversionMargin", "deepPlanProbeRows",
+      "deepPlanBypassKeepFraction", "maxBuildKeepFraction",
+      "filteredProbeMaxKeep", "filteredProbeExtendFactor",
+      "bigBuildEffectiveCard", "bigBuildMaxBfItems",
+      "adaptiveProbeKeepThreshold").map("spark.graft.rpt." + _)
+    for (key <- removed) {
+      assert(!RptConf.Keys(key))
+      withConf(RptConf.ENABLED -> "true", key -> "1") {
+        val e = intercept[IllegalArgumentException] {
+          spark.sql("SELECT count(*) FROM orders JOIN lineitem " +
+            "ON o_orderkey = l_orderkey").queryExecution.optimizedPlan
+        }
+        assert(e.getMessage.contains(key), e.getMessage)
+      }
+    }
+    // the check runs only while the rule is on
+    withConf(RptConf.ENABLED -> "false", removed.head -> "1") {
+      spark.sql("SELECT 1").queryExecution.optimizedPlan
+    }
+    val all = new org.apache.spark.sql.internal.SQLConf
+    RptConf.Keys.foreach(all.setConfString(_, "x"))
+    RptConf.requireDeclared(all)
+  }
+
+  test("the README settings table lists exactly the declared keys") {
+    val readme = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), "README.md"))
+    val table = readme.linesIterator
+      .dropWhile(!_.startsWith("## Settings"))
+      .drop(1).takeWhile(!_.startsWith("## "))
+      .filter(l => l.startsWith("| `"))
+      .toSeq
+    val documented = table.flatMap { row =>
+      "`([A-Za-z0-9]+)`".r.findAllMatchIn(row.split('|')(1))
+        .map("spark.graft.rpt." + _.group(1))
+    }
+    assert(documented.size == documented.distinct.size,
+      s"README lists a key twice: ${documented.diff(documented.distinct)}")
+    assert(documented.toSet == RptConf.Keys,
+      s"README only: ${documented.toSet -- RptConf.Keys}; " +
+        s"RptConf only: ${RptConf.Keys -- documented.toSet}")
   }
 }
