@@ -33,6 +33,12 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
         (rpt.RptConf.BigBuildMaxBfItems * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // generated-code cache (a static conf, read once per JVM): the stock
+      // 100 entries are fewer than one pass over the registry's query
+      // families compiles, so each query recompiled its generated classes
+      // unless it had just run (first execution of a rule off/on pair
+      // 1.19x the second; 1.00x at 2000 entries)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // events.parquet carries TIMESTAMP(NANOS); read as long, converted in
       // loadTables (Spark has no nanosecond timestamp type)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

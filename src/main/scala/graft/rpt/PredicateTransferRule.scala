@@ -42,7 +42,11 @@ import org.apache.spark.sql.internal.SQLConf
  * bloom-filter aggregates per task, merged at a single final aggregate) and
  * its result is broadcast to every executor evaluating the filter. Spark's
  * ReuseSubquery dedupes the repeated subquery instances that arise when one
- * build feeds several probes.
+ * build feeds several probes. Under AQE, a build over a side the physical
+ * plan already broadcasts does not re-scan it: [[ResolveBroadcastBuilds]]
+ * drops the probe when the broadcast hash join above it enforces the same
+ * semi-join, and otherwise reads the filter from the broadcast relation.
+ * This rule's logical plan is the same either way.
  */
 case class PredicateTransferRule() extends Rule[LogicalPlan]
     with PredicateHelper {

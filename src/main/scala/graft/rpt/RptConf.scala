@@ -66,14 +66,21 @@ object RptConf {
    *  (src/transfer_graph_manager.hpp:103-114). `false` =
    *  reference-faithful (transfer on every edge). */
   val FILTERED_BUILDS_ONLY = "spark.graft.rpt.filteredBuildsOnly"
-  /** Skip ops whose build side is small enough to be broadcast
-   *  (sizeInBytes <= spark.sql.autoBroadcastJoinThreshold): the broadcast
-   *  hash join probes its hash table in the SAME codegen stage as the
-   *  probe-side scan, so a bloom filter in front of it saves nothing and
-   *  still pays its build (measured: geomean 0.67x with broadcast joins,
-   *  i.e. pure regression). Spark's own InjectRuntimeFilter gates on
-   *  probable-shuffle-join identically. In the shuffle regime (threshold
-   *  -1, or big build sides at cluster scale) this gate never fires. */
+  /** Skip ops whose build–probe JOIN is expected to run as a broadcast
+   *  join: the gate compares the join's SMALLER input (planning-time
+   *  sizeInBytes) with spark.sql.autoBroadcastJoinThreshold ×
+   *  [[BroadcastConversionMargin]], since AQE converts on runtime sizes
+   *  the static estimate overstates. A broadcast hash join probes its
+   *  hash table in the SAME codegen stage as the probe-side scan, so a
+   *  bloom filter in front of it saves nothing and still pays its build
+   *  (measured: geomean 0.67x with broadcast joins, i.e. pure
+   *  regression). Spark's own InjectRuntimeFilter gates on
+   *  probable-shuffle-join identically. Deep plans bypass the gate: at
+   *  [[DEEP_PLAN_EDGES]] edges or more it does not apply at all, and at
+   *  half that an op whose probe has at least [[DeepPlanProbeRows]] rows
+   *  and whose build is not measured weak transfers regardless. In the
+   *  shuffle regime (threshold -1, or big build sides at cluster scale)
+   *  this gate never fires. */
   val SKIP_BROADCASTABLE_BUILDS = "spark.graft.rpt.skipBroadcastableBuilds"
   /** Margin for the broadcast-skip estimate: skip a transfer when the
    *  build–probe JOIN's smaller input has sizeInBytes <=
@@ -148,6 +155,10 @@ object RptConf {
    *  (a build-subquery stage launch + its result broadcast, plus a SECOND
    *  scan of the build side), where the reference re-emits materialized
    *  chunks in-process at ~zero cost (physical_create_bf.cpp:441-557).
+   *  Only builds over a side the plan already broadcasts escape that cost
+   *  ([[ResolveBroadcastBuilds]] drops or re-reads them at execution);
+   *  this planning-time gate cannot see which those are and prices every
+   *  wave alike.
    *  On a sub-second query those fixed costs can never amortize no matter
    *  how selective the probes are (JOBREAL_r14: 8-12 planned waves inside
    *  1 s queries measured 0.3-0.5x), while the SAME shapes win 1.6-2.7x
@@ -318,8 +329,9 @@ object RptConf {
   /** Skip ops where build.card * ratio > probe.card. The reference's
    *  materializing CREATE_BF piggybacks the build on a scan the query
    *  performs anyway (physical_create_bf.cpp:201-242); Spark's subquery
-   *  build is a SECOND scan of the build side, so a build larger than its
-   *  probe target can never pay for itself here. Default 1.0 (build must
+   *  build is a SECOND scan of the build side (unless the plan broadcasts
+   *  that side — see [[ResolveBroadcastBuilds]]), so a build larger than
+   *  its probe target can never pay for itself here. Default 1.0 (build must
    *  be no larger than the probe side — in practice this keeps the full
    *  forward leaves-to-root pass and prunes backward ops whose build is
    *  the big root). 0 disables the gate (reference-faithful: it schedules

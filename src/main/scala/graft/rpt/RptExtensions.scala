@@ -46,6 +46,13 @@ class RptExtensions extends (SparkSessionExtensions => Unit) {
             org.apache.spark.sql.execution.SparkPlan] =
         StripNoOpRuntimeFilters()
     })
+    // bloom builds over a side the plan already broadcasts: drop the probe
+    // its own hash join enforces, or build the filter from the broadcast
+    // relation instead of scanning the side again (see the rule's
+    // scaladoc). A stage-preparation rule, so it sees every broadcast
+    // exchange of the plan before any stage runs; non-adaptive plans keep
+    // their aggregate builds.
+    ext.injectQueryStagePrepRule(_ => ResolveBroadcastBuilds())
     // within-query adaptive probe drop: wrap spliced might_contain probes
     // at PHYSICAL planning (a logical wrap duplicated every build subquery
     // into the scan's dataFilters — see WrapAdaptiveProbes scaladoc).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.execution.{BaseSubqueryExec, FilterExec, QueryExecution, ReusedSubqueryExec, ScalarSubquery => ExecScalarSubquery, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.graft.BroadcastBloomBuildExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
@@ -31,8 +32,18 @@ object RptProfiling {
       if (rowsIn <= 0) 1.0 else rowsOut.toDouble / rowsIn.toDouble
   }
 
+  /** One executed build. `source` is [[BuildStat.Aggregate]] for a
+   *  `bloom_filter_agg` subquery that scans its build side, or
+   *  [[BuildStat.Broadcast]] for a filter read from a broadcast the query
+   *  already holds ([[BroadcastBloomBuildExec]]). */
   final case class BuildStat(
-      name: String, collectMs: Long, dataBytes: Long, reused: Boolean)
+      name: String, collectMs: Long, dataBytes: Long, reused: Boolean,
+      source: String = BuildStat.Aggregate)
+
+  object BuildStat {
+    val Aggregate = "aggregate"
+    val Broadcast = "broadcast"
+  }
 
   /** Collect per-probe-filter rows in/out (+ enclosing codegen-stage time)
    *  from executed-plan metrics. Valid after an action. */
@@ -93,7 +104,9 @@ object RptProfiling {
           b.schema.fieldNames.head,
           b.metrics.get("collectTime").map(_.value).getOrElse(-1L),
           b.metrics.get("dataSize").map(_.value).getOrElse(-1L),
-          reused)
+          reused,
+          if (b.isInstanceOf[BroadcastBloomBuildExec]) BuildStat.Broadcast
+          else BuildStat.Aggregate)
       }
     }
     def walk(p: SparkPlan): Unit = {
@@ -124,7 +137,10 @@ object RptProfiling {
    *  rpt_profiling.hpp:122-216). */
   def report(qe: QueryExecution): String = {
     val stats = probeStats(qe)
-    if (stats.isEmpty) return "rpt: no transfer filters in this plan"
+    val dropped = ResolveBroadcastBuilds.droppedProbes(qe.executedPlan)
+    if (stats.isEmpty) {
+      return s"rpt: no transfer filters in this plan, $dropped dropped probes"
+    }
     val sb = new StringBuilder("rpt probe filters (rows in -> out):\n")
     stats.zipWithIndex.foreach { case (s, i) =>
       val stage = if (s.stageMs >= 0) f"${s.stageMs}%,6d ms stage" else "      --"
@@ -136,7 +152,7 @@ object RptProfiling {
       builds.zipWithIndex.foreach { case (b, i) =>
         val t = if (b.collectMs >= 0) f"${b.collectMs}%,6d ms" else "    --"
         val bytes = if (b.dataBytes >= 0) f"${b.dataBytes}%,d B" else "--"
-        sb.append(f"  #$i%2d ${b.name}%-24s $t  $bytes\n")
+        sb.append(f"  #$i%2d ${b.name}%-24s ${b.source}%-9s $t  $bytes\n")
       }
     }
     def geo(ss: Seq[ProbeStat]): Double = math.exp(
@@ -147,7 +163,7 @@ object RptProfiling {
       sb.append(f"  $p pass: ${ss.size} probes, geomean selectivity ${geo(ss) * 100}%.2f%%\n")
     }
     val buildMs = builds.map(_.collectMs).filter(_ >= 0).sum
-    sb.append(f"  overall: geomean selectivity ${geo(stats) * 100}%.2f%%, rows removed $removed%,d across ${stats.size} probes, ${builds.size} builds ($buildMs%,d ms build time)")
+    sb.append(f"  overall: geomean selectivity ${geo(stats) * 100}%.2f%%, rows removed $removed%,d across ${stats.size} probes, ${builds.size} builds ($buildMs%,d ms build time), $dropped dropped probes")
     sb.toString
   }
 

@@ -13,7 +13,11 @@ import graft.GraftSession
  * Per query and regime: rule-off result + wall, rule-on result + wall
  * (min of SPARK_GRAFT_BENCH_RUNS runs, warmup untimed), results REQUIRED
  * identical. One JSON line at the end (JOBREAL_JSON ...) with per-query
- * times and the differential geomean.
+ * times and the differential geomean. Each rule-on result execution also
+ * records how its bloom builds resolved ([[graft.rpt.ResolveBroadcastBuilds]]):
+ * probes dropped because a broadcast hash join enforces them, builds read
+ * from a broadcast, and aggregate builds — per query and summed per regime
+ * (the build census).
  *
  * Usage: SPARK_GRAFT_SF_DIR=<imdbDir> runMain graft.tools.JobReal
  *   SPARK_GRAFT_RPT_REGIMES=shuffle,broadcast  (default both)
@@ -91,11 +95,21 @@ object JobReal {
 
     // a MIN-aggregate query returns exactly one row; stringify with fixed
     // formatting so NULLs and numerics compare cleanly
-    def result(sql: String): String = {
-      val row = spark.sql(sql).collect()(0)
+    def result(df: org.apache.spark.sql.DataFrame): String = {
+      val row = df.collect()(0)
       (0 until row.length).map { i =>
         if (row.isNullAt(i)) "NULL" else String.valueOf(row.get(i))
       }.mkString("|")
+    }
+
+    /** (dropped probes, broadcast builds, aggregate builds) of an executed
+      * rule-on frame. */
+    def outcomes(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+      val qe = df.queryExecution
+      val bs = graft.rpt.RptProfiling.buildStats(qe).filterNot(_.reused)
+      val bc = bs.count(_.source == graft.rpt.RptProfiling.BuildStat.Broadcast)
+      (graft.rpt.ResolveBroadcastBuilds.droppedProbes(qe.executedPlan),
+        bc, bs.size - bc)
     }
 
     def time(sql: String): Double = {
@@ -121,9 +135,11 @@ object JobReal {
       val rows = queries.map { case (name, sql) =>
         spark.conf.set("spark.graft.rpt.enabled", "false")
         time(sql) // warmup, untimed
-        val offRes = result(sql)
+        val offRes = result(spark.sql(sql))
         spark.conf.set("spark.graft.rpt.enabled", "true")
-        val onRes = result(sql)
+        val onDf = spark.sql(sql)
+        val onRes = result(onDf)
+        val census = outcomes(onDf)
         if (onRes != offRes) {
           mismatches += s"$regime/$name: on=$onRes off=$offRes"
         }
@@ -134,15 +150,22 @@ object JobReal {
           val on = time(sql)
           (off, on)
         }.unzip
-        (name, offs.min, ons.min, offs.min / ons.min, offRes == onRes)
+        (name, offs.min, ons.min, offs.min / ons.min, offRes == onRes, census)
       }
       val geo = math.exp(rows.map(r => math.log(r._4)).sum / rows.size)
+      val (dropped, reused, aggregate) = rows.map(_._6).foldLeft((0, 0, 0)) {
+        case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z)
+      }
       // scalastyle:off println
       println(s"== regime: $regime (autoBroadcastJoinThreshold=$bc)")
-      rows.foreach { case (name, off, on, s, eq) =>
+      rows.foreach { case (name, off, on, s, eq, (d, r, a)) =>
         println(f"  $name%-4s off=$off%7.3fs on=$on%7.3fs " +
-          f"speedup=$s%5.2fx ${cls(s)}%-6s match=$eq")
+          f"speedup=$s%5.2fx ${cls(s)}%-6s match=$eq " +
+          s"builds: dropped=$d reused=$r aggregate=$a")
       }
+      println(s"  build census: $dropped dropped, $reused reused, " +
+        s"$aggregate aggregate in ${rows.count(_._6 != ((0, 0, 0)))} " +
+        s"queries that plan builds")
       println(f"  geomean speedup: $geo%.3fx (" +
         s"${rows.count(r => cls(r._4) == "faster")} faster / " +
         s"${rows.count(r => cls(r._4) == "slower")} slower / " +
@@ -150,7 +173,7 @@ object JobReal {
         s"matches ${rows.count(_._5)}/${rows.size}")
       // scalastyle:on println
       val regPins = pins.getOrElse(regime, Map.empty)
-      val regressed = rows.flatMap { case (n, _, _, s, _) =>
+      val regressed = rows.flatMap { case (n, _, _, s, _, _) =>
         regPins.get(n).filter(p => p >= 1.2 && s < p * 2.0 / 3.0)
           .map(p => (n, p, s))
       }
@@ -162,10 +185,10 @@ object JobReal {
       val regJson = regressed.map { case (n, p, s) =>
         f""""$n":{"pin":$p%.3f,"now":$s%.3f}"""
       }.mkString(",")
-      val qJson = rows.map { case (n, off, on, s, eq) =>
-        f""""$n":{"off":$off%.3f,"on":$on%.3f,"speedup":$s%.3f,"match":$eq}"""
+      val qJson = rows.map { case (n, off, on, s, eq, (d, r, a)) =>
+        f""""$n":{"off":$off%.3f,"on":$on%.3f,"speedup":$s%.3f,"match":$eq,"dropped":$d,"reused":$r,"aggregate":$a}"""
       }.mkString(",")
-      f""""$regime":{"geomean":$geo%.3f,"matches":${rows.count(_._5)},"total":${rows.size},"regressions":{$regJson},"queries":{$qJson}}"""
+      f""""$regime":{"geomean":$geo%.3f,"matches":${rows.count(_._5)},"total":${rows.size},"census":{"dropped":$dropped,"reused":$reused,"aggregate":$aggregate},"regressions":{$regJson},"queries":{$qJson}}"""
     }
 
     // scalastyle:off println

@@ -52,6 +52,14 @@ class GraftSessionSuite extends SparkTestBase {
     assert(e.getMessage.contains("unsupported"))
   }
 
+  test("the generated-code cache holds 2000 entries on the built session") {
+    val key = org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+    assert(spark.conf.get(key.key) == "2000")
+    // what CodeGenerator sizes its cache from when it first loads
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(org.apache.spark.sql.internal.SQLConf.get.getConf(key) == 2000)
+  }
+
   test("streaming checkpoint I/O defaults: FileSystem-based manager, " +
       "Spark-level checksums off (r19: ~50ms/store-commit of shell forks " +
       "and awaited checksum writes on a native-less local fs)") {
