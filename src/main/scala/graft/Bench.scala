@@ -1,436 +1,40 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR, prints
   * ONE JSON line with total + per-query wall seconds. Timing is
   * action-to-completion (`count()` forces full execution); per query the
   * MIN of SPARK_GRAFT_BENCH_RUNS runs (default 2) is reported — the
-  * reference's protocol (min of --runs N, test_job_queries.sh:169-199),
-  * and the right estimator on a noisy shared machine.
+  * reference's protocol (min of --runs N, test_job_queries.sh:169-199).
+  * Host noise is perfbench's job (interleaved rule-off/on pairs), not this
+  * runner's.
   *
   * Fixture views are registered ONCE before any timing, so per-query numbers
   * measure the query, not 10 parquet re-reads per invocation. A query run
-  * that throws is reported as -1 (never as a fast "win" of the min) and the
-  * failing queries are listed in an `errors` field.
+  * that throws is reported as -1 (never as a fast "win" of the min), left
+  * out of the total, and listed in an `errors` field.
   *
-  * INTEGRITY GUARD: a shared box under concurrent load has twice produced
-  * inflated artifacts that misrecorded a faster binary. The bench defends
-  * itself: it records `/proc/loadavg` and the machine JVM count before and
-  * after, pins each query against the cross-round MIN of prior
-  * `BENCH_r*.json` artifacts in the cwd (contamination only ever inflates,
-  * so the min over rounds approximates the clean time), RE-RUNS any query
-  * whose min exceeds 2x its pin after waiting for the box to go quiet, and
-  * emits `"contended":true` when inflation persists — a dirty artifact now
-  * self-identifies instead of entering the record as a regression.
-  *
-  * The guard also emits `cal_cpu_ms` / `cal_io_ms`: deterministic CPU and
-  * disk probes timed before Spark starts. Co-tenancy INSIDE the VM shows
-  * up in loadavg; a uniformly slower HOST (slow day on shared hardware)
-  * does not — but it scales these probes, so the cross-session ratio
-  * normalizes cross-day totals.
-  *
-  * SELF-NORMALIZING HEADLINE: host drift inflates every query near-
-  * uniformly (the r15 slow-IO window: geomean 1.56-1.60x vs pins across
-  * all 86 queries, no outlier), so the artifact also emits
-  * `drift_factor` — the MEDIAN of per-query time/pin ratios, clamped >=1
-  * — and `value_normalized` = value / drift_factor. The median resists a
-  * handful of genuine per-query regressions (those stay visible as
-  * non-uniform ratios and rerun flags); a reader comparing totals across
-  * rounds should prefer `value_normalized`, while per-query pins stay raw
-  * minima (contamination only inflates, so minima are already clean).
-  * The claim is CROSS-CHECKED against the host calibration probes (see
-  * [[appliedDrift]]): the raw median is emitted as `drift_median`,
-  * `drift_factor` is the calibration-gated value actually applied —
-  * normalization is capped at 1.5x what the calibration ratio explains,
-  * so a PARTIALLY-explained median still normalizes up to that bound
-  * while also flagging `drift_unexplained`; only a clean-calibration box
-  * (cal_ratio <= 1.2) keeps the fully raw headline. A uniform code tax
-  * in the binary under test therefore cannot normalize itself away.
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench
+  *   SPARK_GRAFT_BENCH_RUNS=N              (default 2)
+  *   SPARK_GRAFT_BENCH_QUERIES=q01_x,d04_y (default every registry query)
   */
 object Bench {
 
-  private def load1: Double =
-    try scala.io.Source.fromFile("/proc/loadavg").getLines()
-      .next().split(" ")(0).toDouble
-    catch { case _: Exception => -1.0 }
+  type Query = (SparkSession, String) => DataFrame
 
-  private def jvmCount: Int =
-    try {
-      import scala.jdk.CollectionConverters._
-      ProcessHandle.allProcesses().iterator().asScala.count(
-        _.info().command().map[Boolean](_.contains("java")).orElse(false))
-    } catch { case _: Exception => -1 }
-
-  /** Cross-round pin data: per-query minima plus the FASTEST recorded
-    * calibration probes (the "clean box" baseline the current probes are
-    * normalized against). */
-  private[graft] case class PinData(
-      queries: Map[String, Double],
-      calCpu: Option[Double],
-      calIo: Option[Double]) {
-    def isEmpty: Boolean = queries.isEmpty
+  /** Per-query min times in seconds (-1 when every run threw) and the
+    * distinct failures as `name: ExceptionClass`. */
+  case class Result(times: Seq[(String, Double)], errors: Seq[String]) {
+    def total: Double = times.map(_._2).filter(_ >= 0).sum
   }
 
-  /** Pins from every prior `BENCH_r*.json` (and a local `bench_out.json`)
-    * in `dir` whose recorded sf matches this run's fixture. Preferred
-    * path: STRUCTURED parse — driver artifacts embed a `parsed` object,
-    * and the bench itself writes `bench_out.json` — with the legacy
-    * escaped-"tail" regex scrape as fallback. The sf match is
-    * boundary-anchored (`/sf1"` never matches an sf10 path — a bare
-    * substring check once let cross-sf artifacts mis-calibrate the
-    * outlier guard). Keys are the short registry ids. Absent or
-    * unparseable artifacts just mean no pin. */
-  private[graft] def priorPins(dir: String, sfDir: String): PinData = {
-    val sfName = new java.io.File(sfDir.replaceAll("/+$", "")).getName // sf0.1
-    val sfNum = sfName.stripPrefix("sf")
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json") ||
-        f.getName == "bench_out.json")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-
-    def sfMatchesText(path: String): Boolean = {
-      val norm = path.replaceAll("/+$", "")
-      norm == sfName || norm.endsWith("/" + sfName)
-    }
-
-    // (queries, calCpu, calIo) of one artifact, structured path
-    def structured(f: java.io.File)
-        : Option[(Seq[(String, Double)], Option[Double], Option[Double])] =
-      try {
-        val root = om.readTree(f)
-        val node = if (root.has("parsed")) root.get("parsed") else root
-        if (!node.has("queries")) return None
-        val sfOk =
-          (node.path("sf").isTextual && sfMatchesText(node.get("sf").asText)) ||
-          (root.path("sf").isNumber &&
-            scala.util.Try(sfNum.toDouble).toOption
-              .contains(root.get("sf").asDouble))
-        if (!sfOk) return Some((Seq.empty, None, None))
-        val qs = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-        node.get("queries").properties().forEach { e =>
-          if (e.getValue.isNumber && e.getValue.asDouble >= 0) {
-            qs += e.getKey -> e.getValue.asDouble
-          }
-        }
-        def cal(k: String): Option[Double] =
-          Option(node.get(k)).filter(_.isNumber).map(_.asDouble).filter(_ > 0)
-        Some((qs.toSeq, cal("cal_cpu_ms"), cal("cal_io_ms")))
-      } catch { case _: Exception => None }
-
-    // legacy fallback: regex over the artifact with escapes stripped
-    val qmap = """"queries":\{([^}]*)\}""".r
-    val pair = """"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?)""".r
-    def calRe(k: String) = ("\"" + k + "\":(\\d+(?:\\.\\d+)?)").r
-    def scraped(f: java.io.File)
-        : (Seq[(String, Double)], Option[Double], Option[Double]) =
-      try {
-        val raw = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).replace("\\\"", "\"")
-        val sfOk = (java.util.regex.Pattern.quote("/" + sfName) +
-            "[\"\\\\/]").r.findFirstIn(raw).isDefined ||
-          ("\"sf\":\\s*" + java.util.regex.Pattern.quote(sfNum) +
-            "[,}\\s]").r.findFirstIn(raw).isDefined
-        if (!sfOk) (Seq.empty, None, None)
-        else {
-          val qs = qmap.findFirstMatchIn(raw).toSeq.flatMap(m =>
-            pair.findAllMatchIn(m.group(1)).map(p =>
-              p.group(1) -> p.group(2).toDouble).filter(_._2 >= 0))
-          def cal(k: String): Option[Double] =
-            calRe(k).findFirstMatchIn(raw).map(_.group(1).toDouble)
-              .filter(_ > 0)
-          (qs, cal("cal_cpu_ms"), cal("cal_io_ms"))
-        }
-      } catch { case _: Exception => (Seq.empty, None, None) }
-
-    val perFile = files.toSeq.map(f => structured(f).getOrElse(scraped(f)))
-    PinData(
-      perFile.flatMap(_._1).groupBy(_._1)
-        .map { case (k, vs) => k -> vs.map(_._2).min },
-      Some(perFile.flatMap(_._2)).filter(_.nonEmpty).map(_.min),
-      Some(perFile.flatMap(_._3)).filter(_.nonEmpty).map(_.min))
-  }
-
-  /** Uniform host-drift estimator: the MEDIAN of per-query time/pin
-    * ratios over queries that have a pin, clamped to >= 1.0. Needs at
-    * least 5 pinned queries to be trustworthy (else 1.0): with fewer, a
-    * couple of genuinely-regressed queries could masquerade as drift.
-    * Keys results by the short registry id exactly like the outlier
-    * guard. */
-  private[graft] def driftFactor(results: Seq[(String, Double)],
-      pins: Map[String, Double]): Double = {
-    val ratios = results.flatMap { case (name, t) =>
-      pins.get(name.split('_').head)
-        .filter(p => p > 0 && t >= 0).map(t / _)
-    }.sorted
-    if (ratios.size < 5) 1.0
-    else {
-      val mid = ratios.size / 2
-      val med =
-        if (ratios.size % 2 == 1) ratios(mid)
-        else (ratios(mid - 1) + ratios(mid)) / 2.0
-      math.max(1.0, med)
-    }
-  }
-
-  /** Calibration cross-check on the drift claim: pins are cross-round
-    * MINIMA of query times, so a genuine uniform regression shipped by
-    * the binary under test (a rule that taxes every query 1.5×) is
-    * indistinguishable from host drift in the time/pin ratios alone —
-    * the cal_cpu/cal_io probes measure the HOST, not the binary, and are
-    * the independent witness. Drift is only claimed when calibration
-    * agrees the box is slow (cal_ratio > 1.2), and never normalizes past
-    * 1.5× what calibration can explain (the probes approximate; r16's
-    * genuine drift read cal 1.43 / median 1.61). A clean-calibration box
-    * with inflated ratios keeps the RAW headline and flags
-    * `drift_unexplained` — that shape is a code tax, not drift. */
-  private[graft] def appliedDrift(median: Double, calRatio: Double): Double =
-    if (calRatio > 1.2) math.max(1.0, math.min(median, calRatio * 1.5))
-    else 1.0
-
-  /** Deterministic single-thread CPU calibration: fixed-count xorshift64
-    * loop, min of 3 (first run absorbs JIT). The absolute value is
-    * meaningless; the RATIO between two sessions' values approximates
-    * relative box speed, letting a reader normalize cross-day totals.
-    * Twice this round an apparent per-query regression was a uniformly
-    * slower box — the loadavg/JVM fields can't see that (they detect
-    * co-tenancy inside the VM, not a slow host), this can. */
-  private[graft] def cpuCalMs(): Double = {
-    def once(): Double = {
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      val t0 = System.nanoTime()
-      while (i < 100000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1
-      }
-      val dt = (System.nanoTime() - t0) / 1e6
-      if (x == 42) print("") // keep the loop observable (defeat DCE)
-      dt
-    }
-    (1 to 3).map(_ => once()).min
-  }
-
-  /** IO calibration: write + fsync + read 64 MB under target/ — the same
-    * filesystem shuffle files and spills land on, so a slow-disk session
-    * (which hits the shuffle-heavy tail hardest) shows up here. */
-  private[graft] def ioCalMs(): Double = {
-    val buf = new Array[Byte](1 << 20)
-    java.util.Arrays.fill(buf, 0x5A.toByte)
-    val dir = java.nio.file.Paths.get("target")
-    try {
-      java.nio.file.Files.createDirectories(dir)
-      val f = java.nio.file.Files.createTempFile(dir, "graft_iocal", ".tmp")
-      try {
-        val t0 = System.nanoTime()
-        val ch = java.nio.channels.FileChannel.open(f,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          (1 to 64).foreach(_ => ch.write(java.nio.ByteBuffer.wrap(buf)))
-          ch.force(true)
-        } finally ch.close()
-        val in = java.nio.channels.FileChannel.open(f,
-          java.nio.file.StandardOpenOption.READ)
-        try {
-          val rb = java.nio.ByteBuffer.allocate(1 << 20)
-          while (in.read(rb) > 0) rb.clear()
-        } finally in.close()
-        (System.nanoTime() - t0) / 1e6
-      } finally java.nio.file.Files.deleteIfExists(f)
-    } catch { case _: Exception => -1.0 }
-  }
-
-  /** Poll until 1-min load drops under `cores/8` or the budget runs out;
-    * returns whether quiet was reached. cores/2 (the r11 threshold) let
-    * reruns start on a half-loaded box — 7 futile reruns in one
-    * artifact; cores/8 (4 on the bench box) is below any co-tenant worth
-    * waiting out while still above our own just-idled JVM's decaying
-    * load. */
-  private def awaitQuiet(cores: Int, budgetMs: Long): Boolean = {
-    val deadline = System.nanoTime() + budgetMs * 1000000L
-    var l = load1
-    while (l >= 0 && l > cores / 8.0 && System.nanoTime() < deadline) {
-      Thread.sleep(3000)
-      l = load1
-    }
-    l >= 0 && l <= cores / 8.0
-  }
-
-  /** SPARK_GRAFT_BENCH_FORK=1: each query runs in its own child JVM
-    * (sequentially — co-running JVMs contaminate each other's timed
-    * windows). Decade-scale sequences die in a single JVM on accumulated
-    * shuffle files (the sf100 registry run left 40 GB behind and was
-    * re-driven by hand, RPTBENCH_r13 part 2); a JVM per query reclaims
-    * shuffle/temp space between queries and makes sf>=10 probes one
-    * unattended command. The child inherits this JVM's exact flags
-    * (add-opens, -Xmx, -D props) and classpath, so child timing matches
-    * the non-fork protocol; per-child startup+warmup stays outside the
-    * timed region by construction. */
-  private def forkMain(sfDir: String, runs: Int, only: Set[String]): Unit = {
-    import scala.jdk.CollectionConverters._
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    val loadBefore = load1
-    val jvmsBefore = jvmCount
-    val calCpu = cpuCalMs()
-    val calIo = ioCalMs()
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xdebug"))
-    val cp = System.getProperty("java.class.path")
-    val logDir = java.nio.file.Paths.get("target", "bench_fork")
-    java.nio.file.Files.createDirectories(logDir)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    var reruns = 0
-    var childContended = false
-    val results: Seq[(String, Double)] = names.map { name =>
-      val outFile = logDir.resolve(s"$name.json")
-      java.nio.file.Files.deleteIfExists(outFile)
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_BENCH_RUNS", runs.toString)
-      pb.environment().put("SPARK_GRAFT_BENCH_QUERIES", name)
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", outFile.toString)
-      pb.environment().remove("SPARK_GRAFT_BENCH_FORK")
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(logDir.resolve(s"$name.log").toFile)
-      val exit = pb.start().waitFor()
-      val parsed = scala.util.Try(om.readTree(outFile.toFile)).toOption
-      parsed match {
-        case Some(node) if node.path("queries").has(name) =>
-          node.path("errors").elements().asScala
-            .foreach(e => errors += e.asText())
-          reruns += node.path("reruns").asInt(0)
-          childContended ||= node.path("contended").asBoolean(false)
-          name -> node.path("queries").get(name).asDouble(-1.0)
-        case _ =>
-          errors += s"$name: ChildExit$exit"
-          name -> -1.0
-      }
-    }
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val causes = scala.collection.mutable.ArrayBuffer[String]()
-    if (loadBefore > Runtime.getRuntime.availableProcessors()) causes += "load"
-    if (childContended) causes += "child_contended"
-    val contended = causes.nonEmpty
-    val guard = f""""load_before":$loadBefore%.2f,"load_after":${load1}%.2f,""" +
-      s""""jvms_before":$jvmsBefore,"jvms_after":$jvmCount,""" +
-      s""""reruns":$reruns,"contended":$contended,"forked":true,""" +
-      f""""cal_cpu_ms":$calCpu%.1f,"cal_io_ms":$calIo%.1f,""" +
-      s""""cause":"${causes.mkString("|")}""""
-    emit(results, total, guard, errors.toSeq, sfDir, outOverride = None)
-  }
-
-  /** Bound the stdout error list so a degraded run (r17: 38 errors,
-    * 2,788-char line) cannot overflow the harness tail buffer — the full
-    * list always lands in bench_out.json / bench_full.json. */
-  private[graft] def stdoutErrors(errors: Seq[String],
-      maxEntries: Int = 3): Seq[String] = {
-    val d = errors.distinct
-    if (d.size <= maxEntries) d
-    else d.take(maxEntries) :+
-      s"+${d.size - maxEntries} more: see bench_out.json"
-  }
-
-  /** Writes target/bench_full.json (full names) + bench_out.json (short
-    * ids) and prints the short one-line JSON — or, when `outOverride` is
-    * set (a fork-mode child), writes the full-name line there and prints
-    * nothing parseable (the parent owns the stdout contract). NEVER
-    * crashes on an oversized line: r17's `require` here turned a bench
-    * that survived 38 sabotaged queries into rc=1 with no artifact —
-    * error entries are truncated to fit instead, and the structured files
-    * (written first) keep the full list. */
-  private def emit(results: Seq[(String, Double)], total: Double,
-      guard: String, errors: Seq[String], sfDir: String,
-      outOverride: Option[java.nio.file.Path]): Unit = {
-    def errJson(es: Seq[String]): String =
-      es.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def jsonLine(keyed: Seq[(String, Double)], errs: Seq[String]): String = {
-      val qs = keyed.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-        .mkString("{", ",", "}")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",$guard,"errors":${errJson(errs)}}"""
-    }
-    val fullErrors = errors.distinct
-    outOverride match {
-      case Some(p) =>
-        java.nio.file.Files.write(p, jsonLine(results, fullErrors)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None =>
-        // The harness reading stdout keeps only a bounded tail (~2000
-        // chars): with a full registry (~85 queries) the full-name map
-        // (~2.7k chars) gets its head truncated and the line no longer
-        // parses. The stdout line therefore uses the short registry id
-        // (the unique "q01"/"d04"/"v10" prefix) and the full-name JSON
-        // goes to target/bench_full.json. Write the full-name file FIRST
-        // so a downstream failure still leaves the measured data on disk
-        // instead of discarding the whole run.
-        val full = java.nio.file.Paths.get("target", "bench_full.json")
-        java.nio.file.Files.createDirectories(full.getParent)
-        java.nio.file.Files.write(full, jsonLine(results, fullErrors)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val shortKeyed = results.map { case (k, v) => k.split('_').head -> v }
-        require(shortKeyed.map(_._1).distinct.size == shortKeyed.size,
-          "short registry ids must stay unique for the bench stdout line")
-        // structured copy in cwd: future pin readers (and humans) get real
-        // JSON instead of scraping the harness tail buffer
-        java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-          jsonLine(shortKeyed, fullErrors)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var line = jsonLine(shortKeyed, stdoutErrors(fullErrors))
-        if (line.length > 1800 && fullErrors.nonEmpty) {
-          line = jsonLine(shortKeyed,
-            Seq(s"${fullErrors.size} errors: see bench_out.json"))
-        }
-        // scalastyle:off println
-        println(line)
-        // scalastyle:on println
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    // optional comma-separated allowlist for solo-probing a few queries
-    // under the exact bench protocol (same warmup, views, min-of-N)
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    if (sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("1")) {
-      forkMain(sfDir, runs, only)
-      return
-    }
-    val childOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .map(java.nio.file.Paths.get(_))
-    val loadBefore = load1
-    val jvmsBefore = jvmCount
-    val cores = Runtime.getRuntime.availableProcessors()
-    val pinData = priorPins(".", sfDir)
-    val pins = pinData.queries
-    // box-speed calibration before Spark spins up (idle machine, cold JVM):
-    // cross-session ratios of these normalize cross-day totals
-    val calCpu = cpuCalMs()
-    val calIo = ioCalMs()
-    // how much slower this box is than the fastest pinned session, per
-    // probe: the rerun threshold scales by the worse of the two (clamped
-    // to 4x) so a quiet-but-slow day no longer burns futile reruns and a
-    // misleading contended flag (r11: a 2.7x slower disk did exactly that)
-    val cpuRatio = pinData.calCpu.map(calCpu / _).getOrElse(1.0)
-    val ioRatio = pinData.calIo.filter(_ => calIo > 0).map(calIo / _)
-      .getOrElse(1.0)
-    val calRatio =
-      math.max(1.0, math.min(4.0, math.max(cpuRatio, ioRatio)))
-    val spark = GraftSession.build(appName = "graft-bench")
-    // warm the JVM/session on the smallest fixture so per-query numbers
-    // measure the queries, not first-use initialization
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // register the benchmark fixture's views outside the timed region
+  /** Registers `sfDir`'s views, then times each query `runs` times. */
+  def run(spark: SparkSession, sfDir: String, runs: Int,
+      named: Seq[(String, Query)]): Result = {
     queries.QueryDef.views(spark, sfDir)
     val errors = scala.collection.mutable.ArrayBuffer[String]()
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    def timeOnce(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOnce(name: String, fn: Query): Option[Double] = {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -441,70 +45,42 @@ object Bench {
           None
       }
     }
-    var results = named.map { case (name, fn) =>
-      val times = (1 to runs).flatMap(_ => timeOnce(name, fn))
-      name -> (if (times.isEmpty) -1.0 else times.min)
+    val times = named.map { case (name, fn) =>
+      val ts = (1 to runs).flatMap(_ => timeOnce(name, fn))
+      name -> (if (ts.isEmpty) -1.0 else ts.min)
     }
-    // integrity pass: re-measure pinned outliers (>2x the CALIBRATION-
-    // NORMALIZED cross-round pin, with a 0.25s absolute floor so
-    // micro-query noise never triggers it) AND queries that ERRORED
-    // (r17: 38 transient SparkExceptions from sabotaged shuffle dirs
-    // shipped with reruns:0 — an error is at least as retry-worthy as a
-    // slow time), after waiting for the box to go quiet
-    def inflated(name: String, t: Double): Boolean =
-      pins.get(name.split('_').head).exists(pin =>
-        t >= 0 && pin > 0 && t > 2 * calRatio * pin && t - pin > 0.25)
-    val outliers = results
-      .filter { case (n, t) => inflated(n, t) || t < 0 }.map(_._1)
-    var rerun = 0
-    if (outliers.nonEmpty) {
-      // best-effort wait for the box to drain, then re-measure either way
-      // (min-of-runs can only improve; a still-inflated result flags below)
-      awaitQuiet(cores, budgetMs = 90000)
-      results = results.map { case (name, t) =>
-        if (!inflated(name, t) && t >= 0) name -> t
-        else {
-          rerun += 1
-          val fn = named.find(_._1 == name).get._2
-          val again = (1 to runs).flatMap(_ => timeOnce(name, fn))
-          name -> (if (again.isEmpty) t
-            else if (t < 0) again.min
-            else math.min(t, again.min))
-        }
-      }
-    }
-    // contention verdict WITH recorded cause: which signal tripped
-    val causes = scala.collection.mutable.ArrayBuffer[String]()
-    if (loadBefore > cores) causes += "load"
-    if (cpuRatio > 1.5) causes += "slow_cpu"
-    if (ioRatio > 1.5) causes += "slow_io"
-    if (results.exists { case (n, t) => inflated(n, t) }) causes += "inflated"
-    val contended = causes.contains("inflated") || causes.contains("load")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val driftMedian = driftFactor(results, pins)
-    val drift = appliedDrift(driftMedian, calRatio)
-    // material drift the calibration probes cannot explain: surface it
-    // instead of silently normalizing — a uniform code tax looks exactly
-    // like drift in the ratios, and only the host probes can tell
-    if (driftMedian > 1.25 && drift < driftMedian - 1e-9)
-      causes += "drift_unexplained"
-    // a query that errored but recovered on the integrity retry has a
-    // valid measured time — drop its stale error entry (the `reruns`
-    // count records that a retry happened)
-    val finalErrors = errors.toSeq.distinct.filterNot(e =>
-      results.exists { case (n, t) => t >= 0 && e.startsWith(n + ":") })
-    val loadAfter = load1
-    val jvmsAfter = jvmCount
-    val guard = f""""load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,""" +
-      s""""jvms_before":$jvmsBefore,"jvms_after":$jvmsAfter,""" +
-      s""""reruns":$rerun,"contended":$contended,""" +
-      f""""cal_cpu_ms":$calCpu%.1f,"cal_io_ms":$calIo%.1f,""" +
-      f""""cal_ratio":$calRatio%.2f,""" +
-      f""""drift_median":$driftMedian%.3f,""" +
-      f""""drift_factor":$drift%.3f,""" +
-      f""""value_normalized":${total / drift}%.3f,""" +
-      f""""cause":"${causes.mkString("|")}""""
-    emit(results, total, guard, finalErrors, sfDir, childOut)
+    Result(times, errors.toSeq.distinct)
+  }
+
+  /** The stdout line, keyed by short registry id (`q01`, `d04`, `v10`). */
+  def json(r: Result, sfDir: String): String = {
+    val shortKeyed = r.times.map { case (k, v) => k.split('_').head -> v }
+    require(shortKeyed.map(_._1).distinct.size == shortKeyed.size,
+      "short registry ids must stay unique for the bench stdout line")
+    val qs = shortKeyed.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
+      .mkString("{", ",", "}")
+    val errs = r.errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":${r.total}%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","errors":$errs}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
+    // optional comma-separated allowlist for solo-probing a few queries
+    // under the exact bench protocol (same warmup, views, min-of-N)
+    val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty)
+    val spark = GraftSession.build(appName = "graft-bench")
+    // warm the JVM/session on the smallest fixture so per-query numbers
+    // measure the queries, not first-use initialization
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val named = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+    val result = run(spark, sfDir, runs, named)
+    // scalastyle:off println
+    println(json(result, sfDir))
+    // scalastyle:on println
     spark.stop()
   }
 }

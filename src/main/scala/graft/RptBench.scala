@@ -12,8 +12,11 @@ package graft
  *
  * Two regimes per query:
  *  - `broadcast`: stock local settings (small dims broadcast; the regime
- *    of the sf fixtures on one node). The rule STANDS DOWN here by design
- *    (skipBroadcastableBuilds), so ~1.0x is the expected outcome.
+ *    of the sf fixtures on one node). skipBroadcastableBuilds skips ops
+ *    whose join is expected to broadcast, but deep plans bypass that gate,
+ *    and under AQE [[graft.rpt.ResolveBroadcastBuilds]] drops a probe its
+ *    own broadcast join enforces or reads its build from a broadcast the
+ *    plan already holds. Expect ~1.0x on shallow shapes.
  *  - `shuffle`: autoBroadcastJoinThreshold=-1 forces shuffle joins — the
  *    regime a 100 TB cluster join actually runs in, where semi-join
  *    reduction pays for shuffled bytes it avoids. This is where the rule

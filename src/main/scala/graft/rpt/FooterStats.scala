@@ -14,7 +14,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotatio
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
@@ -55,7 +55,8 @@ object FooterStats extends PredicateHelper {
     * dates in days, decimals scaled), plus the sampled null fraction. */
   private case class ColRange(min: Double, max: Double, nullFrac: Double)
 
-  private val cache = new ConcurrentHashMap[String, Map[String, ColRange]]()
+  private val cache =
+    new ConcurrentHashMap[Seq[(String, Long)], Map[String, ColRange]]()
 
   /** Visible for tests: drop cached ranges. */
   def invalidate(): Unit = cache.clear()
@@ -156,10 +157,9 @@ object FooterStats extends PredicateHelper {
           case lr: LogicalRelation => rangesFor(lr)
           case other =>
             org.apache.spark.sql.graft.sources.V2RelationFiles
-              .parquetFiles(other).flatMap { files =>
+              .parquetFiles(other).flatMap { case (files, session) =>
                 rangesForFiles(files.filter(_.getLen > 0),
-                  org.apache.spark.sql.SparkSession.active.sessionState
-                    .newHadoopConf())
+                  session.sessionState.newHadoopConf())
               }
         }
         ranges.flatMap(_.get(name)).map(r => (r.min, r.max))
@@ -182,14 +182,12 @@ object FooterStats extends PredicateHelper {
     }
 
   private def rangesForFiles(
-      files: Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata],
+      files: Seq[FileStatusWithMetadata],
       conf: org.apache.hadoop.conf.Configuration)
       : Option[Map[String, ColRange]] = {
         if (files.isEmpty) return None
-        val key = files.size + ":" +
-          files.map(f => s"${f.getPath}#${f.getLen}").sorted.mkString("|")
-            .hashCode
-        Option(cache.computeIfAbsent(key, _ => Try {
+        Option(cache.computeIfAbsent(ParquetRowCounts.fileSetKey(files),
+          _ => Try {
           val sample = files.sortBy(_.getPath.toString).take(MaxFooters)
           // per column: (min, max, nulls, usable)
           val acc = scala.collection.mutable.Map[String,

@@ -7,7 +7,7 @@ import scala.util.Try
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /**
@@ -27,7 +27,14 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 object ParquetRowCounts {
 
   private val MaxFooters = 8
-  private val cache = new ConcurrentHashMap[String, Option[Long]]()
+  private val cache = new ConcurrentHashMap[Seq[(String, Long)], Option[Long]]()
+
+  /** Cache key of a file set: every (path, length), sorted. The full list,
+    * not a hash of it — two sets whose listings hash alike must never
+    * share footer-derived numbers. */
+  private[rpt] def fileSetKey(files: Seq[FileStatusWithMetadata])
+      : Seq[(String, Long)] =
+    files.map(f => (f.getPath.toString, f.getLen)).sorted
 
   /** Visible for tests/ops: drop cached counts (e.g. after overwriting a
     * fixture in place with the same file sizes — unlikely, but possible). */
@@ -43,10 +50,7 @@ object ParquetRowCounts {
             .getOrElse(Seq.empty)
             .filter(_.getLen > 0)
           if (files.isEmpty) return None
-          val key = files.size + ":" +
-            files.map(f => s"${f.getPath}#${f.getLen}").sorted.mkString("|")
-              .hashCode
-          cache.computeIfAbsent(key, _ => Try {
+          cache.computeIfAbsent(fileSetKey(files), _ => Try {
             val conf = fs.sparkSession.sessionState.newHadoopConf()
             val sample = files.sortBy(_.getPath.toString).take(MaxFooters)
             val sampleRows = sample.map { f =>

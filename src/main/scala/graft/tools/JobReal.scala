@@ -26,45 +26,6 @@ import graft.GraftSession
  */
 object JobReal {
 
-  /** Prior JOBREAL pins: regime -> query -> BEST recorded differential
-    * speedup, from every `JOBREAL_r*.json` in `dir` whose fixture path
-    * matches this run's (path-anchored like [[graft.Bench.priorPins]]).
-    * Speedups, not walls: the ratio is box-speed-invariant, so a pin from
-    * a faster round still identifies a RULE regression (a query whose
-    * differential collapsed), never a slower box. Unparseable or
-    * foreign-fixture artifacts contribute nothing. */
-  private[graft] def priorPins(dir: String, fixtureDir: String)
-      : Map[String, Map[String, Double]] = {
-    val want = fixtureDir.replaceAll("/+$", "")
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.matches("JOBREAL_r\\d+\\.json"))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val acc = scala.collection.mutable.Map[(String, String), Double]()
-    files.foreach { f =>
-      try {
-        val root = om.readTree(f)
-        val recorded = root.path("dir").asText("").replaceAll("/+$", "")
-        if (recorded == want) {
-          Seq("broadcast", "shuffle").foreach { regime =>
-            val qs = root.path(regime).path("queries")
-            qs.properties().forEach { e =>
-              val s = e.getValue.path("speedup")
-              val ok = e.getValue.path("match").asBoolean(true)
-              if (s.isNumber && s.asDouble > 0 && ok) {
-                val k = (regime, e.getKey)
-                acc(k) = math.max(acc.getOrElse(k, 0.0), s.asDouble)
-              }
-            }
-          }
-        }
-      } catch { case _: Exception => () }
-    }
-    acc.groupBy(_._1._1).map { case (regime, m) =>
-      regime -> m.map { case ((_, q), v) => q -> v }.toMap
-    }
-  }
-
   private val tables = Seq("title", "movie_companies", "movie_info",
     "movie_info_idx", "movie_keyword", "cast_info", "complete_cast",
     "comp_cast_type", "company_name", "company_type", "info_type",
@@ -126,10 +87,6 @@ object JobReal {
     require(regimePlan.nonEmpty, s"regime filter matched nothing: $regimes")
 
     val mismatches = scala.collection.mutable.ArrayBuffer[String]()
-    // cross-round differential pins: a query whose best recorded speedup
-    // was a real win (>= 1.2x) and now measures under 2/3 of it is
-    // flagged — the self-identification a one-shot artifact lacks
-    val pins = priorPins(".", dir)
     val regimeJsons = regimePlan.map { case (regime, bc) =>
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
       val rows = queries.map { case (name, sql) =>
@@ -172,23 +129,10 @@ object JobReal {
         s"${rows.count(r => cls(r._4) == "same")} same), " +
         s"matches ${rows.count(_._5)}/${rows.size}")
       // scalastyle:on println
-      val regPins = pins.getOrElse(regime, Map.empty)
-      val regressed = rows.flatMap { case (n, _, _, s, _, _) =>
-        regPins.get(n).filter(p => p >= 1.2 && s < p * 2.0 / 3.0)
-          .map(p => (n, p, s))
-      }
-      // scalastyle:off println
-      regressed.foreach { case (n, p, s) =>
-        println(f"  REGRESSION $n: best recorded speedup $p%.2fx, now $s%.2fx")
-      }
-      // scalastyle:on println
-      val regJson = regressed.map { case (n, p, s) =>
-        f""""$n":{"pin":$p%.3f,"now":$s%.3f}"""
-      }.mkString(",")
       val qJson = rows.map { case (n, off, on, s, eq, (d, r, a)) =>
         f""""$n":{"off":$off%.3f,"on":$on%.3f,"speedup":$s%.3f,"match":$eq,"dropped":$d,"reused":$r,"aggregate":$a}"""
       }.mkString(",")
-      f""""$regime":{"geomean":$geo%.3f,"matches":${rows.count(_._5)},"total":${rows.size},"census":{"dropped":$dropped,"reused":$reused,"aggregate":$aggregate},"regressions":{$regJson},"queries":{$qJson}}"""
+      f""""$regime":{"geomean":$geo%.3f,"matches":${rows.count(_._5)},"total":${rows.size},"census":{"dropped":$dropped,"reused":$reused,"aggregate":$aggregate},"queries":{$qJson}}"""
     }
 
     // scalastyle:off println

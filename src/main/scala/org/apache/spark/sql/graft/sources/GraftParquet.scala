@@ -686,18 +686,21 @@ object GraftParquetScan {
   }
 }
 
-/** File listing of a v2 parquet-backed relation — bridge for `graft.rpt`
-  * (the file-table scaffold is `private[sql]`). Used by the rule's
-  * zero-execution footer-stats path when a transfer build side reads
-  * through a v2 source. */
+/** File listing of a v2 parquet-backed relation, with the session that
+  * owns the table — bridge for `graft.rpt` (the file-table scaffold is
+  * `private[sql]`). Used by the rule's zero-execution footer-stats path
+  * when a transfer build side reads through a v2 source; footers are read
+  * with that session's Hadoop conf, not whichever session is active. */
 object V2RelationFiles {
   def parquetFiles(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Option[Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata]] =
+      : Option[(Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata],
+        SparkSession)] =
     plan match {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         r.table match {
           case t: ParquetTable =>
-            Try(t.fileIndex.listFiles(Nil, Nil).flatMap(_.files).toSeq).toOption
+            Try(t.fileIndex.listFiles(Nil, Nil).flatMap(_.files).toSeq)
+              .toOption.map(_ -> t.sparkSession)
           case _ => None
         }
       case _ => None

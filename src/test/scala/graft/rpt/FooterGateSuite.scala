@@ -104,4 +104,75 @@ class FooterGateSuite extends SparkTestBase {
       assert(on === off)
     }
   }
+
+  // "Aa" and "BB" have equal String hashCodes, so two listings that differ
+  // only there hash alike: a hash-keyed footer cache would hand one file
+  // set the other's row counts and column ranges
+  test("footer caches key a file set by its full listing, not a hash") {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata
+    def listing(dir: String) = Seq(FileStatusWithMetadata(new FileStatus(
+      100L, false, 1, 1L, 0L, new Path(s"file:/data/$dir/part-0.parquet"))))
+    assert("file:/data/Aa/part-0.parquet#100".hashCode ===
+      "file:/data/BB/part-0.parquet#100".hashCode)
+    assert(ParquetRowCounts.fileSetKey(listing("Aa")) !==
+      ParquetRowCounts.fileSetKey(listing("BB")))
+  }
+
+  test("hash-colliding directories keep their own footer ranges") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft_footer_key")
+    // one uncompressed, dictionary-free int file named part-0.parquet in
+    // `dir`: same name and length for any 100 consecutive values
+    def write(dir: String, from: Long): Path = {
+      val tmp = root.resolve(dir + "_write")
+      spark.range(from, from + 100).selectExpr("CAST(id AS INT) AS v")
+        .coalesce(1).write.option("compression", "uncompressed")
+        .option("parquet.enable.dictionary", "false").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+      val dest = root.resolve(dir).resolve("part-0.parquet")
+      Files.createDirectories(dest.getParent)
+      Files.move(part.toPath, dest)
+    }
+    def range(file: Path): Option[(Double, Double)] = {
+      val plan = spark.read.parquet(file.getParent.toString)
+        .queryExecution.analyzed
+      FooterStats.columnRange(plan,
+        plan.output.head.asInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.AttributeReference])
+    }
+    try {
+      val aa = write("Aa", 0)
+      val bb = write("BB", 1000)
+      assert(Files.size(aa) === Files.size(bb))
+      assert(range(aa) === Some((0.0, 99.0)))
+      assert(range(bb) === Some((1000.0, 1099.0)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  test("v2 footer reads use the relation's own session, not the active one") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_footer_v2")
+    def v2Range(session: org.apache.spark.sql.SparkSession, dir: String)
+        : Option[(Double, Double)] = {
+      val path = root.resolve(dir).toString
+      spark.range(0, 100).selectExpr("CAST(id AS INT) AS v").coalesce(1)
+        .write.parquet(path)
+      // the table lists its files here, before any conf below applies
+      val plan = session.read.format("graft-parquet").load(path)
+        .queryExecution.analyzed
+      if (session ne spark) {
+        // this session can no longer open local files
+        session.conf.set("fs.file.impl", "graft.NoSuchFileSystem")
+        session.conf.set("fs.file.impl.disable.cache", "true")
+      }
+      FooterStats.columnRange(plan, plan.output.head.asInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.AttributeReference])
+    }
+    try {
+      assert(v2Range(spark, "own") === Some((0.0, 99.0)))
+      assert(v2Range(spark.newSession(), "other") === None,
+        "footers were read with the active session's conf")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
 }
