@@ -481,7 +481,7 @@ object DedupQueries {
             case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
               lr
           }
-          .flatMap(graft.rpt.ParquetRowCounts.rowCount)
+          .flatMap(graft.rpt.ParquetFooters.rowCount)
           .map(_ * 24L) // doc_id + short source string, encoded
         val hint: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (estBytes.exists(_ <= 256L * 1024 * 1024)) broadcast else identity

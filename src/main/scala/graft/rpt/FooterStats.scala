@@ -1,21 +1,14 @@
 package graft.rpt
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-import scala.util.Try
-
 import org.apache.parquet.column.statistics.Statistics
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, LogicalRelation}
+import org.apache.spark.sql.graft.sources.V2RelationFiles
 import org.apache.spark.sql.types._
 
 /**
@@ -40,26 +33,19 @@ import org.apache.spark.sql.types._
  * missed stand-down, never a lost transfer on a genuinely selective
  * build.
  *
- * Bounded like [[ParquetRowCounts]]: at most [[MaxFooters]] footers read
- * per relation (min-of-mins/max-of-maxes over the sample — on 100 TB
- * tables the sampled range can be narrower than the true range, which
+ * Footers come from [[ParquetFooters]]: at most
+ * [[ParquetFooters.MaxSampled]] per relation, the first files by path
+ * (min-of-mins/max-of-maxes over the sample — on 100 TB tables the
+ * sampled range can be narrower than the true range, which
  * under-estimates keep fractions near the 0/1 clamps; the gate only
  * fires at >= the keep cap, a wide margin from typical selective
- * predicates), cached by file set, IO failures degrade to None.
+ * predicates), each opened once per JVM; IO failures degrade to None.
  */
 object FooterStats extends PredicateHelper {
-
-  private val MaxFooters = 8
 
   /** min/max in the Catalyst-comparable domain (timestamps in micros,
     * dates in days, decimals scaled), plus the sampled null fraction. */
   private case class ColRange(min: Double, max: Double, nullFrac: Double)
-
-  private val cache =
-    new ConcurrentHashMap[Seq[(String, Long)], Map[String, ColRange]]()
-
-  /** Visible for tests: drop cached ranges. */
-  def invalidate(): Unit = cache.clear()
 
   /** Estimated fraction of the leaf's rows the plan's filters keep, under
     * uniformity; None unless ALL non-trivial conjuncts are estimable
@@ -68,7 +54,7 @@ object FooterStats extends PredicateHelper {
   def keepFraction(plan: LogicalPlan): Option[Double] =
     plan.collectLeaves() match {
       case Seq(lr: LogicalRelation) =>
-        rangesFor(lr).flatMap { ranges =>
+        ParquetFooters.v1Files(lr).flatMap(rangesOf).flatMap { ranges =>
           val attrById = lr.output.map(a => a.exprId -> a.name).toMap
           val conjuncts = plan.collect {
             case Filter(c, _) => splitConjunctivePredicates(c)
@@ -153,88 +139,46 @@ object FooterStats extends PredicateHelper {
     leaves match {
       case Seq(leaf) =>
         val name = leaf.output.find(_.exprId == attr.exprId).get.name
-        val ranges = leaf match {
-          case lr: LogicalRelation => rangesFor(lr)
-          case other =>
-            org.apache.spark.sql.graft.sources.V2RelationFiles
-              .parquetFiles(other).flatMap { case (files, session) =>
-                rangesForFiles(files.filter(_.getLen > 0),
-                  session.sessionState.newHadoopConf())
-              }
-        }
-        ranges.flatMap(_.get(name)).map(r => (r.min, r.max))
+        ParquetFooters.v1Files(leaf)
+          .orElse(V2RelationFiles.parquetFiles(leaf))
+          .flatMap(rangesOf).flatMap(_.get(name)).map(r => (r.min, r.max))
       case _ => None
     }
   }
 
-  /** Column ranges of a parquet-backed leaf, aggregated over up to
-    * [[MaxFooters]] file footers; columns with any missing/unusable chunk
-    * statistics are absent from the map. */
-  private def rangesFor(lr: LogicalRelation): Option[Map[String, ColRange]] =
-    lr.relation match {
-      case fs: HadoopFsRelation
-          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-        val files = Try(fs.location.listFiles(Nil, Nil).flatMap(_.files))
-          .getOrElse(Seq.empty)
-          .filter(_.getLen > 0)
-        rangesForFiles(files, fs.sparkSession.sessionState.newHadoopConf())
-      case _ => None
-    }
-
-  private def rangesForFiles(
-      files: Seq[FileStatusWithMetadata],
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[Map[String, ColRange]] = {
-        if (files.isEmpty) return None
-        Option(cache.computeIfAbsent(ParquetRowCounts.fileSetKey(files),
-          _ => Try {
-          val sample = files.sortBy(_.getPath.toString).take(MaxFooters)
-          // per column: (min, max, nulls, usable)
-          val acc = scala.collection.mutable.Map[String,
-            (Double, Double, Long, Boolean)]()
-          var rows = 0L
-          sample.foreach { f =>
-            val reader = ParquetFileReader.open(
-              HadoopInputFile.fromPath(f.getPath, conf))
-            try {
-              reader.getFooter.getBlocks.asScala.foreach { b =>
-                rows += b.getRowCount
-                b.getColumns.asScala.foreach { c =>
-                  val name = c.getPath.toDotString
-                  val cur = acc.getOrElse(name,
-                    (Double.MaxValue, Double.MinValue, 0L, true))
-                  acc(name) = chunkRange(c) match {
-                    case Some((mn, mx, nulls)) if cur._4 =>
-                      (math.min(cur._1, mn), math.max(cur._2, mx),
-                        cur._3 + nulls, true)
-                    case _ => (0d, 0d, 0L, false)
-                  }
-                }
-              }
-            } finally reader.close()
+  /** Column ranges of a parquet-backed leaf's files, aggregated over the
+    * sampled footers ([[ParquetFooters.sampled]]); columns with any
+    * missing/unusable chunk statistics are absent from the map. */
+  private def rangesOf(listing: (Seq[FileStatusWithMetadata], SparkSession))
+      : Option[Map[String, ColRange]] =
+    ParquetFooters.sampled(listing._1, listing._2).flatMap { sample =>
+      val rows = sample.map(_._2.rows).sum
+      val usable = sample.flatMap(_._2.columns).groupMap(_._1)(_._2)
+        .flatMap { case (name, chunks) =>
+          val rs = chunks.flatten.map(chunkRange)
+          if (rs.contains(None)) None
+          else {
+            val (mins, maxs, nulls) = rs.flatten.unzip3
+            Some(name -> ColRange(mins.foldLeft(Double.MaxValue)(math.min),
+              maxs.foldLeft(Double.MinValue)(math.max),
+              math.max(0.0, math.min(1.0, nulls.sum.toDouble / rows))))
           }
-          if (rows <= 0) Map.empty[String, ColRange]
-          else acc.collect {
-            case (name, (mn, mx, nulls, true)) =>
-              name -> ColRange(mn, mx,
-                math.max(0.0, math.min(1.0, nulls.toDouble / rows)))
-          }.toMap
-        }.getOrElse(Map.empty))).filter(_.nonEmpty)
-  }
+        }
+      if (rows <= 0 || usable.isEmpty) None else Some(usable)
+    }
 
   /** (min, max, numNulls) of one column chunk in the Catalyst-comparable
     * domain, or None when the chunk's statistics can't support a range
     * estimate (missing stats, non-numeric type, NaN bounds, binary
     * decimals, INT96). */
-  private def chunkRange(c: ColumnChunkMetaData): Option[(Double, Double, Long)] = {
-    val st: Statistics[_] = c.getStatistics
+  private def chunkRange(st: Statistics[_]): Option[(Double, Double, Long)] = {
     if (st == null || st.isEmpty || !st.hasNonNullValue) return None
     val nulls = math.max(0L, st.getNumNulls)
     def num(v: Any): Option[Double] = v match {
       case n: java.lang.Number => Some(n.doubleValue())
       case _ => None
     }
-    val primitive = c.getPrimitiveType
+    val primitive = st.`type`()
     // factor into the Catalyst domain: dates stay in days, timestamps
     // normalize to MICROS (the fixture writer emits millis), int-backed
     // decimals divide out the scale

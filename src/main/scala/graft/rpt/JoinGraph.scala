@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
  * src/optimizer/table_manager.cpp:41-62).
  *
  * @param card      estimated cardinality: rowCount stat, else parquet
- *                  footer metadata ([[ParquetRowCounts]]), else a
+ *                  footer metadata ([[ParquetFooters]]), else a
  *                  sizeInBytes-derived proxy — the reference's
  *                  `estimated_cardinality` (table_manager.cpp:64-69).
  * @param buildable false when a bloom filter must not be BUILT over this
@@ -102,7 +102,7 @@ object JoinGraph extends PredicateHelper {
       val s = p.stats
       s.rowCount.map(c => (c.toDouble, true)).getOrElse {
         val footerCount = p.collectLeaves() match {
-          case Seq(leaf) => ParquetRowCounts.rowCount(leaf)
+          case Seq(leaf) => ParquetFooters.rowCount(leaf)
           case _ => None
         }
         footerCount.map(c => (c.toDouble, true)).getOrElse {

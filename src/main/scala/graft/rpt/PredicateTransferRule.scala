@@ -409,10 +409,6 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     // Memoized per unit; only applied when the unit's OWN static filter is
     // what qualified it (a transitively-reduced unit's count would measure
     // the unfiltered table and wrongly gate).
-    val footerGate = RptConf.footerKeepGate(conf)
-    // any stats source live? when both are disabled neither keep gate can
-    // ever fire — don't even pay the footer reads
-    val keepSources = conf.cboEnabled || footerGate
     // estimated (keptRows, totalRows) of the unit's OWN static filter, or
     // None when no source can estimate it; memoized per unit
     val keepEstMemo = mutable.HashMap[Int, Option[(Double, Double)]]()
@@ -423,7 +419,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
         else {
           val unfiltered: Option[Double] = u.plan.collectLeaves() match {
             case Seq(leaf) => leaf.stats.rowCount.map(_.toDouble)
-              .orElse(ParquetRowCounts.rowCount(leaf).map(_.toDouble))
+              .orElse(ParquetFooters.rowCount(leaf).map(_.toDouble))
             case _ => None
           }
           unfiltered.filter(_ > 0).flatMap { tot =>
@@ -446,25 +442,21 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
             val estKeep =
               if (cboUsable) u.plan.stats.rowCount.map(_.toDouble)
               else None
-            estKeep.orElse {
-              if (footerGate) FooterStats.keepFraction(u.plan).map(_ * tot)
-              else None
-            }.map(k => (k, tot))
+            estKeep.orElse(FooterStats.keepFraction(u.plan).map(_ * tot))
+              .map(k => (k, tot))
           }
         }
       })
-    val keepGateMemo = mutable.HashMap[Int, Boolean]()
     def measuredUnselective(id: Int): Boolean =
-      keepSources && keepGateMemo.getOrElseUpdate(id,
-        keepEstimate(id).exists { case (k, tot) =>
-          k >= RptConf.MaxBuildKeepFraction * tot
-        })
+      keepEstimate(id).exists { case (k, tot) =>
+        k >= RptConf.MaxBuildKeepFraction * tot
+      }
     // stricter keep ceiling for the probe-volume BYPASS (see
     // RptConf.DeepPlanBypassKeepFraction): an estimable-and-weak build must
     // not ride the aggressive exception path; unestimable builds (equality/
     // IN/LIKE filters footers can't price) keep the benefit of the doubt
     def bypassWeakBuild(id: Int): Boolean =
-      keepSources && keepEstimate(id).exists { case (k, tot) =>
+      keepEstimate(id).exists { case (k, tot) =>
         k >= RptConf.DeepPlanBypassKeepFraction * tot
       }
 
@@ -1048,11 +1040,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
       val static =
         if (unit.cardMeasured) unit.card
         else math.min(unit.card, defaultItems.toDouble)
-      val footerScale =
-        if (RptConf.footerKeepGate(conf)) {
-          FooterStats.keepFraction(unit.plan).getOrElse(1.0)
-        } else 1.0
-      static * footerScale
+      static * FooterStats.keepFraction(unit.plan).getOrElse(1.0)
     }
     math.max(4096L, math.min(est.toLong, maxItems))
   }

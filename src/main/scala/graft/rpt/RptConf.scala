@@ -353,22 +353,10 @@ object RptConf {
    *  syntactic filtered/unfiltered classification cannot see this (q05's
    *  `s_acctbal > 0` keeps ~90% of suppliers and measured 0.90×). Keep
    *  fractions come from CBO filter estimates (with ANALYZE'd column
-   *  stats) or the default-path footer min/max estimate
-   *  ([[FOOTER_KEEP_GATE]]), which is also the gate's off switch. */
+   *  stats), else the footer min/max estimate of
+   *  [[FooterStats.keepFraction]], which abstains unless every conjunct
+   *  is a range footers can price. */
   val MaxBuildKeepFraction: Double = 0.8
-  /** Estimate build keep fractions for the [[MaxBuildKeepFraction]]
-   *  gate from parquet footer column min/max statistics under a uniform-
-   *  distribution assumption (the System R estimator) — the only stats
-   *  source live on the DEFAULT path, where path-based parquet reads have
-   *  no CBO column stats. One-sided
-   *  by construction: the estimate exists only when EVERY non-trivial
-   *  filter conjunct is a bare `col <op> literal` range over a
-   *  numeric/date/timestamp column (see [[FooterStats.keepFraction]]), so
-   *  an equality/IN/LIKE conjunct — whose selectivity footers cannot
-   *  see — always blocks the stand-down. Costs at most 8 footer reads per
-   *  build relation, cached by file set (footers are already read on this
-   *  path for row counts and BF sizing). On by default. */
-  val FOOTER_KEEP_GATE = "spark.graft.rpt.footerKeepGate"
   /** Push the transfer INTO the scan for runtime-filterable v2 sources
    *  (`graft-parquet`, Iceberg-class): alongside the bloom-filter probe,
    *  splice a [[org.apache.spark.sql.catalyst.expressions.DynamicPruningSubquery]]
@@ -474,7 +462,7 @@ object RptConf {
     WAVE_WORK_FRACTION, WAVE_BUILD_FRACTION, FILTERED_PROBE_WAVE_MULTIPLE,
     FILTERED_PROBE_KEPT_WAVE_MULTIPLE, MAX_BUILD_ROWS,
     BIG_BUILD_PROBE_FRACTION, MIN_BUILD_PROBE_RATIO, FAIL_FAST, MAX_BF_ITEMS,
-    DEFAULT_BF_ITEMS, FOOTER_KEEP_GATE, V2_SCAN_FILTER,
+    DEFAULT_BF_ITEMS, V2_SCAN_FILTER,
     V2_SCAN_FILTER_MAX_BUILD_ROWS, V2_QUANTIZED_OVER_CAP, V2_QUANT_BUCKETS,
     ADAPTIVE_PROBE, ADAPTIVE_PROBE_SAMPLE)
   private val Prefix = "spark.graft.rpt."
@@ -551,8 +539,6 @@ object RptConf {
     conf.getConfString(MAX_BF_ITEMS, "4000000").toLong
   def defaultBfItems(conf: SQLConf): Long =
     conf.getConfString(DEFAULT_BF_ITEMS, "1000000").toLong
-  def footerKeepGate(conf: SQLConf): Boolean =
-    conf.getConfString(FOOTER_KEEP_GATE, "true").toBoolean
   def v2ScanFilter(conf: SQLConf): Boolean =
     conf.getConfString(V2_SCAN_FILTER, "true").toBoolean
   def v2ScanFilterMaxBuildRows(conf: SQLConf): Long =

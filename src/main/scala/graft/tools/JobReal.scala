@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
+
 import graft.GraftSession
 
 /**
@@ -32,6 +34,16 @@ object JobReal {
     "keyword", "kind_type", "link_type", "movie_link", "name", "aka_name",
     "aka_title", "person_info", "char_name", "role_type")
 
+  /** The two join regimes: `autoBroadcastJoinThreshold` per regime name. */
+  private[tools] val Regimes =
+    Seq("broadcast" -> "10485760", "shuffle" -> "-1")
+
+  /** Registers the IMDB tables under `dir` as temp views. */
+  private[tools] def views(spark: SparkSession, dir: String): Unit =
+    tables.foreach { t =>
+      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+    }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -46,9 +58,7 @@ object JobReal {
 
     val spark = GraftSession.build(appName = "graft-job-real")
     spark.sparkContext.setLogLevel("WARN")
-    tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
+    views(spark, dir)
 
     val queries = JobRealQueries.all
       .filter { case (n, _) => only.isEmpty || only(n) }
@@ -82,7 +92,7 @@ object JobReal {
     def cls(s: Double): String =
       if (s > 1.05) "faster" else if (s < 0.95) "slower" else "same"
 
-    val regimePlan = Seq("broadcast" -> "10485760", "shuffle" -> "-1")
+    val regimePlan = Regimes
       .filter { case (r, _) => regimes.isEmpty || regimes(r) }
     require(regimePlan.nonEmpty, s"regime filter matched nothing: $regimes")
 

@@ -1,8 +1,10 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.util.matching.Regex
+
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 import graft.{GraftSession, SparkEntry}
 
@@ -18,14 +20,31 @@ import graft.{GraftSession, SparkEntry}
  * are byte-identical: a plain `diff -r` of two dump directories then shows
  * only real plan changes.
  *
+ * `--job` writes the optimized plan, subqueries included, of each of the
+ * 113 [[JobRealQueries]] in both [[JobReal.Regimes]], one file per query
+ * and regime (`<query>_<regime>.txt`): the JOB plan-identity check.
+ *
  * Usage: SPARK_GRAFT_SF_DIR=<dir> [SPARK_GRAFT_BENCH_QUERIES=a,b]
  *          runMain graft.tools.PlanDump <outDir> [suffix]
+ *        runMain graft.tools.PlanDump --job <imdbDir> <outDir>
  */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "args: <outDir> [suffix]")
-    val outDir = Paths.get(args(0))
-    val suffix = if (args.length > 1) "_" + args(1) else ""
+  def main(args: Array[String]): Unit = args match {
+    case Array("--job", imdbDir, outDir) => dumpJob(imdbDir, Paths.get(outDir))
+    case Array(outDir, suffix @ _*) if suffix.size <= 1 && outDir != "--job" =>
+      dumpRegistry(Paths.get(outDir), suffix.map("_" + _).mkString)
+    case _ => sys.error("args: <outDir> [suffix] | --job <imdbDir> <outDir>")
+  }
+
+  private def write(outDir: Path, file: String, text: String): Unit = {
+    Files.write(outDir.resolve(file),
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // scalastyle:off println
+    println(s"PLANDUMP ${outDir.resolve(file)}")
+    // scalastyle:on println
+  }
+
+  private def dumpRegistry(outDir: Path, suffix: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -40,14 +59,35 @@ object PlanDump {
           try normalize(fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
           catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
-        Files.write(outDir.resolve(s"$name$suffix.txt"),
-          text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // scalastyle:off println
-        println(s"PLANDUMP $name -> ${outDir.resolve(s"$name$suffix.txt")}")
-        // scalastyle:on println
+        write(outDir, s"$name$suffix.txt", text)
       }
     spark.stop()
   }
+
+  private def dumpJob(imdbDir: String, outDir: Path): Unit = {
+    Files.createDirectories(outDir)
+    val spark = GraftSession.build(appName = "graft-plan-dump-job")
+    JobReal.views(spark, imdbDir)
+    spark.conf.set(graft.rpt.RptConf.ENABLED, "true")
+    for ((regime, threshold) <- JobReal.Regimes) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      JobRealQueries.all.foreach { case (name, sql) =>
+        val text =
+          try normalize(withSubqueries(spark.sql(sql).queryExecution
+            .optimizedPlan).zipWithIndex.map {
+              case (p, 0) => p.treeString
+              case (p, i) => s"== Subquery $i ==\n${p.treeString}"
+            }.mkString("\n"))
+          catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}" }
+        write(outDir, s"${name}_$regime.txt", text)
+      }
+    }
+    spark.stop()
+  }
+
+  /** `p` followed by every subquery plan under it, depth first. */
+  private def withSubqueries(p: LogicalPlan): Seq[LogicalPlan] =
+    p +: p.flatMap(_.subqueries).flatMap(withSubqueries)
 
   // per-JVM counters: renumbered in order of first appearance, so equal
   // plans print equal numbers and a changed reference still shows

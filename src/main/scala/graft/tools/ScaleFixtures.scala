@@ -78,7 +78,7 @@ object ScaleFixtures {
       val srcBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val srcRows = math.max(1L,
         df.queryExecution.optimizedPlan.collectLeaves().headOption
-          .flatMap(graft.rpt.ParquetRowCounts.rowCount)
+          .flatMap(graft.rpt.ParquetFooters.rowCount)
           .getOrElse(df.count()))
       val recordsPerFile = math.max(1L,
         (BigDecimal(srcRows) * 128L * 1024 * 1024 /

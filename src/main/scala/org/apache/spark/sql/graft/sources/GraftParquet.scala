@@ -1,14 +1,10 @@
 package org.apache.spark.sql.graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.connector.expressions.{FieldReference, Literal => V2Literal, LiteralValue, NamedReference}
@@ -35,8 +31,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * [[org.apache.spark.sql.catalyst.expressions.DynamicPruningSubquery]]),
  * `filter(predicates)` receives the build side's key values and
  *  - drops whole FILES whose footer min/max excludes every value
- *    (driver-side, bounded, cached — at 100 TB with ~128 MB files and a
- *    key-clustered layout this skips scheduling entire task sets);
+ *    (driver-side, each footer read once per JVM — at 100 TB with
+ *    ~128 MB files and a key-clustered layout this skips scheduling
+ *    entire task sets);
  *  - appends the values to the pushed parquet filters, so surviving
  *    files skip ROW GROUPS via zone maps / dictionaries inside the
  *    reader (executor-side, no driver cost).
@@ -550,14 +547,6 @@ object GraftParquetScan {
       case None => true
     }
 
-  private val MaxPruneFiles = 1 << 20 // beyond this, skip the footer pass
-  // (path, length, column) -> per-file [min, max] from row-group footers;
-  // None = stats unusable for that column (always keep)
-  private val rangeCache =
-    new ConcurrentHashMap[(String, Long, String), Option[(Any, Any)]]()
-
-  private[graft] def clearCache(): Unit = rangeCache.clear()
-
   /** Footer-stats containment: keep the file unless its [min,max] for
     * `col` excludes EVERY runtime value. Unreadable/missing stats keep
     * the file — pruning must never turn IO trouble into wrong results. */
@@ -570,36 +559,26 @@ object GraftParquetScan {
       case None => true
     }
 
-  /** Cached per-file [min, max] for `col` from the row-group footers, in
-    * the Catalyst-internal value space; None = stats unusable (caller must
-    * keep the file). */
+  /** Per-file [min, max] for `col` from the row-group footers
+    * ([[graft.rpt.ParquetFooters]]), in the Catalyst-internal value space;
+    * None = stats unusable (caller must keep the file). */
   private def fileRange(conf: org.apache.hadoop.conf.Configuration,
-      path: Path, len: Long, col: String, dt: DataType): Option[(Any, Any)] = {
-    if (rangeCache.size() > MaxPruneFiles) return None
-    rangeCache.computeIfAbsent((path.toString, len, col), _ =>
-      Try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-        try {
-          val stats = reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == col)
-              .map(_.getStatistics)
-          }
-          if (stats.isEmpty || stats.exists(s =>
-              s == null || !s.hasNonNullValue || s.isEmpty)) None
-          else {
-            val mins = stats.map(s =>
-              parquetStatValue(s.genericGetMin.asInstanceOf[AnyRef], dt))
-            val maxs = stats.map(s =>
-              parquetStatValue(s.genericGetMax.asInstanceOf[AnyRef], dt))
-            if (mins.contains(None) || maxs.contains(None)) None
-            else {
-              implicit val ord: Ordering[Any] = catalystOrdering(dt).get
-              Some((mins.flatten.min, maxs.flatten.max))
-            }
-          }
-        } finally reader.close()
-      }.toOption.flatten.filter(_ => catalystOrdering(dt).isDefined))
-  }
+      path: Path, len: Long, col: String, dt: DataType): Option[(Any, Any)] =
+    catalystOrdering(dt).flatMap { implicit ord =>
+      graft.rpt.ParquetFooters.footer(conf, path, len).flatMap { footer =>
+        val stats = footer.columns.getOrElse(col, IndexedSeq.empty)
+        if (stats.isEmpty || stats.exists(s =>
+            s == null || !s.hasNonNullValue || s.isEmpty)) None
+        else {
+          val mins = stats.map(s =>
+            parquetStatValue(s.genericGetMin.asInstanceOf[AnyRef], dt))
+          val maxs = stats.map(s =>
+            parquetStatValue(s.genericGetMax.asInstanceOf[AnyRef], dt))
+          if (mins.contains(None) || maxs.contains(None)) None
+          else Some((mins.flatten.min, maxs.flatten.max))
+        }
+      }
+    }
 
   /** Can `fileMayMatch` possibly refute this pushed filter from footer
     * ranges? (Filters it cannot evaluate keep every file — used to skip
@@ -686,7 +665,7 @@ object GraftParquetScan {
   }
 }
 
-/** File listing of a v2 parquet-backed relation, with the session that
+/** Non-empty files of a v2 parquet-backed relation, with the session that
   * owns the table — bridge for `graft.rpt` (the file-table scaffold is
   * `private[sql]`). Used by the rule's zero-execution footer-stats path
   * when a transfer build side reads through a v2 source; footers are read
@@ -699,8 +678,8 @@ object V2RelationFiles {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         r.table match {
           case t: ParquetTable =>
-            Try(t.fileIndex.listFiles(Nil, Nil).flatMap(_.files).toSeq)
-              .toOption.map(_ -> t.sparkSession)
+            Try(t.fileIndex.listFiles(Nil, Nil).flatMap(_.files)
+              .filter(_.getLen > 0)).toOption.map(_ -> t.sparkSession)
           case _ => None
         }
       case _ => None

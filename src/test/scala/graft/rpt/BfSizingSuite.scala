@@ -40,7 +40,7 @@ class BfSizingSuite extends SparkTestBase {
     for (t <- Seq("region", "nation", "part", "orders", "lineitem")) {
       val df = spark.read.parquet(s"$sfDir/$t.parquet")
       val leaf = df.queryExecution.optimizedPlan.collectLeaves().head
-      val counted = ParquetRowCounts.rowCount(leaf)
+      val counted = ParquetFooters.rowCount(leaf)
       assert(counted.contains(df.count()),
         s"$t: footer count $counted != actual ${df.count()}")
     }
@@ -75,8 +75,9 @@ class BfSizingSuite extends SparkTestBase {
   test("footer keep-fraction scales BF sizing on the default path") {
     // sf0.01 so the scaled size clears the 4096 floor: l_quantity > 25
     // keeps ~50% of 60k lineitem rows — the default-path BF must size at
-    // the scaled estimate, not the whole-table footer count; disabling
-    // the footer gate restores the unscaled upper bound
+    // the scaled estimate, not the whole-table footer count; the same
+    // range over an expression of the column, which the footer estimate
+    // cannot price, sizes at the unscaled footer count
     val sf01 = "/root/testdata/sf0.01"
     spark.read.parquet(s"$sf01/lineitem.parquet")
       .createOrReplaceTempView("li01")
@@ -97,10 +98,10 @@ class BfSizingSuite extends SparkTestBase {
       assert(scaled.forall(e => e >= (0.3 * total).toLong &&
         e <= (0.7 * total).toLong),
         s"BF not sized by the ~0.5 footer keep estimate of $total ($scaled)")
-      val unscaled = withConf(RptConf.FOOTER_KEEP_GATE -> "false")(
-        bfAggs(sql).map(estItems))
+      val unscaled = bfAggs(sql.replace("l_quantity > 25",
+        "l_quantity + 0 > 25")).map(estItems)
       assert(unscaled.contains(total),
-        s"gate-off BF not sized at the footer count $total ($unscaled)")
+        s"unpriced BF not sized at the footer count $total ($unscaled)")
     }
   }
 
@@ -147,8 +148,7 @@ class BfSizingSuite extends SparkTestBase {
         |JOIN supplier ON l_suppkey = s_suppkey
         |WHERE p_size < 10""".stripMargin
     withConf(RptConf.ENABLED -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.FOOTER_KEEP_GATE -> "true") {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def buildTables(sql: String): Set[String] =
         RptTestHelpers.buildTables(spark, sql)
       // supplier's keep-everything range is measured out; orders'
@@ -184,17 +184,17 @@ class BfSizingSuite extends SparkTestBase {
       """SELECT count(*) AS n
         |FROM rel_lineitem
         |JOIN rel_orders ON l_orderkey = o_orderkey
-        |WHERE o_orderdate < DATE '1999-01-01'""".stripMargin
+        |WHERE year(o_orderdate) < 1999""".stripMargin
     val base = Seq(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       RptConf.MIN_PROBE_ROWS -> "0",
       RptConf.MIN_EDGES -> "1",
       RptConf.MAX_BUILD_ROWS -> "1000", // orders (~15k) is over-absolute
-      RptConf.MAX_BF_ITEMS -> "4096",
-      // footer keep-scaling would shrink the estimate back under the 4096
+      // the date range is written over year(): footer keep-scaling of a
+      // priceable range would shrink the estimate back under the 4096
       // sizing floor at this fixture size, hiding what this test pins
       // (the CAP lift, not the estimate)
-      RptConf.FOOTER_KEEP_GATE -> "false")
+      RptConf.MAX_BF_ITEMS -> "4096")
     withConf(base :+ (RptConf.BIG_BUILD_PROBE_FRACTION -> "0") : _*) {
       assert(bfAggs(sql).isEmpty,
         "over-absolute build transferred with the relative path disabled")

@@ -16,12 +16,15 @@ class CboGateSuite extends SparkTestBase {
   private def buildTables(sql: String): Set[String] =
     RptTestHelpers.buildTables(spark, sql)
 
-  // weak supplier filter (keeps every row), selective orders filter
+  // weak supplier filter (keeps every row), selective orders filter. The
+  // supplier filter is an OR of ranges: CBO estimates it, the footer
+  // estimate cannot, so this suite sees the CBO estimate path alone
   private val weak =
     """SELECT count(*) AS n FROM lineitem
       |JOIN graft_cbo_supplier s ON l_suppkey = s.s_suppkey
       |JOIN orders ON l_orderkey = o_orderkey
-      |WHERE s.s_acctbal > -999999 AND o_totalprice < 20000""".stripMargin
+      |WHERE (s.s_acctbal > -999999 OR s.s_acctbal < -1999999)
+      |  AND o_totalprice < 20000""".stripMargin
 
   test("ANALYZE'd stats stand a weak build down; no-stats CBO is inert") {
     spark.sql("DROP TABLE IF EXISTS graft_cbo_supplier")
@@ -29,11 +32,8 @@ class CboGateSuite extends SparkTestBase {
       s"""CREATE TABLE graft_cbo_supplier
          |USING parquet LOCATION '$sfDir/supplier.parquet'""".stripMargin)
     try {
-      // footer gate off: this suite isolates the CBO estimate path (the
-      // weak range here is exactly what the footer estimate also catches)
       withConf(RptConf.ENABLED -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        RptConf.FOOTER_KEEP_GATE -> "false",
         "spark.sql.cbo.enabled" -> "true") {
         // no column stats yet: the estimate is untrustworthy (selectivity
         // defaults to 1.0) and must NOT gate — supplier still builds
@@ -45,9 +45,9 @@ class CboGateSuite extends SparkTestBase {
         spark.sql("ANALYZE TABLE graft_cbo_supplier COMPUTE STATISTICS " +
           "FOR ALL COLUMNS")
         spark.catalog.refreshTable("graft_cbo_supplier")
-        // with stats, FilterEstimation sees s_acctbal > -999999 keeps
-        // ~100% of rows → the supplier build stands down; orders'
-        // selective filter keeps transferring
+        // with stats, FilterEstimation sees the OR keeps ~100% of rows →
+        // the supplier build stands down; orders' selective filter keeps
+        // transferring
         val gated = buildTables(weak)
         assert(!gated.contains("supplier"),
           s"stats-estimated weak build not gated (builds: $gated)")
@@ -80,8 +80,7 @@ class CboGateSuite extends SparkTestBase {
         |WHERE n_name = 'NATION_3' AND s_acctbal > -999999""".stripMargin
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.MIN_PROBE_ROWS -> "0",
-      RptConf.FOOTER_KEEP_GATE -> "true") {
+      RptConf.MIN_PROBE_ROWS -> "0") {
       assert(!buildTables(chain).contains("supplier"),
         "weak supplier build must stand down under the keep-fraction gate")
       // find the lineitem-build subquery and check nation rides inside it

@@ -10,7 +10,9 @@ import graft.SparkTestBase
  * conjunct the footers cannot estimate (equality, LIKE) blocks the
  * stand-down, and the timestamp-unit normalization (fixture timestamps
  * are parquet MILLIS, Catalyst literals MICROS — a factor slip of 1000
- * flips both date assertions).
+ * flips both date assertions). The footer cache keeps each file set's
+ * own numbers, reads through the relation's session and keeps no failed
+ * read.
  */
 class FooterGateSuite extends SparkTestBase {
 
@@ -40,12 +42,14 @@ class FooterGateSuite extends SparkTestBase {
     }
   }
 
-  test("footerKeepGate=false restores the un-gated plan") {
+  test("a weak range footers cannot price keeps the un-gated plan") {
+    // the same range over an expression of the column: the estimate
+    // abstains, so the supplier build stays
     withConf(RptConf.ENABLED -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      RptConf.FOOTER_KEEP_GATE -> "false") {
-      assert(buildTables(weak).contains("supplier"),
-        "gate fired with footerKeepGate off")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val unpriced = weak.replace("s_acctbal > 0", "s_acctbal + 0 > 0")
+      assert(buildTables(unpriced).contains("supplier"),
+        "gate fired on a filter the footer estimate cannot price")
     }
   }
 
@@ -106,19 +110,8 @@ class FooterGateSuite extends SparkTestBase {
   }
 
   // "Aa" and "BB" have equal String hashCodes, so two listings that differ
-  // only there hash alike: a hash-keyed footer cache would hand one file
-  // set the other's row counts and column ranges
-  test("footer caches key a file set by its full listing, not a hash") {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata
-    def listing(dir: String) = Seq(FileStatusWithMetadata(new FileStatus(
-      100L, false, 1, 1L, 0L, new Path(s"file:/data/$dir/part-0.parquet"))))
-    assert("file:/data/Aa/part-0.parquet#100".hashCode ===
-      "file:/data/BB/part-0.parquet#100".hashCode)
-    assert(ParquetRowCounts.fileSetKey(listing("Aa")) !==
-      ParquetRowCounts.fileSetKey(listing("BB")))
-  }
-
+  // only there hash alike: a footer cache keyed by a hash of the listing
+  // would hand one file set the other's row counts and column ranges
   test("hash-colliding directories keep their own footer ranges") {
     import java.nio.file.{Files, Path}
     val root = Files.createTempDirectory("graft_footer_key")
@@ -150,29 +143,58 @@ class FooterGateSuite extends SparkTestBase {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
+  /** A fresh directory holding `v` = 0..99 as one INT parquet file. */
+  private def hundredRows(root: java.nio.file.Path, dir: String): String = {
+    val path = root.resolve(dir).toString
+    spark.range(0, 100).selectExpr("CAST(id AS INT) AS v").coalesce(1)
+      .write.parquet(path)
+    path
+  }
+
+  /** `session` can no longer open local files. */
+  private def breakLocalFiles(session: org.apache.spark.sql.SparkSession)
+      : Unit = {
+    session.conf.set("fs.file.impl", "graft.NoSuchFileSystem")
+    session.conf.set("fs.file.impl.disable.cache", "true")
+  }
+
+  // each case reads the SAME directory through a session that cannot open
+  // it, then through one that can: the failed read must not be cached
   test("v2 footer reads use the relation's own session, not the active one") {
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft_footer_v2")
-    def v2Range(session: org.apache.spark.sql.SparkSession, dir: String)
-        : Option[(Double, Double)] = {
-      val path = root.resolve(dir).toString
-      spark.range(0, 100).selectExpr("CAST(id AS INT) AS v").coalesce(1)
-        .write.parquet(path)
-      // the table lists its files here, before any conf below applies
-      val plan = session.read.format("graft-parquet").load(path)
-        .queryExecution.analyzed
-      if (session ne spark) {
-        // this session can no longer open local files
-        session.conf.set("fs.file.impl", "graft.NoSuchFileSystem")
-        session.conf.set("fs.file.impl.disable.cache", "true")
-      }
+    def range(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       FooterStats.columnRange(plan, plan.output.head.asInstanceOf[
         org.apache.spark.sql.catalyst.expressions.AttributeReference])
-    }
     try {
-      assert(v2Range(spark, "own") === Some((0.0, 99.0)))
-      assert(v2Range(spark.newSession(), "other") === None,
+      val path = hundredRows(root, "t")
+      val other = spark.newSession()
+      // the table lists its files here, before the conf below applies
+      val otherPlan = other.read.format("graft-parquet").load(path)
+        .queryExecution.analyzed
+      breakLocalFiles(other)
+      assert(range(otherPlan) === None,
         "footers were read with the active session's conf")
+      val plan = spark.read.format("graft-parquet").load(path)
+        .queryExecution.analyzed
+      assert(range(plan) === Some((0.0, 99.0)),
+        "a failed footer read was cached")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  test("v1 row counts retry a footer read that failed in another session") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_footer_v1")
+    try {
+      val path = hundredRows(root, "t")
+      val other = spark.newSession()
+      val otherPlan = other.read.parquet(path).queryExecution.analyzed
+      breakLocalFiles(other)
+      assert(ParquetFooters.rowCount(otherPlan) === None,
+        "footers were read with another session's conf")
+      assert(ParquetFooters.rowCount(
+        spark.read.parquet(path).queryExecution.analyzed) === Some(100L),
+        "a failed footer read was cached")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }

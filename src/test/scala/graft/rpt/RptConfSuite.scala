@@ -76,13 +76,15 @@ class RptConfSuite extends SparkTestBase {
   }
 
   test("undeclared spark.graft.rpt keys raise; every declared key is accepted") {
-    // settings that are now fixed cost-model terms in RptConf: a script
-    // still setting one would otherwise change nothing, silently
+    // settings that are now fixed cost-model terms in RptConf or always
+    // on (footerKeepGate): a script still setting one would otherwise
+    // change nothing, silently
     val removed = Seq("broadcastConversionMargin", "deepPlanProbeRows",
       "deepPlanBypassKeepFraction", "maxBuildKeepFraction",
       "filteredProbeMaxKeep", "filteredProbeExtendFactor",
       "bigBuildEffectiveCard", "bigBuildMaxBfItems",
-      "adaptiveProbeKeepThreshold").map("spark.graft.rpt." + _)
+      "adaptiveProbeKeepThreshold", "footerKeepGate")
+      .map("spark.graft.rpt." + _)
     for (key <- removed) {
       assert(!RptConf.Keys(key))
       withConf(RptConf.ENABLED -> "true", key -> "1") {
