@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -134,8 +135,13 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
     if (RptConf.displayDag(conf)) {
       logInfo(s"[graft-rpt] transfer schedule:\n${DagPrinter.render(graph, ops)}")
     }
-    PredicateTransferRule.lastSchedule = Some((graph, ops))
-    val rewritten = applyOps(plan, graph, ops, deepPlanEdges, bcCeiling)
+    // the schedule travels with the plan; an input plan the ops left
+    // unchanged may be shared with other queries, so a copy carries it
+    val rewritten = applyOps(plan, graph, ops, deepPlanEdges, bcCeiling) match {
+      case same if same eq plan => plan.clone()
+      case changed => changed
+    }
+    rewritten.setTagValue(PredicateTransferRule.ScheduleTag, (graph, ops))
     if (RptConf.displayPhysicalDag(conf)) {
       logInfo(s"[graft-rpt] rewritten plan:\n${rewritten.treeString}")
     }
@@ -869,8 +875,8 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           // aggregate — a single build-side scan) through the same
           // DynamicPruningSubquery channel, and the probe relation is
           // marked `graft.range.<col>` so the scan reads the delivered
-          // pair as the [lo, hi] envelope: footer file-prune + row-group
-          // zone-map skip, runtime-fresh, no planning-time staleness.
+          // pair as the [lo, hi] envelope: footer file-prune,
+          // runtime-fresh, no planning-time staleness.
           op.probeKeys.zip(op.buildKeys).zipWithIndex
             .filterNot { case (_, i) => quantHandled(i) }.foreach {
             case ((pk: AttributeReference, bk: AttributeReference), i)
@@ -907,7 +913,7 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
           // (rpt_optimizer.cpp:1401-1501). The DynamicPruningSubquery
           // rides to BatchScanExec.runtimeFilters; at execution the build
           // side's distinct keys reach the scan's filter(), skipping
-          // files/row groups. Only direct relation columns qualify — the
+          // files. Only direct relation columns qualify — the
           // engine cannot translate a computed pruning key into a v2
           // column reference (it would silently drop the filter anyway).
           val v2Attrs = v2FilterableAttrs(graph.units(op.probe).plan)
@@ -1047,12 +1053,21 @@ case class PredicateTransferRule() extends Rule[LogicalPlan]
 }
 
 object PredicateTransferRule {
-  /** The most recent transfer schedule this JVM planned — consumed by
-    * [[DagPrinter.renderPhysical]]/the profiling listener to join measured
-    * probe selectivities onto the schedule's boxed tree (display-only:
-    * a best-effort pairing, racy across concurrent sessions by design). */
-  @volatile private[rpt] var lastSchedule
-      : Option[(JoinGraph, Seq[ScheduledOp])] = None
+  /** The transfer schedule the rule planned, tagged on the plan it
+    * returns. [[DagPrinter.renderPhysical]] (through
+    * [[RptExplain.displayPhysicalDag]] and the profiling listener) joins
+    * measured probe selectivities onto its boxed tree. Optimizer rules
+    * that replace a tagged node copy the tag onto its replacement. */
+  private[rpt] val ScheduleTag =
+    TreeNodeTag[(JoinGraph, Seq[ScheduledOp])]("graft.rpt.schedule")
+
+  /** The schedule tagged on an optimized plan — its main query first,
+    * then its subqueries; None when the rule planned no schedule. */
+  private[rpt] def scheduleOf(plan: LogicalPlan)
+      : Option[(JoinGraph, Seq[ScheduledOp])] =
+    (plan +: plan.subqueriesAll).iterator
+      .flatMap(_.find(_.getTagValue(ScheduleTag).isDefined))
+      .flatMap(_.getTagValue(ScheduleTag)).nextOption()
 
   /** Build key -> the key quantized to its grid anchor (same output
     * type): floor-to-multiple-of-width in the internal integral domain,
@@ -1185,6 +1200,4 @@ private[rpt] object RuntimeCounts {
         .foreach { case (k, _) => cache.remove(k) }
     }
   }
-
-  private[rpt] def clear(): Unit = cache.clear()
 }

@@ -363,8 +363,9 @@ object RptConf {
    *  on each probe key that is a direct column of a
    *  `SupportsRuntimeV2Filtering` scan. At execution the build side's
    *  distinct keys reach the scan's `filter()`, dropping whole FILES by
-   *  footer range and ROW GROUPS by zone map — the reference's dynamic
-   *  filter pushdown into LOGICAL_GET (rpt_optimizer.cpp:1401-1501,
+   *  footer range (row groups inside kept files are not runtime-filtered:
+   *  the scan's reader factory is built at planning) — the reference's
+   *  dynamic filter pushdown into LOGICAL_GET (rpt_optimizer.cpp:1401-1501,
    *  physical_create_bf.cpp:282-350), which stock Spark only does for
    *  broadcast-reusable DPP over partition columns. On by default: it
    *  fires only when the probe leaf is a runtime-filterable v2 relation
@@ -405,11 +406,11 @@ object RptConf {
    *  the build delivers its runtime MIN/MAX (two values through the same
    *  channel) and the probe relation is marked `graft.range.<col>` so
    *  the scan reads the pair as a `[lo, hi]` envelope — footer
-   *  file-prune plus row-group zone-map skip, still runtime-fresh. */
+   *  file-prune, still runtime-fresh. */
   val V2_QUANTIZED_OVER_CAP = "spark.graft.rpt.v2QuantizedOverCap"
   /** Target bucket count for the over-cap quantization grid (default
    *  4096): width = max(1, ceil(footerSpan / buckets)). More buckets =
-   *  finer file/row-group pruning, a (slightly) larger delivered value
+   *  finer file pruning, a (slightly) larger delivered value
    *  set; the delivered count is also bounded by the build's distinct
    *  keys. */
   val V2_QUANT_BUCKETS = "spark.graft.rpt.v2QuantBuckets"

@@ -25,12 +25,12 @@ object RptExplain {
     * tree (dag_printer.cpp RenderSubtree) with each unit annotated by its
     * MEASURED probe rows/selectivity from the executed plan's metrics.
     * Requires an action to have run on `df` (metrics are post-execution)
-    * and joins against the most recently planned schedule. */
+    * and joins against the schedule tagged on `df`'s own optimized plan. */
   def displayPhysicalDag(df: DataFrame): String =
-    PredicateTransferRule.lastSchedule match {
+    PredicateTransferRule.scheduleOf(df.queryExecution.optimizedPlan) match {
       case Some((g, ops)) =>
         DagPrinter.renderPhysical(g, ops, df.queryExecution)
-      case None => "rpt: no transfer schedule planned in this session"
+      case None => "rpt: no transfer schedule planned for this query"
     }
 
   private case class Probe(

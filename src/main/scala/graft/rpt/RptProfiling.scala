@@ -191,8 +191,8 @@ object RptProfiling {
           // the physical-DAG render rides the same listener when asked for
           if (sparkSession.conf.getOption(RptConf.DISPLAY_PHYSICAL_DAG)
               .exists(_.toBoolean)) {
-            PredicateTransferRule.lastSchedule.foreach { case (g, ops) =>
-              println(DagPrinter.renderPhysical(g, ops, qe))
+            PredicateTransferRule.scheduleOf(qe.optimizedPlan).foreach {
+              case (g, ops) => println(DagPrinter.renderPhysical(g, ops, qe))
             }
           }
           // scalastyle:on println

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.connector.expressions.{FieldReference, Literal => V2Literal, LiteralValue, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsReportStatistics, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
@@ -29,14 +29,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * scan). This source is the Spark-native analog: when the engine plans a
  * runtime group filter (stock DPP, or the RPT rule's spliced
  * [[org.apache.spark.sql.catalyst.expressions.DynamicPruningSubquery]]),
- * `filter(predicates)` receives the build side's key values and
- *  - drops whole FILES whose footer min/max excludes every value
- *    (driver-side, each footer read once per JVM — at 100 TB with
- *    ~128 MB files and a key-clustered layout this skips scheduling
- *    entire task sets);
- *  - appends the values to the pushed parquet filters, so surviving
- *    files skip ROW GROUPS via zone maps / dictionaries inside the
- *    reader (executor-side, no driver cost).
+ * `filter(predicates)` receives the build side's key values and drops
+ * whole FILES whose footer min/max excludes every value (driver-side,
+ * each footer read once per JVM — at 100 TB with ~128 MB files and a
+ * key-clustered layout this skips scheduling entire task sets). Row
+ * groups inside kept files are not runtime-filtered: the engine builds
+ * the scan's reader factory while planning, before `filter` runs.
  * Everything else — schema inference, vectorized reading, aggregate
  * pushdown, writes — is the stock parquet v2 path, delegated verbatim.
  *
@@ -96,36 +94,35 @@ class GraftParquetScanBuilder(
 
 /**
  * A [[ParquetScan]] that also implements [[SupportsRuntimeV2Filtering]].
- * The v2 contract calls `filter` at most once per scan instance, before
- * partition planning; a second call with different predicates (a shared
- * instance across plan branches) conservatively DISABLES pruning rather
- * than over-prune either consumer — runtime filters only ever skip data
- * that cannot match, so "no pruning" is always correct.
+ * `filter` turns the runtime values delivered for each column into one
+ * [[KeyIntervals]] set, and `partitions` drops every file whose footer
+ * [min, max] on that column meets none of its intervals. The v2 contract
+ * calls `filter` at most once per scan instance, before partition
+ * planning; a second call with different predicates (a shared instance
+ * across plan branches) conservatively DISABLES pruning rather than
+ * over-prune either consumer — runtime filters only ever skip data that
+ * cannot match, so "no pruning" is always correct.
  *
- * `quantWidths` (from `graft.quant.<col>=<width>` read options, injected
- * by the RPT rule's over-cap in-scan path) switches a column's runtime
- * IN-set interpretation from exact keys to QUANTIZED ANCHORS: each
- * delivered value `v` stands for the key range `[v, v+width]` (internal
- * integral domain). The build side quantizes its keys onto the same grid
- * at execution, so the range union covers every runtime build key
- * exactly — that makes the over-cap path runtime-fresh and uncapped
- * (the reference's scan filters are likewise built fresh per execution,
- * physical_create_bf.cpp:282-350). A width conservatively widens ANY
- * predicate delivered on that column (an under-cap exact set widened by
- * `width` is a superset — never over-prunes).
- *
- * `rangeCols` (from `graft.range.<col>=1` read options) switches a
- * column's runtime IN-set interpretation to an ENVELOPE: the delivered
- * value set stands for the whole ordered range
- * `[min(values), max(values)]`. The rule uses this for over-cap builds
- * whose keys the quantized grid cannot express (VARCHAR and other
- * non-integral orderable types): the build side delivers its runtime
- * MIN/MAX (two values) and the scan prunes files whose footer range
- * misses the envelope plus pushes `>= lo AND <= hi` to row-group zone
- * maps — the type-generic half of the reference's runtime min/max scan
- * filters (physical_create_bf.cpp:131-176, rpt_optimizer.cpp:1401-1501),
- * runtime-fresh with no planning-time staleness caveat. An envelope
- * conservatively widens any delivered set, so it never over-prunes.
+ * A delivered value `v` stands for the key interval `[v, end(v)]`:
+ *  - an exact key, by default: `[v, v]`;
+ *  - a QUANTIZED ANCHOR on an integral column with a `graft.quant.<col>
+ *    = <width>` read option (injected by the RPT rule's over-cap in-scan
+ *    path): `[v, v+width]`, clamped to the type's maximum. The build side
+ *    quantizes its keys onto the same grid at execution, so the anchors
+ *    cover every runtime build key exactly — that makes the over-cap path
+ *    runtime-fresh and uncapped (the reference's scan filters are
+ *    likewise built fresh per execution, physical_create_bf.cpp:282-350);
+ *  - an ENVELOPE on a column with a `graft.range.<col> = 1` read option:
+ *    the whole delivery stands for `[min(values), max(values)]`. The rule
+ *    uses this for over-cap builds whose keys the quantized grid cannot
+ *    express (VARCHAR and other non-integral orderable types): the build
+ *    delivers its runtime MIN/MAX — the type-generic half of the
+ *    reference's runtime min/max scan filters
+ *    (physical_create_bf.cpp:131-176, rpt_optimizer.cpp:1401-1501).
+ * Anchors and envelopes only widen a delivered set, so neither
+ * over-prunes. Several deliveries on one column are a conjunction (e.g.
+ * forward and backward transfer passes): their intervals intersect, and
+ * an empty intersection legitimately prunes the whole scan.
  */
 class GraftParquetScan(base: ParquetScan,
     val quantWidths: Map[String, Long] = Map.empty,
@@ -136,19 +133,12 @@ class GraftParquetScan(base: ParquetScan,
     base.partitionFilters, base.dataFilters, base.pushedVariantExtractions)
   with SupportsRuntimeV2Filtering {
 
-  // (column name -> runtime key values, Catalyst-internal representation)
-  @volatile private var runtimeKeys: Map[String, Array[Any]] = Map.empty
-  // (quantized column name -> sorted disjoint [lo, hi] key ranges, in the
-  // internal integral domain — days for dates, micros for timestamps)
-  @volatile private var runtimeRanges: Map[String, Array[(Long, Long)]] = Map.empty
-  // (range-marked column name -> [lo, hi] envelope in the Catalyst-internal
-  // value space; None = empty delivered set, prunes everything)
-  @volatile private var runtimeEnvelopes: Map[String, Option[(Any, Any)]] = Map.empty
-  @volatile private var poisoned = false
+  // column name -> its delivered runtime key intervals; None once a
+  // conflicting second filter() call has disabled runtime pruning
+  @volatile private var runtimeKeys: Option[Map[String, KeyIntervals]] =
+    Some(Map.empty)
   // visible for tests/metrics: files before/after the footer prune
   @volatile var lastFilePrune: Option[(Int, Int)] = None
-  // visible for tests: predicates received / parsed by the last filter()
-  @volatile var lastFilterCall: Option[(Int, Int)] = None
 
   private def atomic(dt: DataType): Boolean = dt match {
     case _: IntegerType | _: LongType | _: ShortType | _: ByteType |
@@ -161,210 +151,94 @@ class GraftParquetScan(base: ParquetScan,
       case f if atomic(f.dataType) => FieldReference.column(f.name)
     }
 
-  /** Quantization width for `col`, when one was declared AND the column's
-    * internal type is integral (the only types the rule quantizes; a
-    * width on any other type is ignored — exact-set semantics). */
-  private def quantWidthOf(col: String): Option[Long] =
+  /** `v => v + width` for a quantized `col`: a width was declared AND the
+    * column is integral (the only types the rule quantizes; a width on
+    * any other type is ignored). */
+  private def anchorEnd(col: String): Option[Any => Any] =
     quantWidths.get(col.toLowerCase(java.util.Locale.ROOT)).filter(_ >= 0)
-      .filter(_ => GraftParquetScan.toLongConv(readDataSchema(col).dataType)
-        .isDefined)
+      .flatMap(GraftParquetScan.plusClamped(readDataSchema(col).dataType, _))
 
-  /** Envelope interpretation for `col`: range-marked, not quant-marked
-    * (the rule never dual-marks; quant wins if an option set somehow
-    * carries both), and orderable. */
-  private def rangeMarked(col: String): Boolean =
-    rangeCols.contains(col.toLowerCase(java.util.Locale.ROOT)) &&
-      quantWidthOf(col).isEmpty &&
-      GraftParquetScan.catalystOrdering(readDataSchema(col).dataType).isDefined
+  /** The intervals one delivery of `sorted` values stands for on `col`
+    * (quant wins if an option set somehow carries both marks; the rule
+    * never dual-marks). */
+  private def intervalsOf(col: String, sorted: Array[Any],
+      ord: Ordering[Any]): KeyIntervals = {
+    val end: Any => Any = anchorEnd(col).getOrElse {
+      if (rangeCols.contains(col.toLowerCase(java.util.Locale.ROOT))) {
+        _ => sorted.last
+      } else identity
+    }
+    KeyIntervals.cover(sorted, end, ord)
+  }
 
   override def filter(predicates: Array[V2Predicate]): Unit = {
     GraftParquetScan.filterCalls.incrementAndGet()
     val parsed = predicates.flatMap(parseEqualityPredicate)
-    lastFilterCall = Some((predicates.length, parsed.length))
     if (parsed.isEmpty) return
-    // the predicates array is a CONJUNCTION: several IN-sets on one column
-    // (e.g. forward and backward transfer passes) intersect — an empty
-    // intersection legitimately prunes the whole scan
-    val byCol = parsed.groupBy(_._1)
-    val nextKeys = byCol
-      .filter(c => quantWidthOf(c._1).isEmpty && !rangeMarked(c._1))
-      .map { case (c, vs) =>
-        c -> vs.map(_._2.toSet).reduce(_ intersect _).toArray
-      }
-    val nextRanges = byCol.flatMap { case (c, vs) =>
-      quantWidthOf(c).map { w =>
-        val toLong =
-          GraftParquetScan.toLongConv(readDataSchema(c).dataType).get
-        c -> vs.map { case (_, values) =>
-          GraftParquetScan.mergeRanges(values.map { v =>
-            val lo = toLong(v); (lo, GraftParquetScan.satAdd(lo, w))
-          })
-        }.reduce(GraftParquetScan.intersectRanges)
-      }
-    }
-    val nextEnvelopes = byCol.collect {
-      case (c, vs) if rangeMarked(c) =>
-        implicit val ord: Ordering[Any] =
-          GraftParquetScan.catalystOrdering(readDataSchema(c).dataType).get
-        // each delivery's envelope covers its value set; conjunction of
-        // deliveries intersects envelopes (empty -> prune everything)
-        c -> vs.map { case (_, values) =>
-          if (values.isEmpty) None else Some((values.min, values.max))
-        }.reduce[Option[(Any, Any)]] {
-          case (Some((l1, h1)), Some((l2, h2))) =>
-            val lo = ord.max(l1, l2); val hi = ord.min(h1, h2)
-            if (ord.lteq(lo, hi)) Some((lo, hi)) else None
-          case _ => None
-        }
+    val next = parsed.groupBy(_._1).map { case (c, deliveries) =>
+      val ord = GraftParquetScan.catalystOrdering(readDataSchema(c).dataType).get
+      c -> deliveries.map { case (_, values) =>
+        intervalsOf(c, values.sorted(ord), ord)
+      }.reduce(_ intersect _)
     }
     synchronized {
-      if ((runtimeKeys.nonEmpty || runtimeRanges.nonEmpty ||
-            runtimeEnvelopes.nonEmpty) &&
-          (runtimeKeys != nextKeys || !rangesEq(runtimeRanges, nextRanges) ||
-            runtimeEnvelopes != nextEnvelopes)) {
-        poisoned = true
-      } else {
-        runtimeKeys = nextKeys
-        runtimeRanges = nextRanges
-        runtimeEnvelopes = nextEnvelopes
+      runtimeKeys = runtimeKeys match {
+        case Some(current) if current.isEmpty || current == next => Some(next)
+        case _ => None
       }
     }
   }
 
-  private def rangesEq(a: Map[String, Array[(Long, Long)]],
-      b: Map[String, Array[(Long, Long)]]): Boolean =
-    a.keySet == b.keySet && a.forall { case (c, r) => r.sameElements(b(c)) }
-
-  /** `IN(col, v...)` / `col = v` with literal values — the shapes the
-    * engine produces from a planned runtime group filter. */
+  /** `IN(col, v...)` / `col = v` with literal values on an orderable
+    * column — the shapes the engine produces from a planned runtime group
+    * filter. */
   private def parseEqualityPredicate(p: V2Predicate): Option[(String, Array[Any])] = {
     val col = p.children().headOption match {
       case Some(r: NamedReference) if r.fieldNames.length == 1 =>
         Some(r.fieldNames.head)
       case _ => None
     }
-    col.filter(c => readDataSchema.fieldNames.contains(c)).flatMap { c =>
-      p.name() match {
-        case "IN" | "=" =>
-          val vals = p.children().drop(1).map {
-            case l: V2Literal[_] => Some(l.value.asInstanceOf[Any])
-            case _ => None
-          }
-          // Drop null literals (a nullable build-side join key can emit
-          // them): null never equi-matches, so removing them is exact —
-          // and the comparators in fileMayContain / runtimeFilteredCopy
-          // are null-hostile. An all-null OR EMPTY build set legitimately
-          // becomes the empty set, which prunes every file (the delivered
-          // values are the build side's rows; zero rows means the
-          // equi-join can match nothing — the reference's empty-filter
-          // always-false, physical_create_bf.cpp:289-297).
-          if (vals.forall(_.isDefined))
-            Some(c -> vals.flatten.filterNot(_ == null)) else None
-        case _ => None
+    col.filter(c => readDataSchema.fieldNames.contains(c) &&
+        GraftParquetScan.catalystOrdering(readDataSchema(c).dataType).isDefined)
+      .flatMap { c =>
+        p.name() match {
+          case "IN" | "=" =>
+            val vals = p.children().drop(1).map {
+              case l: V2Literal[_] => Some(l.value.asInstanceOf[Any])
+              case _ => None
+            }
+            // Drop null literals (a nullable build-side join key can emit
+            // them): null never equi-matches, so removing them is exact —
+            // and the interval comparators are null-hostile. An all-null
+            // OR EMPTY build set legitimately becomes the empty set, which
+            // prunes every file (the delivered values are the build side's
+            // rows; zero rows means the equi-join can match nothing — the
+            // reference's empty-filter always-false,
+            // physical_create_bf.cpp:289-297).
+            if (vals.forall(_.isDefined))
+              Some(c -> vals.flatten.filterNot(_ == null)) else None
+          case _ => None
+        }
       }
-    }
   }
-
-  /** A stock copy with the runtime values appended to the pushed parquet
-    * filters — surviving files skip row groups via zone maps /
-    * dictionaries inside the reader. Pushed filter values use external
-    * Scala types (String, not UTF8String). */
-  private def runtimeFilteredCopy: ParquetScan = {
-    if (poisoned) return this
-    val extraKeys = runtimeKeys.flatMap { case (c, vals) =>
-      val dt = readDataSchema(c).dataType
-      val conv = CatalystTypeConverters.createToScalaConverter(dt)
-      val ext = vals.map(conv)
-      // IN for exactness (dictionary + small-set zone-map skip; parquet
-      // refuses over-threshold INs) plus the [min,max] range, which
-      // parquet can always evaluate cheaply. An EMPTY value set pushes
-      // nothing — the file-level prune already drops every file.
-      (if (ext.isEmpty) Seq.empty
-       else Seq[sources.Filter](sources.In(c, ext))) ++
-        (GraftParquetScan.catalystOrdering(dt) match {
-          case Some(ord) if vals.nonEmpty => Seq(
-            sources.GreaterThanOrEqual(c, conv(vals.min(ord))),
-            sources.LessThanOrEqual(c, conv(vals.max(ord))))
-          case _ => Seq.empty
-        })
-    }
-    // quantized columns: push the merged [lo, hi] runs as an OR-of-ranges
-    // (row-group zone maps evaluate each range cheaply); past the run cap
-    // collapse to the global envelope — still a valid superset filter.
-    // An empty range union (empty build) pushes nothing; the file-level
-    // prune already drops every file.
-    val extraRanges = runtimeRanges.flatMap { case (c, ranges) =>
-      val dt = readDataSchema(c).dataType
-      val conv = CatalystTypeConverters.createToScalaConverter(dt)
-      val fromLong = GraftParquetScan.fromLongConv(dt)
-      def rangeFilter(r: (Long, Long)): sources.Filter = sources.And(
-        sources.GreaterThanOrEqual(c, conv(fromLong(r._1))),
-        sources.LessThanOrEqual(c, conv(fromLong(r._2))))
-      if (ranges.isEmpty) Seq.empty
-      else if (ranges.length <= GraftParquetScan.MaxPushedRanges) {
-        Seq(ranges.map(rangeFilter).reduce[sources.Filter](sources.Or(_, _)))
-      } else Seq(rangeFilter((ranges.head._1, ranges.last._2)))
-    }
-    // envelope columns: push the [lo, hi] bounds (zone-map friendly for
-    // any orderable type incl. VARCHAR); an empty envelope pushes nothing
-    // — the file-level prune already drops every file
-    val extraEnvelopes = runtimeEnvelopes.flatMap { case (c, env) =>
-      val conv = CatalystTypeConverters.createToScalaConverter(
-        readDataSchema(c).dataType)
-      env.toSeq.flatMap { case (lo, hi) =>
-        Seq[sources.Filter](sources.GreaterThanOrEqual(c, conv(lo)),
-          sources.LessThanOrEqual(c, conv(hi)))
-      }
-    }
-    val extra = (extraKeys ++ extraRanges ++ extraEnvelopes).toArray
-    if (extra.isEmpty) this else copy(pushedFilters = pushedFilters ++ extra)
-  }
-
-  private def runtimeActive: Boolean =
-    (runtimeKeys.nonEmpty || runtimeRanges.nonEmpty ||
-      runtimeEnvelopes.nonEmpty) && !poisoned
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (!runtimeActive) super.createReaderFactory()
-    else runtimeFilteredCopy match {
-      // nothing pushable (e.g. an empty delivered set — the file-level
-      // prune already dropped every file): fall through to the stock
-      // factory; re-dispatching on `this` would recurse
-      case same if same eq this => super.createReaderFactory()
-      case filtered => filtered.createReaderFactory()
-    }
 
   /** File-level prune: drop files whose footer [min,max] on a filtered
-    * column excludes every RUNTIME value — and, independently, files whose
-    * footer range falsifies a STATIC pushed filter (the stock reader only
-    * uses pushed filters for row-group skipping inside already-scheduled
-    * tasks; at 100 TB, deciding at the driver that a file cannot match
-    * skips scheduling the task at all). */
+    * column meets none of its RUNTIME key intervals — and, independently,
+    * files whose footer range falsifies a STATIC pushed filter (the stock
+    * reader only uses pushed filters for row-group skipping inside
+    * already-scheduled tasks; at 100 TB, deciding at the driver that a
+    * file cannot match skips scheduling the task at all). */
   override protected def partitions: Seq[FilePartition] = {
     val base = super.partitions
-    val keys = runtimeKeys
-    val ranges = runtimeRanges
-    val envelopes = runtimeEnvelopes
-    val runtimeOk = runtimeActive
+    val runtime = runtimeKeys.getOrElse(Map.empty)
     val staticFilters = pushedFilters.filter(GraftParquetScan.prunable)
-    if (!runtimeOk && staticFilters.isEmpty) return base
+    if (runtime.isEmpty && staticFilters.isEmpty) return base
     val kept = base.flatMap { fp =>
       val files = fp.files.filter { f =>
-        (!runtimeOk || (keys.forall { case (c, vals) =>
-          GraftParquetScan.fileMayContain(
-            hadoopConf, f.filePath.toPath, f.fileSize, c,
-            readDataSchema(c).dataType, vals)
-        } && ranges.forall { case (c, rs) =>
-          GraftParquetScan.fileMayIntersect(
-            hadoopConf, f.filePath.toPath, f.fileSize, c,
-            readDataSchema(c).dataType, rs)
-        } && envelopes.forall { case (c, env) =>
-          env.exists { case (lo, hi) =>
-            GraftParquetScan.fileMayOverlap(
-              hadoopConf, f.filePath.toPath, f.fileSize, c,
-              readDataSchema(c).dataType, lo, hi)
-          } // None (empty delivered set) keeps no file
-        })) &&
+        runtime.forall { case (c, keys) =>
+          GraftParquetScan.fileMayOverlap(hadoopConf, f.filePath.toPath,
+            f.fileSize, c, readDataSchema(c).dataType, keys)
+        } &&
         staticFilters.forall(flt => GraftParquetScan.fileMayMatch(
           hadoopConf, f.filePath.toPath, f.fileSize, readDataSchema, flt))
       }
@@ -378,34 +252,96 @@ class GraftParquetScan(base: ParquetScan,
     kept.zipWithIndex.map { case (fs, i) => FilePartition(i, fs) }
   }
 
-  override def description(): String = {
-    val rf =
-      if (poisoned) ", RuntimeFilters: [disabled: conflicting reuse]"
-      else if (runtimeKeys.isEmpty && runtimeRanges.isEmpty &&
-        runtimeEnvelopes.isEmpty) ""
-      else (runtimeKeys.map { case (c, v) => s"$c IN (${v.length} values)" } ++
-        runtimeRanges.map { case (c, r) => s"$c IN (${r.length} ranges)" } ++
-        runtimeEnvelopes.map { case (c, e) =>
-          if (e.isDefined) s"$c IN [envelope]" else s"$c IN [empty envelope]" })
+  override def description(): String = super.description() +
+    (runtimeKeys match {
+      case None => ", RuntimeFilters: [disabled: conflicting reuse]"
+      case Some(keys) if keys.isEmpty => ""
+      case Some(keys) => keys.map { case (c, k) => s"$c IN (${k.size} intervals)" }
         .mkString(", RuntimeFilters: [", ", ", "]")
-    super.description() + rf
-  }
+    })
 
   // scan-reuse equality: stock field equality AND same runtime state (a
   // runtime-filtered scan is not interchangeable with an unfiltered one)
   override def equals(obj: Any): Boolean = obj match {
     case g: GraftParquetScan =>
-      super.equals(g) && runtimeKeysEq(g) && poisoned == g.poisoned &&
-        quantWidths == g.quantWidths && rangeCols == g.rangeCols &&
-        rangesEq(runtimeRanges, g.runtimeRanges) &&
-        runtimeEnvelopes == g.runtimeEnvelopes
+      super.equals(g) && runtimeKeys == g.runtimeKeys &&
+        quantWidths == g.quantWidths && rangeCols == g.rangeCols
     case _ => false
   }
-  private def runtimeKeysEq(g: GraftParquetScan): Boolean =
-    runtimeKeys.keySet == g.runtimeKeys.keySet &&
-      runtimeKeys.forall { case (c, v) => g.runtimeKeys(c).sameElements(v) }
   override def hashCode(): Int = super.hashCode()
 }
+
+/** Sorted, disjoint, closed key intervals `[lo(i), hi(i)]` of one column,
+  * in the Catalyst value domain under `ord`. A set of points (exact keys)
+  * keeps one array for both ends (`hi eq lo`), so an exact key costs one
+  * reference, as it does in the delivered IN list. */
+private[sources] final class KeyIntervals private (
+    private val lo: Array[Any], private val hi: Array[Any], ord: Ordering[Any]) {
+
+  def size: Int = lo.length
+
+  /** Does any interval meet `[from, to]`? Binary search for the first
+    * interval ending at or after `from`. */
+  def overlaps(from: Any, to: Any): Boolean = {
+    var l = 0; var r = lo.length
+    while (l < r) {
+      val m = (l + r) >>> 1
+      if (ord.lt(hi(m), from)) l = m + 1 else r = m
+    }
+    l < lo.length && ord.lteq(lo(l), to)
+  }
+
+  /** The keys in both sets (a conjunction of two deliveries). */
+  def intersect(other: KeyIntervals): KeyIntervals = {
+    val b = new KeyIntervals.Builder(ord)
+    var i = 0; var j = 0
+    while (i < size && j < other.size) {
+      b.add(ord.max(lo(i), other.lo(j)), ord.min(hi(i), other.hi(j)))
+      if (ord.lt(hi(i), other.hi(j))) i += 1 else j += 1
+    }
+    b.result()
+  }
+
+  override def equals(obj: Any): Boolean = obj match {
+    case k: KeyIntervals => lo.sameElements(k.lo) && hi.sameElements(k.hi)
+    case _ => false
+  }
+  override def hashCode(): Int =
+    java.util.Arrays.hashCode(lo.asInstanceOf[Array[AnyRef]])
+}
+
+private[sources] object KeyIntervals {
+
+  /** The union of `[v, end(v)]` over ascending `sorted` values; `end`
+    * never lies below its argument and never decreases. */
+  def cover(sorted: Array[Any], end: Any => Any,
+      ord: Ordering[Any]): KeyIntervals = {
+    val b = new Builder(ord)
+    sorted.foreach(v => b.add(v, end(v)))
+    b.result()
+  }
+
+  /** Appends intervals in ascending order of `lo`, merging overlaps. */
+  private final class Builder(ord: Ordering[Any]) {
+    private val lo = mutable.ArrayBuffer[Any]()
+    private val hi = mutable.ArrayBuffer[Any]()
+
+    /** An empty interval (`l > h`) adds nothing. */
+    def add(l: Any, h: Any): Unit =
+      if (ord.lteq(l, h)) {
+        if (lo.nonEmpty && ord.lteq(l, hi.last)) hi(hi.length - 1) = ord.max(hi.last, h)
+        else { lo += l; hi += h }
+      }
+
+    def result(): KeyIntervals = {
+      val l = lo.toArray
+      val points = lo.indices.forall(i =>
+        lo(i).asInstanceOf[AnyRef] eq hi(i).asInstanceOf[AnyRef])
+      new KeyIntervals(l, if (points) l else hi.toArray, ord)
+    }
+  }
+}
+
 object GraftParquetScan {
 
   /** Runtime-filter observability. AQE re-planning rebuilds scan
@@ -428,8 +364,8 @@ object GraftParquetScan {
 
   /** Read-option prefix declaring a column's runtime IN-set as quantized
     * anchors: `graft.quant.<col> = <width>` (internal integral units —
-    * days for dates, micros for timestamps). Injected per-plan by the RPT
-    * rule's over-cap in-scan path. */
+    * days for dates). Injected per-plan by the RPT rule's over-cap
+    * in-scan path. */
   val QuantOptionPrefix = "graft.quant."
   /** Read-option prefix declaring a column's runtime IN-set as an ordered
     * ENVELOPE (`graft.range.<col> = 1`): the delivered values stand for
@@ -437,10 +373,6 @@ object GraftParquetScan {
     * over-cap path for non-integral (e.g. VARCHAR) keys, whose build
     * delivers exactly its runtime min and max. */
   val RangeOptionPrefix = "graft.range."
-  /** Past this many merged runs, the pushed OR-of-ranges collapses to the
-    * global envelope (row-group evaluation of a huge OR tree costs more
-    * than it skips; the file-level prune still uses every run). */
-  val MaxPushedRanges = 64
 
   private[sources] def quantWidths(opts: CaseInsensitiveStringMap)
       : Map[String, Long] =
@@ -460,103 +392,29 @@ object GraftParquetScan {
           .toLowerCase(java.util.Locale.ROOT)
     }.toSet
 
-  /** Footer-stats overlap for an envelope column: keep the file unless
-    * its [min,max] is disjoint from the delivered [lo,hi]. Unreadable
-    * stats keep the file. */
-  def fileMayOverlap(conf: org.apache.hadoop.conf.Configuration,
-      path: Path, len: Long, col: String, dt: DataType,
-      lo: Any, hi: Any): Boolean =
-    fileRange(conf, path, len, col, dt) match {
-      case Some((flo, fhi)) =>
-        val ord = catalystOrdering(dt).get
-        ord.lteq(flo, hi) && ord.lteq(lo, fhi)
-      case None => true
-    }
-
-  /** Catalyst-internal value -> Long for integral-backed types (the only
-    * types the rule quantizes). */
-  private[sources] def toLongConv(dt: DataType): Option[Any => Long] =
+  /** `v => v + w` (w >= 0) on an integral Catalyst value, clamped to the
+    * type's maximum so an interval end never wraps; None for the types
+    * the rule does not quantize. */
+  private[sources] def plusClamped(dt: DataType, w: Long): Option[Any => Any] = {
+    def plus(v: Long, max: Long): Long = if (v > max - w) max else v + w
     dt match {
-      case _: ByteType => Some(v => v.asInstanceOf[Byte].toLong)
-      case _: ShortType => Some(v => v.asInstanceOf[Short].toLong)
-      case _: IntegerType | _: DateType => Some(v => v.asInstanceOf[Int].toLong)
-      case _: LongType | _: TimestampType | _: TimestampNTZType =>
-        Some(v => v.asInstanceOf[Long])
+      case _: ByteType => Some(v => plus(v.asInstanceOf[Byte], Byte.MaxValue).toByte)
+      case _: ShortType => Some(v => plus(v.asInstanceOf[Short], Short.MaxValue).toShort)
+      case _: IntegerType | _: DateType =>
+        Some(v => plus(v.asInstanceOf[Int], Int.MaxValue).toInt)
+      case _: LongType => Some(v => plus(v.asInstanceOf[Long], Long.MaxValue))
       case _ => None
     }
-
-  private[sources] def fromLongConv(dt: DataType): Long => Any = dt match {
-    case _: ByteType => v => v.toByte
-    case _: ShortType => v => v.toShort
-    case _: IntegerType | _: DateType => v => v.toInt
-    case _ => v => v
   }
 
-  private[sources] def satAdd(a: Long, b: Long): Long =
-    try math.addExact(a, b) catch { case _: ArithmeticException =>
-      if (a > 0) Long.MaxValue else Long.MinValue }
-
-  /** Merge [lo, hi] intervals into a sorted disjoint union (touching or
-    * overlapping runs coalesce). */
-  private[sources] def mergeRanges(rs: Array[(Long, Long)])
-      : Array[(Long, Long)] = {
-    if (rs.isEmpty) return rs
-    val sorted = rs.sortBy(_._1)
-    val out = mutable.ArrayBuffer[(Long, Long)](sorted.head)
-    sorted.tail.foreach { case (lo, hi) =>
-      val (plo, phi) = out.last
-      if (lo <= satAdd(phi, 1L)) out(out.length - 1) = (plo, math.max(phi, hi))
-      else out += ((lo, hi))
-    }
-    out.toArray
-  }
-
-  /** Intersection of two sorted disjoint interval unions. */
-  private[sources] def intersectRanges(a: Array[(Long, Long)],
-      b: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val out = mutable.ArrayBuffer[(Long, Long)]()
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      val lo = math.max(a(i)._1, b(j)._1)
-      val hi = math.min(a(i)._2, b(j)._2)
-      if (lo <= hi) out += ((lo, hi))
-      if (a(i)._2 < b(j)._2) i += 1 else j += 1
-    }
-    out.toArray
-  }
-
-  /** Footer-stats containment for a quantized column: keep the file
-    * unless its [min,max] intersects NO delivered range. Unreadable
-    * stats keep the file. */
-  def fileMayIntersect(conf: org.apache.hadoop.conf.Configuration,
-      path: Path, len: Long, col: String, dt: DataType,
-      ranges: Array[(Long, Long)]): Boolean =
-    toLongConv(dt) match {
-      case Some(toLong) => fileRange(conf, path, len, col, dt) match {
-        case Some((lo, hi)) =>
-          val (flo, fhi) = (toLong(lo), toLong(hi))
-          // binary search the first range ending at/after the file's lo
-          var l = 0; var r = ranges.length
-          while (l < r) {
-            val m = (l + r) >>> 1
-            if (ranges(m)._2 < flo) l = m + 1 else r = m
-          }
-          l < ranges.length && ranges(l)._1 <= fhi
-        case None => true
-      }
-      case None => true
-    }
-
-  /** Footer-stats containment: keep the file unless its [min,max] for
-    * `col` excludes EVERY runtime value. Unreadable/missing stats keep
-    * the file — pruning must never turn IO trouble into wrong results. */
-  def fileMayContain(conf: org.apache.hadoop.conf.Configuration, path: Path,
-      len: Long, col: String, dt: DataType, vals: Array[Any]): Boolean =
-    fileRange(conf, path, len, col, dt) match {
-      case Some((lo, hi)) =>
-        val ord = catalystOrdering(dt).get
-        vals.exists(v => ord.lteq(lo, v) && ord.lteq(v, hi))
-      case None => true
+  /** Footer-stats overlap: keep the file unless its [min,max] for `col`
+    * meets none of the runtime key intervals. Unreadable/missing stats
+    * keep the file — pruning must never turn IO trouble into wrong
+    * results. */
+  private def fileMayOverlap(conf: org.apache.hadoop.conf.Configuration, path: Path,
+      len: Long, col: String, dt: DataType, keys: KeyIntervals): Boolean =
+    fileRange(conf, path, len, col, dt).forall { case (lo, hi) =>
+      keys.overlaps(lo, hi)
     }
 
   /** Per-file [min, max] for `col` from the row-group footers

@@ -36,13 +36,43 @@ class DagPrinterSuite extends SparkTestBase {
 
   test("renderPhysical: unexecuted plan still renders the schedule tree") {
     val df = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      spark.sql(
+      val d = spark.sql(
         """SELECT count(*) FROM lineitem
           |JOIN orders ON l_orderkey = o_orderkey
           |JOIN customer ON o_custkey = c_custkey""".stripMargin)
+      // force planning, no action: under this threshold, not the default
+      d.queryExecution.optimizedPlan
+      d
     }
-    df.queryExecution.optimizedPlan // force planning, no action
     val out = RptExplain.displayPhysicalDag(df)
     assert(out.contains("+--") && out.contains("(unit "), out)
+  }
+
+  test("each query renders its own schedule, not the last one planned") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      def planned(sql: String) = {
+        val df = spark.sql(sql)
+        df.queryExecution.optimizedPlan
+        df
+      }
+      val a = planned(
+        """SELECT count(*) FROM lineitem
+          |JOIN orders ON l_orderkey = o_orderkey
+          |JOIN customer ON o_custkey = c_custkey""".stripMargin)
+      val aAlone = RptExplain.displayPhysicalDag(a)
+      val b = planned(
+        """SELECT count(*) FROM lineitem
+          |JOIN part ON l_partkey = p_partkey
+          |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin)
+      val bOut = RptExplain.displayPhysicalDag(b)
+      assert(aAlone.contains("(unit ") && bOut.contains("(unit "),
+        s"both queries must plan transfers:\n$aAlone\n$bOut")
+      assert(aAlone !== bOut)
+      assert(RptExplain.displayPhysicalDag(a) === aAlone,
+        "query A rendered B's schedule")
+      val none = planned("SELECT count(*) FROM nation")
+      assert(RptExplain.displayPhysicalDag(none) ===
+        "rpt: no transfer schedule planned for this query")
+    }
   }
 }

@@ -22,7 +22,8 @@ import graft.SparkTestBase
  * Pinned here:
  *  1. INTERPRETATION: a range-marked column keeps every file inside the
  *     envelope — including files holding only values strictly between
- *     the two delivered points (exact-IN semantics would drop them).
+ *     the two delivered points (exact-IN semantics would drop them),
+ *     and its reader returns every row of each kept file.
  *  2. Conjunction of deliveries intersects envelopes; an empty delivered
  *     set (empty build) prunes every file.
  *  3. END-TO-END: a forced over-cap STRING-keyed join returns
@@ -50,9 +51,11 @@ class EnvelopeOverCapSuite extends SparkTestBase {
     path
   }
 
-  private def rangeScan(): GraftParquetScan = {
-    val df = spark.read.format("graft-parquet")
-      .option("graft.range.sk", "1").load(factDir).where("grp >= 0")
+  private def rangeScan(): GraftParquetScan =
+    rangeScan(spark.read.format("graft-parquet")
+      .option("graft.range.sk", "1").load(factDir).where("grp >= 0"))
+
+  private def rangeScan(df: org.apache.spark.sql.DataFrame): GraftParquetScan = {
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
       p match {
@@ -101,15 +104,36 @@ class EnvelopeOverCapSuite extends SparkTestBase {
     assert(parts.isEmpty)
   }
 
-  test("rows strictly inside the envelope survive the row-group push") {
-    val scan = rangeScan()
+  test("read after filter(): every row of each kept file comes back") {
+    // one file of 10,000 keys in many small row groups: the envelope
+    // [sk02000, sk02100] meets one file, and only a few of its row
+    // groups, yet the scan's reader must return the whole file
+    val dir = Files.createTempDirectory("graft_env_rg_").toFile
+    dir.deleteOnExit()
+    val path = s"${dir.getAbsolutePath}/fact.parquet"
+    import spark.implicits._
+    for (f <- 0L until 2L) {
+      (f * 10000L until (f + 1) * 10000L).map(i => f"sk$i%05d").toDF("sk")
+        .coalesce(1).write.mode("append")
+        .option("parquet.block.size", "8192").parquet(path)
+    }
+    val file = new java.io.File(path).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val rowGroups = ParquetFooters.footer(
+      spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(file.getAbsolutePath), file.length())
+      .map(_.columns("sk").size)
+    assert(rowGroups.exists(_ > 1), s"expected several row groups: $rowGroups")
+    val df = spark.read.format("graft-parquet")
+      .option("graft.range.sk", "1").load(path)
+    val scan = rangeScan(df)
     def u(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
     scan.filter(Array(
-      GraftParquetScan.inPredicate("sk", StringType, Seq(u("sk20000"), u("sk20100")))))
-    val df = spark.read.format("graft-parquet")
-      .option("graft.range.sk", "1").load(factDir)
-      .where("sk >= 'sk20000' and sk <= 'sk20100'")
-    assert(df.count() === 101)
+      GraftParquetScan.inPredicate("sk", StringType, Seq(u("sk02000"), u("sk02100")))))
+    val (read, held) = RptTestHelpers.readBack(spark, scan)
+    assert(scan.lastFilePrune.get === ((2, 1)))
+    assert(held === 10000L && read === held,
+      s"read $read of the $held rows in the kept file")
   }
 
   // --- end-to-end over-cap transfer on a string key ----------------------

@@ -27,7 +27,8 @@ import graft.SparkTestBase
  *     keys far outside the footer-derived grid — a stale grid can only
  *     cost resolution, never rows.
  *  2. INTERPRETATION: a width-marked column treats delivered IN values
- *     as ranges (file prune + row-group push), never as exact keys.
+ *     as ranges when pruning files, never as exact keys; the scan's
+ *     reader returns every row of a kept file.
  *  3. END-TO-END: forced over-cap joins return rule-off-identical rows
  *     while the probe scan measurably prunes files from RUNTIME
  *     (filtered-build) values.
@@ -107,20 +108,21 @@ class QuantizedOverCapSuite extends SparkTestBase {
     path
   }
 
+  private def scans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
+    p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        scans(a.executedPlan)
+      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        scans(s.plan)
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        Seq(b)
+      case other => other.children.flatMap(scans)
+    }
+
   private def quantScan(width: Long): GraftParquetScan = {
     val df = spark.read.format("graft-parquet")
       .option("graft.quant.k", width.toString).load(factDir).where("grp >= 0")
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scans(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scans(s.plan)
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Seq(b)
-        case other => other.children.flatMap(scans)
-      }
     scans(df.queryExecution.executedPlan).head.scan
       .asInstanceOf[GraftParquetScan]
   }
@@ -156,16 +158,39 @@ class QuantizedOverCapSuite extends SparkTestBase {
     assert(parts.isEmpty)
   }
 
-  test("rows inside an anchor's range survive the row-group push") {
-    // end-to-end read with a runtime-filtered scan: every k in
-    // [anchor, anchor+w] must come back, not just k == anchor
-    val scan = quantScan(100L)
-    scan.filter(Array(
-      GraftParquetScan.inPredicate("k", LongType, Seq(20000L))))
-    val df = spark.read.format("graft-parquet")
-      .option("graft.quant.k", "100").load(factDir)
-      .where("k >= 20000 and k <= 20100")
-    assert(df.count() === 101)
+  // 4 Int-keyed files of 5,000 keys; the last one ends at Int.MaxValue
+  private lazy val intFactDir: String = {
+    val dir = Files.createTempDirectory("graft_quant_int_").toFile
+    dir.deleteOnExit()
+    val path = s"${dir.getAbsolutePath}/fact.parquet"
+    import spark.implicits._
+    for (base <- Seq(0, 10000, 20000, Int.MaxValue - 4999)) {
+      (0 until 5000).map(i => base + i).toDF("k")
+        .coalesce(1).write.mode("append").parquet(path)
+    }
+    path
+  }
+
+  test("read after filter(): every row of each kept file comes back") {
+    // the scan only prunes files; its reader must return every row of a
+    // kept file, including files whose anchor range ends at the type max
+    def check(scan: GraftParquetScan, anchor: Any, dt: DataType,
+        kept: Int, rows: Long): Unit = {
+      scan.filter(Array(GraftParquetScan.inPredicate("k", dt, Seq(anchor))))
+      val (read, held) = RptTestHelpers.readBack(spark, scan)
+      assert(scan.lastFilePrune.get === ((4, kept)), s"anchor $anchor")
+      assert(held === rows && read === held,
+        s"anchor $anchor: read $read of the $held rows in the kept files")
+    }
+    check(quantScan(100L), 20000L, LongType, 1, 10000L)
+    def intScan(width: Long): GraftParquetScan = {
+      val df = spark.read.format("graft-parquet")
+        .option("graft.quant.k", width.toString).load(intFactDir)
+      scans(df.queryExecution.executedPlan).head.scan
+        .asInstanceOf[GraftParquetScan]
+    }
+    check(intScan(1L), Int.MaxValue, IntegerType, 1, 5000L)
+    check(intScan(100L), Int.MaxValue - 50, IntegerType, 1, 5000L)
   }
 
   // --- 3. end-to-end over-cap transfer -----------------------------------

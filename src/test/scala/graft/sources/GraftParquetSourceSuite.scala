@@ -11,8 +11,8 @@ import graft.SparkTestBase
 
 /**
  * The `graft-parquet` DSv2 source: stock parquet reading plus
- * SupportsRuntimeV2Filtering — runtime join-key values prune files
- * (driver-side footer ranges) and row groups (pushed filters). This is
+ * SupportsRuntimeV2Filtering — runtime join-key values prune files by
+ * driver-side footer ranges. This is
  * the behavior RuntimeV2FilteringSuite records as impossible on the
  * STOCK file source; this source closes it for opted-in tables.
  */
@@ -302,8 +302,8 @@ class GraftParquetSourceSuite extends SparkTestBase {
   test("null runtime key values are dropped, not NPE'd") {
     // a NULLABLE build-side join key can put null literals into the
     // runtime IN-set; nulls never equi-match, so the parse drops them —
-    // pre-fix, the UTF8String comparator in fileMayContain /
-    // runtimeFilteredCopy's vals.min(ord) NPE'd inside partitions()
+    // pre-fix, the UTF8String comparator of the footer check NPE'd
+    // inside partitions()
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
     val df = spark.read.format("graft-parquet").load(factDir).where("grp >= 0")
@@ -314,7 +314,6 @@ class GraftParquetSourceSuite extends SparkTestBase {
       "payload", StringType, Seq(null, UTF8String.fromString("p17")))))
     val parts = scan.toBatch.planInputPartitions() // NPE'd before the fix
     assert(parts.nonEmpty)
-    scan.toBatch.createReaderFactory() // runtimeFilteredCopy min/max path
     assert(fingerprint(df.where("payload = 'p17'")) ===
       fingerprint(spark.read.parquet(factDir)
         .where("grp >= 0 AND payload = 'p17'")))
